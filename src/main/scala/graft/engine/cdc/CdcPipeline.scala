@@ -1,7 +1,7 @@
 package graft.engine.cdc
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, sum, when}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.core.Model
@@ -137,10 +137,15 @@ object CdcPipeline {
         */
       format: String = "parquet",
       /** dead-letter dir for envelope formats: malformed lines (null lsn
-        * after decode) are appended here as `epoch=<n>/` text files — the
-        * reference's dirty-record collection (go-datax error limiter keeps
-        * dirty records + messages) — instead of being silently dropped.
-        * None ⇒ drop-only policy.
+        * after decode) are kept here verbatim as `epoch=<n>/` text files
+        * (`epoch=<n>-<route>/` on a routed tail) — the reference's
+        * dirty-record collection (go-datax error limiter keeps dirty
+        * records + messages) — instead of being silently dropped. Delivery
+        * is AT-LEAST-ONCE: an epoch's dirty lines are written after its
+        * merge commits, and a replayed epoch whose merge the lineage skips
+        * probes and re-writes them (overwrite, so never duplicated) — a
+        * crash between the commit and the write loses nothing. None ⇒
+        * drop-only policy.
         */
       dlqDir: Option[String] = None,
       /** TIME-based flush threshold for a continuous (availableNow=false)
@@ -211,9 +216,9 @@ object CdcPipeline {
         if (cfg.toolColumn) Model.changeEventSchema else Model.changeEventSchemaV1
     }
 
-  /** One epoch's follower syncs — shared by the single-table tail and each
-    * routed destination. Runs BEFORE the vacuum step so a reclaimed delta
-    * window can never be one a follower still needs (lag stays ≤ 1 epoch).
+  /** One epoch's follower syncs. Runs BEFORE the vacuum step so a reclaimed
+    * delta window can never be one a follower still needs (lag stays ≤ 1
+    * epoch).
     */
   private def syncFollowers(table: LakeTable, followers: Seq[Follower]): Unit =
     followers.foreach {
@@ -272,44 +277,106 @@ object CdcPipeline {
           "writerId become part of tag ref file names")
     }
 
+  /** Dead-letter `lines` (one verbatim envelope per row) as text under
+    * `path`. Overwrite ⇒ a replayed epoch rewrites the same lines, never
+    * duplicates them.
+    */
+  private def deadLetter(lines: DataFrame, path: String): Unit =
+    lines.write.mode("overwrite").text(path)
+
+  /** The dirty lines of decoded `events`: the verbatim line of every row
+    * whose decode yielded no lsn.
+    */
+  private def dirtyLines(events: DataFrame): DataFrame =
+    events.filter(col("lsn").isNull).select(RawCol)
+
+  /** ONE destination's epoch, shared by [[start]] and every route of
+    * [[startRouted]]: the MERGE, then the follower syncs, the auto-tag
+    * cadence, tombstone GC and vacuum — in that order (followers before
+    * vacuum so a reclaimed delta window is never one a follower still
+    * needs; the tag before the sweeps so the pinned cut is never the one
+    * being swept; tombstone GC before vacuum so the rewrite's orphaned
+    * inputs go in the same sweep).
+    *
+    * `events` are the epoch's change events. With `dlq` (this epoch's
+    * dead-letter path) set they still hold the dirty, null-lsn rows, whose
+    * verbatim line rides in [[RawCol]]; without it they are clean. The
+    * dead-letter rule — at-least-once, written after the commit: the dirty
+    * COUNT rides the merge's own write job via `observe`, and the write job
+    * runs only when it is above 0. A lineage-skipped merge (a replayed
+    * epoch) observes nothing, and an epoch without a valid row leaves the
+    * observation empty (its write runs no task over the input); either way
+    * the count proves nothing, so the dirty lines are probed and written if
+    * there are any. That probe is what restores the lines a crash between
+    * the commit and the write lost; it runs only on recovery or on an epoch
+    * with nothing to merge.
+    */
+  private def applyEpoch(cfg: CdcConfig, dest: LakeTable, writerId: String,
+      followers: Seq[Follower], events: DataFrame, epoch: Long,
+      dlq: Option[String]): Unit = {
+    val merged = dlq match {
+      case None => dest.merge(events, epoch, writerId)
+      case Some(path) =>
+        val obs = Observation()
+        val st = dest.merge(
+          events.observe(obs, sum(when(col("lsn").isNull, 1L).otherwise(0L)).as("dirty"))
+            .filter(col("lsn").isNotNull).drop(RawCol),
+          epoch, writerId)
+        // a null sum (tasks ran, no row observed) counts as 0
+        val observed = if (st.skipped) None else obs.get.get("dirty").map {
+          case n: java.lang.Number => n.longValue
+          case _ => 0L
+        }
+        lazy val dirty = dirtyLines(events)
+        if (observed.fold(!dirty.isEmpty)(_ > 0)) deadLetter(dirty, path)
+        st
+    }
+    syncFollowers(dest, followers)
+    autoTag(dest, cfg, writerId, epoch, merged)
+    // a tombstone-GC commit conflict (another writerId's stream won the
+    // version) must not kill THIS stream — expireTombstones has no rebase
+    // (by design: a maintenance rewrite of a stale file list), so skip and
+    // let the next cadence retry. Tables under one routed subscription
+    // share a source, so one re-delivery horizon is the honest shape.
+    if (cfg.expireTombstonesEvery > 0 && epoch > 0 &&
+        epoch % cfg.expireTombstonesEvery == 0) {
+      val maxLsn = dest.currentSnapshot().maxLsn
+      if (maxLsn >= 0)
+        try dest.expireTombstones(maxLsn - cfg.tombstoneRetainLsns)
+        catch {
+          case e: LakeTable.CommitConflictException =>
+            org.apache.logging.log4j.LogManager.getLogger(getClass).warn(
+              s"${dest.root}: tombstone GC at epoch $epoch lost a commit race " +
+                s"(${e.getMessage}); retrying at the next cadence")
+        }
+    }
+    if (cfg.vacuumEvery > 0 && epoch > 0 && epoch % cfg.vacuumEvery == 0)
+      dest.vacuum(cfg.vacuumRetainVersions)
+  }
+
   /** Start the streaming MERGE; caller awaits termination. */
   def start(spark: SparkSession, table: LakeTable, cfg: CdcConfig): StreamingQuery = {
     validateRing(cfg, Seq(cfg.writerId))
-    startWith(spark, cfg, table.keyCols) { (batch, epoch) =>
-      val merged = table.merge(batch, epoch, cfg.writerId)
-      syncFollowers(table, cfg.followers)
-      autoTag(table, cfg, cfg.writerId, epoch, merged)
-      // tombstone GC runs BEFORE vacuum so the rewrite's orphaned inputs
-      // are reclaimed in the same epoch's sweep. A commit conflict (another
-      // writerId's stream won the version) must not kill THIS stream —
-      // expireTombstones has no rebase (by design: a maintenance rewrite
-      // of a stale file list), so skip and let the next cadence retry.
-      if (cfg.expireTombstonesEvery > 0 && epoch > 0 &&
-          epoch % cfg.expireTombstonesEvery == 0) {
-        val maxLsn = table.currentSnapshot().maxLsn
-        if (maxLsn >= 0)
-          try table.expireTombstones(maxLsn - cfg.tombstoneRetainLsns)
-          catch {
-            case e: LakeTable.CommitConflictException =>
-              org.apache.logging.log4j.LogManager.getLogger(getClass).warn(
-                s"tombstone GC at epoch $epoch lost a commit race " +
-                  s"(${e.getMessage}); retrying at the next cadence")
-          }
-      }
-      if (cfg.vacuumEvery > 0 && epoch > 0 && epoch % cfg.vacuumEvery == 0)
-        table.vacuum(cfg.vacuumRetainVersions)
+    startWith(spark, cfg, table.keyCols) { (events, epoch, dlq) =>
+      applyEpoch(cfg, table, cfg.writerId, cfg.followers, events, epoch, dlq)
     }
   }
 
   /** One envelope format's decode: raw JSON-line column `value` →
-    * canonical (op, lsn, payload...) + passthrough. Canal/maxwell get the
-    * destination's key columns so key-changing updates fan out into
-    * tombstone+upsert (debezium emits the pair natively).
+    * canonical (op, lsn, payload...). Canal/maxwell get the destination's
+    * key columns so key-changing updates fan out into tombstone+upsert
+    * (debezium emits the pair natively). With `keepDirty` the null-lsn
+    * rows stay and carry their verbatim line in [[RawCol]] (renamed up
+    * front — a payload schema may legitimately contain a column named
+    * `value`, the text source's default name); without it they are
+    * dropped here.
     */
-  private def decodeEnvelope(format: String, df: org.apache.spark.sql.DataFrame,
+  private def decodeEnvelope(format: String, lines: DataFrame,
       payloadSchema: org.apache.spark.sql.types.StructType,
-      keyCols: Seq[String], passthrough: Seq[String]): org.apache.spark.sql.DataFrame =
-    format match {
+      keyCols: Seq[String], keepDirty: Boolean): DataFrame = {
+    val (df, passthrough) =
+      if (keepDirty) (lines.withColumn(RawCol, col("value")), Seq(RawCol)) else (lines, Nil)
+    val decoded = format match {
       case "debezium" =>
         graft.sources.CdcEnvelope.debezium(df, "value", payloadSchema, passthrough)
       case "canal" =>
@@ -321,15 +388,35 @@ object CdcPipeline {
       case other => throw new IllegalArgumentException(
         s"not an envelope format: '$other' (debezium|canal|maxwell)")
     }
+    if (keepDirty) decoded else decoded.filter(col("lsn").isNotNull)
+  }
 
-  /** Shared streaming harness: build the tail source (per [[CdcConfig.format]]),
-    * divert malformed envelope lines to the DLQ, and hand each cleaned
-    * micro-batch to `apply` — the lake MERGE for [[start]], the live-database
-    * apply for [[startJdbc]]. `keyCols` feed the canal/maxwell decoders'
-    * key-changing-update fan-out.
+  /** Run `body` on every micro-batch of `src` under the config's checkpoint
+    * and trigger (AvailableNow, a processing-time interval, or Spark's
+    * as-fast-as-possible default).
+    */
+  private def runBatches(src: DataFrame, cfg: CdcConfig)(
+      body: (DataFrame, Long) => Unit): StreamingQuery = {
+    val writer = src.writeStream
+      .option("checkpointLocation", cfg.checkpointDir)
+      .foreachBatch { (batch: DataFrame, epoch: Long) => body(batch, epoch) }
+    ((cfg.availableNow, cfg.triggerInterval) match {
+      case (true, _) => writer.trigger(Trigger.AvailableNow())
+      case (false, Some(interval)) => writer.trigger(Trigger.ProcessingTime(interval))
+      case (false, None) => writer
+    }).start()
+  }
+
+  /** Shared single-table harness: build the tail source (per
+    * [[CdcConfig.format]]) and hand each micro-batch to `apply` with the
+    * epoch and its dead-letter path — the lake step for [[start]], the
+    * live-database apply for [[startJdbc]]. Envelope batches keep their
+    * malformed (null-lsn) lines when a DLQ is configured (the path is then
+    * set), and arrive clean otherwise. `keyCols` feed the canal/maxwell
+    * decoders' key-changing-update fan-out.
     */
   private def startWith(spark: SparkSession, cfg: CdcConfig, keyCols: Seq[String])(
-      apply: (org.apache.spark.sql.DataFrame, Long) => Unit): StreamingQuery = {
+      apply: (DataFrame, Long, Option[String]) => Unit): StreamingQuery = {
     // fixed unified schema: chunks written before `tool` existed are
     // null-filled by the parquet reader (additive evolution on the source
     // side; the lake handles it on the sink side too for batch callers)
@@ -348,7 +435,8 @@ object CdcPipeline {
       case env @ ("debezium" | "canal" | "maxwell") =>
         // envelope tail: each line is one JSON envelope; keep it an opaque
         // string at the source and decode with an explicit schema so a
-        // malformed line nulls out instead of poisoning schema inference
+        // malformed line nulls out (PERMISSIVE from_json → null lsn)
+        // instead of poisoning schema inference
         val raw = spark.readStream
           .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
           .text(cfg.logDir)
@@ -364,56 +452,14 @@ object CdcPipeline {
                 tbl.isNull)
           case None => raw
         }
-        // with a DLQ configured, the raw line rides along so the dirty
-        // record lands in the dead-letter dir VERBATIM (reference semantics:
-        // dirty records are collected, not reconstructed). The passthrough
-        // column is renamed up front — a payload schema may legitimately
-        // contain a column named `value` (the text source's default name)
-        val keep = if (cfg.dlqDir.isDefined) Seq(RawCol) else Nil
-        val src0 = if (cfg.dlqDir.isDefined) scoped.withColumn(RawCol, col("value")) else scoped
-        decodeEnvelope(env, src0, payloadSchema, keyCols, keep)
+        decodeEnvelope(env, scoped, payloadSchema, keyCols, cfg.dlqDir.isDefined)
       case other => throw new IllegalArgumentException(
         s"unsupported CDC log format '$other' (parquet|debezium|canal|maxwell)")
     }
-    val isEnvelope = cfg.format != "parquet"
-
-    val dbg = sys.env.contains("GRAFT_MERGE_DEBUG")
-    val writer = src.writeStream
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (batch0: org.apache.spark.sql.DataFrame, epoch: Long) =>
-        val t0 = System.nanoTime()
-        if (dbg) System.err.println(f"[cdc] epoch $epoch enter wall=${System.currentTimeMillis()}")
-        // corrupt-line policy for envelope formats: a malformed JSON line
-        // decodes to null lsn (from_json PERMISSIVE); it is diverted to the
-        // dead-letter dir (if configured) and NEVER reaches the LWW merge —
-        // the reference's error-limiter dirty-record semantics for a tail,
-        // where a bad record is collected away rather than failing the job
-        cfg.dlqDir match {
-          case Some(dlq) if isEnvelope =>
-            val b = batch0.persist()
-            // unpersist even when the apply throws (a failed epoch replays;
-            // the leaked cache would otherwise accumulate per retry)
-            try {
-              val dirty = b.filter(col("lsn").isNull).select(RawCol)
-              // overwrite => idempotent on epoch replay (no duplicate dirty
-              // rows); skipped entirely on a clean batch (no empty dirs, no
-              // extra write job in the epoch's critical path)
-              if (!dirty.isEmpty)
-                dirty.write.mode("overwrite").text(s"$dlq/epoch=$epoch")
-              apply(b.filter(col("lsn").isNotNull).drop(RawCol), epoch)
-            } finally { b.unpersist(); () }
-          case _ if isEnvelope => apply(batch0.filter(col("lsn").isNotNull), epoch)
-          case _ => apply(batch0, epoch)
-        }
-        if (dbg) System.err.println(
-          f"[cdc] epoch $epoch exit wall=${System.currentTimeMillis()} took=${(System.nanoTime() - t0) / 1e9}%.2f s")
-        ()
-      }
-    ((cfg.availableNow, cfg.triggerInterval) match {
-      case (true, _) => writer.trigger(Trigger.AvailableNow())
-      case (false, Some(interval)) => writer.trigger(Trigger.ProcessingTime(interval))
-      case (false, None) => writer
-    }).start()
+    val dlq = cfg.dlqDir.filter(_ => cfg.format != "parquet")
+    runBatches(src, cfg) { (events, epoch) =>
+      apply(events, epoch, dlq.map(d => s"$d/epoch=$epoch"))
+    }
   }
 
   /** Run the full replay to completion (AvailableNow) and return the number
@@ -447,11 +493,20 @@ object CdcPipeline {
     * Per micro-batch: the raw lines are staged once (persist), the table
     * name is extracted per line with a native JSON-path expression (no full
     * decode), and each route filters its own lines and decodes them against
-    * its OWN payload schema before the ordinary [[LakeTable.merge]]. Lines
-    * with no parseable table metadata land in the DLQ (a routed stream
-    * REQUIRES table stamps — nothing else says which schema applies); lines
-    * of tables no route claims are skipped (valid changes for tables this
-    * consumer doesn't maintain — the Debezium `table.include.list` analog).
+    * its OWN payload schema before the same per-destination epoch step as a
+    * single-table tail (merge, followers, auto-tag, tombstone GC, vacuum).
+    * Lines of tables no route claims are skipped (valid changes for tables
+    * this consumer doesn't maintain — the Debezium `table.include.list`
+    * analog).
+    *
+    * DEAD LETTERS, one at-least-once contract: lines with no parseable
+    * table metadata are unroutable (a routed stream REQUIRES table stamps —
+    * nothing else says which schema applies) and are written to
+    * `epoch=<n>/` before the routes run; a tabled line whose body fails to
+    * decode (missing lsn, truncate/DDL envelope) is dirty for ITS route and
+    * lands in `epoch=<n>-<route>/` after that route's merge commits — and is
+    * re-written when a replay finds the merge already committed (see
+    * [[CdcConfig.dlqDir]]).
     *
     * EXACTLY-ONCE per destination falls out of the same epoch-lineage
     * contract as everything else: each route's merge commits under its
@@ -464,9 +519,9 @@ object CdcPipeline {
     * Scale shape: R routes cost R narrow filter+decode passes over the
     * PERSISTED micro-batch (one storage read total) plus R batch-sized
     * merges; nothing is table-sized. The routes' merges run sequentially
-    * inside the epoch — at very large R, split the subscription into
-    * several routed streams (own checkpoint each) rather than one giant
-    * route list.
+    * inside the epoch unless [[CdcConfig.routeParallelism]] overlaps them —
+    * at very large R, split the subscription into several routed streams
+    * (own checkpoint each) rather than one giant route list.
     */
   def startRouted(spark: SparkSession, cfg: CdcConfig,
       routes: Seq[Route]): StreamingQuery = {
@@ -511,125 +566,43 @@ object CdcPipeline {
           t
         }
       })
-    val writer = raw.writeStream
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (batch0: org.apache.spark.sql.DataFrame, epoch: Long) =>
-        val (db, tbl) = graft.sources.CdcEnvelope.tableRefs(cfg.format, col("value"))
-        val batch = batch0.select(col("value"), db.as("_db"), tbl.as("_tbl")).persist()
-        try {
-          // no table metadata ⇒ unroutable ⇒ dirty record (overwrite keeps
-          // epoch replays idempotent, as in the single-table DLQ path)
-          cfg.dlqDir.foreach { dlq =>
-            batch.filter(col("_tbl").isNull).select("value")
-              .write.mode("overwrite").text(s"$dlq/epoch=$epoch")
-          }
-          def applyOne(r: Route): Unit = {
-            val mine = graft.sources.CdcEnvelope.refMatches(
-              r.table, col("_db"), col("_tbl"))
-            val lines = batch.filter(mine).select("value")
-            // a tabled line whose BODY fails to decode (missing lsn,
-            // truncate/DDL envelope) is a dirty record for ITS route —
-            // same policy as the single-table tail's null-lsn diversion.
-            // The decoded frame is staged once (persist) so the DLQ scan
-            // and the merge share one from_json pass; the dirty COUNT
-            // rides the merge's own write job via `observe` (zero probe
-            // jobs — the earlier per-route `isEmpty` ran one extra job per
-            // route per epoch), and the DLQ write job runs only when the
-            // count says there IS a dirty line. A crash between the merge
-            // commit and the dirty write can drop that epoch's dirty
-            // records on replay (the merge skips by lineage, so the count
-            // is not re-observed) — acceptable for the diagnostic channel;
-            // the data path stays exactly-once either way.
-            val merged = cfg.dlqDir match {
-              case Some(dlq) =>
-                val d = decodeEnvelope(cfg.format,
-                    lines.withColumn(RawCol, col("value")),
-                    r.payloadSchema, r.dest.keyCols, passthrough = Seq(RawCol))
-                  .persist()
-                try {
-                  val obs = org.apache.spark.sql.Observation()
-                  val st = r.dest.merge(
-                    d.observe(obs, org.apache.spark.sql.functions.sum(
-                        org.apache.spark.sql.functions.when(col("lsn").isNull, 1L)
-                          .otherwise(0L)).as("dirtyIn"))
-                      .filter(col("lsn").isNotNull).drop(RawCol),
-                    epoch, r.writerId)
-                  // an EMPTY metrics map means the write ran ZERO tasks (an
-                  // epoch with no valid row for this route — either quiet,
-                  // or fully poisoned): the count proves nothing then, so
-                  // only that rare case pays the old probe-then-write pair.
-                  // Replays (skipped) wrote their DLQ in the original
-                  // application of the epoch.
-                  val nDirty: Option[Long] =
-                    if (st.skipped) Some(0L)
-                    else {
-                      val m = obs.get
-                      if (m.isEmpty) None
-                      else Some(m.get("dirtyIn") match {
-                        case Some(n: java.lang.Number) => n.longValue
-                        case _ => 0L
-                      })
-                    }
-                  lazy val dirtyRows = d.filter(col("lsn").isNull).select(RawCol)
-                  if (nDirty.exists(_ > 0) || (nDirty.isEmpty && !dirtyRows.isEmpty))
-                    dirtyRows.write.mode("overwrite").text(s"$dlq/epoch=$epoch-${r.table}")
-                  st
-                } finally { d.unpersist(); () }
-              case None =>
-                r.dest.merge(
-                  decodeEnvelope(cfg.format, lines, r.payloadSchema,
-                    r.dest.keyCols, passthrough = Nil)
-                    .filter(col("lsn").isNotNull),
-                  epoch, r.writerId)
-            }
-            syncFollowers(r.dest, r.followers)
-            autoTag(r.dest, cfg, r.writerId, epoch, merged)
-            // per-destination maintenance rides the stream exactly as on a
-            // single-table tail — same cadence/horizon policy for every
-            // route (tables under one subscription share a source, so one
-            // re-delivery horizon is the honest shape)
-            if (cfg.expireTombstonesEvery > 0 && epoch > 0 &&
-                epoch % cfg.expireTombstonesEvery == 0) {
-              val maxLsn = r.dest.currentSnapshot().maxLsn
-              if (maxLsn >= 0)
-                try r.dest.expireTombstones(maxLsn - cfg.tombstoneRetainLsns)
-                catch {
-                  case e: LakeTable.CommitConflictException =>
-                    org.apache.logging.log4j.LogManager.getLogger(getClass).warn(
-                      s"route ${r.table}: tombstone GC at epoch $epoch lost a " +
-                        s"commit race (${e.getMessage}); retrying at the next cadence")
-                }
-            }
-            if (cfg.vacuumEvery > 0 && epoch > 0 && epoch % cfg.vacuumEvery == 0)
-              r.dest.vacuum(cfg.vacuumRetainVersions)
-          }
-          // the routes' merges are INDEPENDENT (distinct tables / lineages),
-          // so they may overlap: with routeParallelism > 1 they run on a
-          // bounded pool and epoch latency approaches max(route) instead of
-          // sum(route) — Spark schedules concurrent actions from multiple
-          // threads. Any route's failure fails the epoch (it replays; the
-          // committed routes skip by lineage), preserving exactly-once.
-          if (cfg.routeParallelism <= 1 || routes.size == 1) routes.foreach(applyOne)
-          else {
-            val ec = scala.concurrent.ExecutionContext.fromExecutor(routePool)
-            val fs = routes.map(r => scala.concurrent.Future(applyOne(r))(ec))
-            // await EVERY route before leaving the epoch — fail-fast
-            // (Future.sequence) would let in-flight stragglers outlive a
-            // failed epoch and race the restarted stream's replay of the
-            // same (table, writerId, epoch); only after all settle is the
-            // FIRST failure surfaced (it fails the epoch, which replays;
-            // committed routes skip by lineage)
-            fs.foreach(f => scala.concurrent.Await.ready(f,
-              scala.concurrent.duration.Duration.Inf))
-            fs.foreach(f => f.value.get.get)
-          }
-        } finally { batch.unpersist(); () }
-      }
-    ((cfg.availableNow, cfg.triggerInterval) match {
-      case (true, _) => writer.trigger(Trigger.AvailableNow())
-      case (false, Some(interval)) => writer.trigger(Trigger.ProcessingTime(interval))
-      case (false, None) => writer
-    }).start()
+    runBatches(raw, cfg) { (batch0, epoch) =>
+      val (db, tbl) = graft.sources.CdcEnvelope.tableRefs(cfg.format, col("value"))
+      val batch = batch0.select(col("value"), db.as("_db"), tbl.as("_tbl")).persist()
+      try {
+        cfg.dlqDir.foreach { dlq =>
+          deadLetter(batch.filter(col("_tbl").isNull).select("value"), s"$dlq/epoch=$epoch")
+        }
+        def applyOne(r: Route): Unit = {
+          val lines = batch.filter(graft.sources.CdcEnvelope.refMatches(
+            r.table, col("_db"), col("_tbl"))).select("value")
+          applyEpoch(cfg, r.dest, r.writerId, r.followers,
+            decodeEnvelope(cfg.format, lines, r.payloadSchema, r.dest.keyCols,
+              keepDirty = cfg.dlqDir.isDefined),
+            epoch, cfg.dlqDir.map(d => s"$d/epoch=$epoch-${r.table}"))
+        }
+        // the routes' merges are INDEPENDENT (distinct tables / lineages),
+        // so they may overlap: with routeParallelism > 1 they run on a
+        // bounded pool and epoch latency approaches max(route) instead of
+        // sum(route) — Spark schedules concurrent actions from multiple
+        // threads. Any route's failure fails the epoch (it replays; the
+        // committed routes skip by lineage), preserving exactly-once.
+        if (cfg.routeParallelism <= 1 || routes.size == 1) routes.foreach(applyOne)
+        else {
+          val ec = scala.concurrent.ExecutionContext.fromExecutor(routePool)
+          val fs = routes.map(r => scala.concurrent.Future(applyOne(r))(ec))
+          // await EVERY route before leaving the epoch — fail-fast
+          // (Future.sequence) would let in-flight stragglers outlive a
+          // failed epoch and race the restarted stream's replay of the
+          // same (table, writerId, epoch); only after all settle is the
+          // FIRST failure surfaced (it fails the epoch, which replays;
+          // committed routes skip by lineage)
+          fs.foreach(f => scala.concurrent.Await.ready(f,
+            scala.concurrent.duration.Duration.Inf))
+          fs.foreach(f => f.value.get.get)
+        }
+      } finally { batch.unpersist(); () }
+    }
   }
 
   /** Run a routed replay to completion (AvailableNow). */
@@ -684,7 +657,7 @@ object CdcPipeline {
     * to an ordinary [[graft.lake.LakeTable.merge]], whose MOR read
     * arbitrates the snapshot against stored state.
     */
-  def bootstrap(table: LakeTable, snapshot: org.apache.spark.sql.DataFrame,
+  def bootstrap(table: LakeTable, snapshot: DataFrame,
       snapshotLsn: Long, writerId: String = "bootstrap"): LakeTable.MergeStats = {
     require(!snapshot.columns.contains("op") && !snapshot.columns.contains("lsn"),
       "bootstrap snapshot must carry payload columns only — op/lsn are " +
@@ -767,7 +740,7 @@ object CdcPipeline {
       payloadNames(i)
     }
     graft.engine.JdbcExec.ensureLedger(dest.url, dest.props, dest.ledgerTable)
-    val q = startWith(spark, cfg, payloadKeys) { (batch, epoch) =>
+    def applyBatch(batch: DataFrame, epoch: Long): Unit =
       if (graft.engine.JdbcExec.epochApplied(dest.url, dest.props,
           dest.ledgerTable, dest.writerId, epoch)) {
         skipped.incrementAndGet()
@@ -789,6 +762,22 @@ object CdcPipeline {
         // which is idempotent (see the exactly-once contract above)
         graft.engine.JdbcExec.recordEpoch(dest.url, dest.props,
           dest.ledgerTable, dest.writerId, epoch)
+      }
+    val q = startWith(spark, cfg, payloadKeys) { (events, epoch, dlq) =>
+      dlq match {
+        case None => applyBatch(events, epoch)
+        case Some(path) =>
+          // no lake merge is here to carry the dirty count, so the batch is
+          // staged and its dirty lines probed and written BEFORE the apply
+          // (rewritten on every replay — at-least-once, as on the lake).
+          // Unpersist even when the apply throws (a failed epoch replays;
+          // the leaked cache would otherwise accumulate per retry)
+          val staged = events.persist()
+          try {
+            val dirty = dirtyLines(staged)
+            if (!dirty.isEmpty) deadLetter(dirty, path)
+            applyBatch(staged.filter(col("lsn").isNotNull).drop(RawCol), epoch)
+          } finally { staged.unpersist(); () }
       }
     }
     JdbcStream(q, upserts, deletes, skipped)

@@ -11,12 +11,46 @@ import graft.SparkEntry
   * as Bench so numbers are comparable.
   *
   * Usage: runMain graft.tools.BenchExtra <repeats> [query ...]
-  * (no query names = all queries).
+  * (no query names = all queries). Names are checked before the session
+  * starts. The closing total sums each query's MIN, so it is not
+  * comparable to Bench's single-sweep total.
   */
 object BenchExtra {
+  /** The error for `names` that are not SparkEntry queries, listing each
+    * one's near-misses (shared prefix up to the first '_', or edit distance
+    * ≤ 3); None when every name resolves.
+    */
+  def unknownQueries(names: Seq[String]): Option[String] = {
+    val known = SparkEntry.queries.keySet.toSeq.sorted
+    def dist(a: String, b: String): Int = {
+      var prev = (0 to b.length).toArray
+      a.indices.foreach { i =>
+        val cur = Array.fill(b.length + 1)(i + 1)
+        b.indices.foreach { j =>
+          cur(j + 1) = math.min(math.min(cur(j), prev(j + 1)) + 1,
+            prev(j) + (if (a(i) == b(j)) 0 else 1))
+        }
+        prev = cur
+      }
+      prev(b.length)
+    }
+    val bad = names.filterNot(SparkEntry.queries.contains)
+    if (bad.isEmpty) None
+    else Some(bad.map { n =>
+      val stem = n.takeWhile(_ != '_') + "_"
+      val near = known.filter(k => dist(n, k) <= 3 || (n.contains('_') && k.startsWith(stem)))
+      s"unknown query '$n'" +
+        (if (near.isEmpty) "" else s"; did you mean: ${near.take(8).mkString(", ")}")
+    }.mkString("\n"))
+  }
+
   def main(args: Array[String]): Unit = {
-    val repeats = args.headOption.map(_.toInt).getOrElse(3)
+    val repeats = args.headOption.flatMap(_.toIntOption).filter(_ > 0).getOrElse {
+      if (args.isEmpty) 3
+      else { System.err.println(s"repeats must be a positive integer, got '${args.head}'"); sys.exit(2) }
+    }
     val names = args.drop(1).toSeq
+    unknownQueries(names).foreach { msg => System.err.println(msg); sys.exit(2) }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val tmpBase = sys.env.getOrElse("SPARK_GRAFT_WORKDIR",
@@ -48,7 +82,7 @@ object BenchExtra {
       println(f"$name%-24s min=${ts.head}%.3f med=$med%.3f samples=${ts.map(t => f"$t%.3f").mkString(",")}")
       name -> ts.head
     }
-    println(f"TOTAL(min) ${results.map(_._2).sum}%.3f")
+    println(f"TOTAL(sum of per-query min) ${results.map(_._2).sum}%.3f")
     spark.stop()
   }
 }

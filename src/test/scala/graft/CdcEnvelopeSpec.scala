@@ -196,18 +196,34 @@ class CdcEnvelopeSpec extends SparkSpec {
         payloadCols, Model.keyCols)
       .repartition(4)
       .write.text(s"$work/jlog")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$work/jlog/part-corrupt.txt"),
+    // (the newest file, so its lines land in the last epoch)
+    val corrupt = java.nio.file.Paths.get(s"$work/jlog/part-corrupt.txt")
+    java.nio.file.Files.write(corrupt,
       "not json at all\n{\"op\":\"u\",\"garbage\":true}\n{}\n".getBytes)
+    corrupt.toFile.setLastModified(System.currentTimeMillis() + 60000L)
     val viaJson = LakeTable.create(spark, s"$work/jlake", Model.keyCols, 8)
-    CdcPipeline.replayAll(spark, viaJson,
-      CdcPipeline.CdcConfig(s"$work/jlog", s"$work/jcp", maxFilesPerTrigger = 2,
-        format = "debezium", dlqDir = Some(s"$work/dlq")))
+    val jcfg = CdcPipeline.CdcConfig(s"$work/jlog", s"$work/jcp", maxFilesPerTrigger = 2,
+      format = "debezium", dlqDir = Some(s"$work/dlq"))
+    def assertExact(what: String): Unit = {
+      assert(canon(viaParquet.read()) == canon(viaJson.read()), what)
+      // the 3 corrupt lines were collected VERBATIM in the dead-letter dir
+      val dirty = spark.read.text(s"$work/dlq/epoch=*").collect().map(_.getString(0)).sorted
+      assert(dirty.toSeq == Seq("not json at all", "{\"op\":\"u\",\"garbage\":true}", "{}").sorted,
+        what)
+    }
+    CdcPipeline.replayAll(spark, viaJson, jcfg)
+    assertExact("after the tail")
+    val version = viaJson.currentSnapshot().version
 
-    assert(canon(viaParquet.read()) == canon(viaJson.read()))
-    // the 3 corrupt lines were collected VERBATIM in the dead-letter dir
-    val dirty = spark.read.text(s"$work/dlq/epoch=*").collect().map(_.getString(0)).sorted
-    assert(dirty.toSeq == Seq("not json at all", "{\"op\":\"u\",\"garbage\":true}", "{}").sorted)
+    // CRASH after the last epoch's merge committed but before its dead
+    // letters and its checkpoint commit: the restart replays that epoch,
+    // the merge skips by lineage, and the dead letters still land
+    val last = dropLastCommit(s"$work/jcp")
+    assert(new java.io.File(s"$work/dlq/epoch=$last").isDirectory)
+    deleteTree(s"$work/dlq/epoch=$last")
+    CdcPipeline.replayAll(spark, viaJson, jcfg)
+    assert(viaJson.currentSnapshot().version == version)
+    assertExact("after the crash replay")
     // snapshot history records every commit with a wall-clock timestamp
     val h = viaJson.history()
     assert(h.count() == viaJson.currentSnapshot().version + 1)

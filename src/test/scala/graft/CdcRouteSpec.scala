@@ -114,32 +114,63 @@ class CdcRouteSpec extends SparkSpec {
   }
 
   test("routed resume and fresh-checkpoint re-tail stay exactly-once") {
+    import spark.implicits._
     val logDir = tmpDir("route2-log")
     val cp = tmpDir("route2-cp")
+    val dlq = tmpDir("route2-dlq")
     writeStream3(logDir, nOrders = 2000, nItems = 1500)
+    // one dirty line per dead-letter kind, in the NEWEST file so they land
+    // in the last epoch: unroutable, and one bodyless line per route
+    val injected = Seq("{ not json",
+      """{"before":null,"after":null,"op":"t","ts_ms":1,"source":{"lsn":9,"db":"shop","table":"orders"}}""",
+      """{"before":null,"after":{"sku":"x","qty":1},"op":"c","ts_ms":1,"source":{"db":"shop","table":"items"}}""")
+    val dirtyFile = java.nio.file.Paths.get(logDir, "part-dirty.txt")
+    java.nio.file.Files.write(dirtyFile, injected.mkString("", "\n", "\n").getBytes)
+    dirtyFile.toFile.setLastModified(System.currentTimeMillis() + 60000L)
     val ordersT = LakeTable.create(spark, tmpDir("route2-orders"), Seq("id"), numBuckets = 4)
     val itemsT = LakeTable.create(spark, tmpDir("route2-items"), Seq("sku"), numBuckets = 4)
     val routes = Seq(
       CdcPipeline.Route("shop.orders", ordersT, ordersSchema),
       CdcPipeline.Route("shop.items", itemsT, itemsSchema))
-    val cfg = CdcPipeline.CdcConfig(logDir, cp, maxFilesPerTrigger = 2, format = "debezium")
+    val cfg = CdcPipeline.CdcConfig(logDir, cp, maxFilesPerTrigger = 2, format = "debezium",
+      dlqDir = Some(dlq))
+    def versions = (ordersT.currentSnapshot().version, itemsT.currentSnapshot().version)
+    def assertExact(what: String): Unit = {
+      assertSame(ordersT.read().select("id", "status", "amt"),
+        lww(ordersEvents(2000), Seq("id")).drop("lsn"), s"orders $what")
+      assertSame(itemsT.read().select("sku", "qty"),
+        lww(itemsEvents(1500), Seq("sku")).drop("lsn"), s"items $what")
+      val dirty = spark.read.text(dlq + "/*").as[String].collect().toSeq
+      assert(dirty.sorted === injected.sorted, s"dlq $what")
+    }
     CdcPipeline.replayAllRouted(spark, cfg, routes)
-    val v1 = (ordersT.currentSnapshot().version, itemsT.currentSnapshot().version)
+    val v1 = versions
+    assertExact("after the tail")
 
     // same checkpoint: the resumed tail finds no new files, commits nothing
     CdcPipeline.replayAllRouted(spark, cfg, routes)
-    assert((ordersT.currentSnapshot().version, itemsT.currentSnapshot().version) === v1)
+    assert(versions === v1)
+
+    // CRASH after the last epoch's merges committed but before its dead
+    // letters and its checkpoint commit: the restart replays that epoch,
+    // every route's merge skips by lineage, and the dead letters still land
+    val last = dropLastCommit(cp)
+    assert(new java.io.File(s"$dlq/epoch=$last-shop.orders").isDirectory)
+    new java.io.File(dlq).listFiles().map(_.getName)
+      .filter(n => n == s"epoch=$last" || n.startsWith(s"epoch=$last-"))
+      .foreach(n => deleteTree(s"$dlq/$n"))
+    CdcPipeline.replayAllRouted(spark, cfg, routes)
+    assert(versions === v1)
+    assertExact("after the crash replay")
 
     // FRESH checkpoint: every envelope re-delivers as epochs 0..k, all of
     // which the destinations' (writerId, epoch) lineage already covers —
     // the merges skip, state is unchanged (the crash-and-lose-the-
-    // checkpoint disaster drill)
+    // checkpoint disaster drill), and the dead letters are rewritten once
     val cfg2 = cfg.copy(checkpointDir = tmpDir("route2-cp-fresh"))
     CdcPipeline.replayAllRouted(spark, cfg2, routes)
-    assertSame(ordersT.read().select("id", "status", "amt"),
-      lww(ordersEvents(2000), Seq("id")).drop("lsn"), "orders after re-tail")
-    assertSame(itemsT.read().select("sku", "qty"),
-      lww(itemsEvents(1500), Seq("sku")).drop("lsn"), "items after re-tail")
+    assert(versions === v1)
+    assertExact("after re-tail")
   }
 
   test("parallel route merges reach the same states as sequential") {

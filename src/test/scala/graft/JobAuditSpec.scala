@@ -1,0 +1,82 @@
+package graft
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+import graft.core.{Gen, Model}
+import graft.engine.cdc.CdcPipeline
+import graft.lake.LakeTable
+import graft.sources.CdcEnvelope
+
+/** Job-count audits: the Spark jobs a CDC epoch submits are the tail's
+  * per-epoch fixed cost (each one a scheduling round trip on the driver),
+  * so their number is pinned like a plan shape. Counted with a listener on
+  * the streaming batch-id local property every epoch job carries.
+  */
+class JobAuditSpec extends SparkSpec {
+
+  private val FlushKey = "graft.jobaudit.flush"
+
+  /** Spark jobs submitted per streaming epoch while `run` executes. */
+  private def jobsPerEpoch(run: => Unit): Map[Long, Int] = {
+    val counts = scala.collection.mutable.Map.empty[Long, Int].withDefaultValue(0)
+    val token = java.util.UUID.randomUUID().toString
+    @volatile var flushed = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = Option(e.properties).foreach { p =>
+        Option(p.getProperty("streaming.sql.batchId"))
+          .foreach(b => counts.synchronized(counts(b.toLong) += 1))
+        if (p.getProperty(FlushKey) == token) flushed = true
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      run
+      // listener events arrive in submission order: once the marker job is
+      // seen, every epoch job submitted before it has been counted
+      sc.setLocalProperty(FlushKey, token)
+      try spark.range(1).count() finally sc.setLocalProperty(FlushKey, null)
+      val deadline = System.nanoTime() + 60000000000L
+      while (!flushed && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(flushed, "the listener never saw the flush job")
+    } finally sc.removeSparkListener(listener)
+    counts.synchronized(counts.toMap)
+  }
+
+  test("a parquet tail epoch submits a pinned number of jobs") {
+    val work = tmpDir("jobs-parquet")
+    Gen.writeChangeLog(spark, Gen.GenConfig(nEvents = 6000L, nConvs = 100L, partitions = 4),
+      s"$work/log", nChunks = 3, filesPerChunk = 2)
+    val t = LakeTable.create(spark, s"$work/lake", Model.keyCols, 4)
+    val jobs = jobsPerEpoch(CdcPipeline.replayAll(spark, t,
+      CdcPipeline.CdcConfig(s"$work/log", s"$work/cp", maxFilesPerTrigger = 2)))
+    assert(jobs === Map(0L -> 4, 1L -> 4, 2L -> 4))
+  }
+
+  test("a debezium tail's DLQ costs no job on a clean epoch and one write on a dirty one") {
+    val work = tmpDir("jobs-dlq")
+    val gen = Gen.GenConfig(nEvents = 6000L, nConvs = 100L, partitions = 4)
+    val lines = CdcEnvelope.encodeDebezium(Gen.changeEvents(spark, gen).toDF(),
+      Seq("ts", "conv_id", "turn_idx", "role", "text", "tool"), Model.keyCols)
+    lines.repartition(4).write.text(s"$work/log")
+    // the newest file re-delivers a few valid lines next to two malformed
+    // ones: the last epoch is dirty and still merges rows
+    val redelivered = lines.limit(20).collect().map(_.getString(0))
+    val corrupt = java.nio.file.Paths.get(s"$work/log/part-corrupt.txt")
+    java.nio.file.Files.write(corrupt,
+      (redelivered ++ Seq("not json", "{}")).mkString("", "\n", "\n").getBytes)
+    corrupt.toFile.setLastModified(System.currentTimeMillis() + 60000L)
+    def tail(name: String, dlq: Option[String]): Map[Long, Int] = {
+      val t = LakeTable.create(spark, s"$work/$name", Model.keyCols, 4)
+      jobsPerEpoch(CdcPipeline.replayAll(spark, t,
+        CdcPipeline.CdcConfig(s"$work/log", s"$work/$name-cp", maxFilesPerTrigger = 2,
+          format = "debezium", dlqDir = dlq)))
+    }
+    val plain = tail("plain", None)
+    val withDlq = tail("dlq", Some(s"$work/dlq"))
+    assert(plain.keySet === Set(0L, 1L, 2L))
+    // the dirty count rides the merge's write job: no probe before it
+    assert(withDlq === plain + (2L -> (plain(2L) + 1)))
+    assert(spark.read.text(s"$work/dlq/epoch=2").count() === 2L)
+  }
+}

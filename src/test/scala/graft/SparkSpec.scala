@@ -31,4 +31,23 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   def sfDir: String = "/root/testdata/sf0.001"
+
+  /** Crash a stream between its sink and its checkpoint commit: delete the
+    * last epoch's `commits/<n>` marker, so a restart replays epoch n with
+    * its recorded offsets. Returns n.
+    */
+  def dropLastCommit(checkpointDir: String): Long = {
+    val commits = new java.io.File(checkpointDir, "commits")
+    val n = commits.list().flatMap(_.toLongOption).max
+    Seq(s"$n", s".$n.crc").foreach(f => new java.io.File(commits, f).delete())
+    n
+  }
+
+  /** Delete a directory tree (no-op when absent). */
+  def deleteTree(path: String): Unit = {
+    val f = new java.io.File(path)
+    if (f.isDirectory) f.listFiles().foreach(c => deleteTree(c.getPath))
+    f.delete()
+    ()
+  }
 }
