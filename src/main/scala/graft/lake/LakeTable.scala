@@ -70,7 +70,7 @@ import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, In
   * manifest — but at very large bucket counts × long retained histories this
   * becomes the Iceberg manifest-list problem.
   *
-  * MEASURED (BASELINE.md "Manifest scale curve", graft.tools.ManifestProfile,
+  * MEASURED (BASELINE.md "Manifest scale curve", `graft.tools.Perf manifest`,
   * 16 epochs × 100k events, 32 → 4096 buckets): the manifest term is
   * NEGLIGIBLE through 4k buckets (≤337 KB manifests; full-history
   * metrics()/history() ≤0.11 s — the parallel snapshot reads flatten the
@@ -852,6 +852,32 @@ final class LakeTable(
     (out, storedNew, obsIn)
   }
 
+  private final class Observed(val rowsIn: Long, val deletesIn: Long,
+      val bytesIn: Long, val maxLsnIn: Long)
+
+  /** Reads [[prepareBatch]]'s observation after the write job. `get` blocks
+    * until the job's listener fired; the map is EMPTY when the write ran
+    * zero tasks (a fully-empty batch — e.g. an envelope micro-batch whose
+    * every line went to the DLQ), and `sum` metrics are null on zero
+    * observed rows — counts default to 0, `maxLsnIn` to -1.
+    */
+  private def observed(obs: Observation): Observed = {
+    val m = obs.get
+    def long(k: String, default: Long): Long = m.get(k) match {
+      case Some(n: java.lang.Number) => n.longValue
+      case _ => default
+    }
+    new Observed(long("rowsIn", 0L), long("deletesIn", 0L), long("bytesIn", 0L),
+      long("maxLsnIn", -1L))
+  }
+
+  /** Max/mean rows per bucket over the published files' footer counts. */
+  private def skewOf(files: Seq[FileEntry]): Double = {
+    val perBucket = files.groupBy(_.bucket).map(_._2.map(_.rows).sum)
+    if (perBucket.isEmpty) 1.0
+    else perBucket.max.toDouble / (perBucket.sum.toDouble / perBucket.size)
+  }
+
   def merge(batch: DataFrame, epoch: Long,
       writerId: String = DefaultWriter,
       expectPrevEpoch: Option[Long] = None): MergeStats = {
@@ -878,24 +904,10 @@ final class LakeTable(
     val deltas = publish(deltaOut, s"$root/_staging-d-$epoch-$nonce", s"d$newVersion-$nonce", "d",
       numBuckets, reshuffle = false)
     lap("delta-publish")
-    // `obsIn.get` blocks until the write job's listener fired; the map is
-    // EMPTY when the write ran zero tasks (a fully-empty batch — e.g. an
-    // envelope micro-batch whose every line went to the DLQ), and `sum`
-    // metrics are null on zero observed rows — default both to 0
-    val obsMap = obsIn.get
-    def obsLong(k: String): Long = obsMap.get(k) match {
-      case Some(n: java.lang.Number) => n.longValue
-      case _ => 0L
-    }
-    val rowsIn = obsLong("rowsIn")
+    val obs = observed(obsIn)
+    val rowsIn = obs.rowsIn
     val rowsDistinct = deltas.map(_.rows).sum
     val affected: Set[Int] = deltas.map(_.bucket).toSet
-
-    def observedBytes: Long = obsLong("bytesIn")
-    val observedMaxLsn: Long = obsMap.get("maxLsnIn") match {
-      case Some(n: java.lang.Number) => n.longValue
-      case _ => -1L
-    }
 
     // optimistic-concurrency commit: claim base.version+1; on conflict,
     // REBASE onto the winner's snapshot and retry. Rebasing with delta
@@ -927,8 +939,8 @@ final class LakeTable(
           commitSnapshot(mkSnap(base).copy(version = base.version + 1,
             lastEpoch = epoch, stats = Some(st),
             epochs = base.epochs + (writerId -> epoch),
-            maxLsn = math.max(base.maxLsn, observedMaxLsn),
-            lsnHigh = observedMaxLsn)) // THIS commit's own high (race guard)
+            maxLsn = math.max(base.maxLsn, obs.maxLsnIn),
+            lsnHigh = obs.maxLsnIn)) // THIS commit's own high (race guard)
           return st
         } catch {
           case e: CommitConflictException =>
@@ -948,7 +960,7 @@ final class LakeTable(
           schema = Some(unionSchemas(base.schema.getOrElse(storedNew), storedNew)),
           addedDeltas = Nil),
         base => MergeStats(epoch, skipped = false, rowsIn, 0, 0, 0, 0, base.rows, 1.0,
-          bytesIn = observedBytes))
+          bytesIn = obs.bytesIn))
     }
 
     // metrics without any extra job: `deletes` = tombstone events seen in
@@ -956,11 +968,8 @@ final class LakeTable(
     // skew factor = max/mean rows per bucket from the parquet footer counts
     // — the shuffle-partition-level skew that the salting/bucketing design
     // has to absorb, measured where it physically materializes.
-    val deletes = obsLong("deletesIn")
-    val perBucket = deltas.groupBy(_.bucket).map(_._2.map(_.rows).sum)
-    val skew =
-      if (perBucket.isEmpty) 1.0
-      else perBucket.max.toDouble / (perBucket.sum.toDouble / perBucket.size)
+    val deletes = obs.deletesIn
+    val skew = skewOf(deltas)
 
     var files = snap.files ++ deltas
 
@@ -1011,7 +1020,7 @@ final class LakeTable(
           rowsIn - rowsDistinct, deletes, affected.size, f.map(_.rows).sum, skew,
           seconds = (System.nanoTime() - tStart) / 1e9,
           compactedBuckets = if (base eq snap) toCompact.size else 0,
-          bytesIn = observedBytes)
+          bytesIn = obs.bytesIn)
       })
   }
 
@@ -1064,26 +1073,13 @@ final class LakeTable(
     // would permanently miss every seeded key that never changes again.
     val base = publish(out, s"$root/_staging-bl-$epoch-$nonce",
       s"s$newVersion-$nonce", "b", numBuckets, reshuffle = false)
-    val obsMap = obsIn.get
-    def obsLong(k: String): Long = obsMap.get(k) match {
-      case Some(n: java.lang.Number) => n.longValue
-      case _ => 0L
-    }
-    val rowsIn = obsLong("rowsIn")
+    val obs = observed(obsIn)
     val rowsDistinct = base.map(_.rows).sum
-    val observedMaxLsn: Long = obsMap.get("maxLsnIn") match {
-      case Some(n: java.lang.Number) => n.longValue
-      case _ => -1L
-    }
-    val perBucket = base.groupBy(_.bucket).map(_._2.map(_.rows).sum)
-    val skew =
-      if (perBucket.isEmpty) 1.0
-      else perBucket.max.toDouble / (perBucket.sum.toDouble / perBucket.size)
-    val st = MergeStats(epoch, skipped = false, rowsIn, rowsDistinct,
-      rowsIn - rowsDistinct, obsLong("deletesIn"),
-      base.map(_.bucket).toSet.size, rowsDistinct, skew,
+    val st = MergeStats(epoch, skipped = false, obs.rowsIn, rowsDistinct,
+      obs.rowsIn - rowsDistinct, obs.deletesIn,
+      base.map(_.bucket).toSet.size, rowsDistinct, skewOf(base),
       seconds = (System.nanoTime() - tStart) / 1e9,
-      bytesIn = obsLong("bytesIn"))
+      bytesIn = obs.bytesIn)
     commitSnapshot(Snapshot(
       version = newVersion,
       lastEpoch = epoch,
@@ -1093,8 +1089,8 @@ final class LakeTable(
       stats = Some(st),
       addedDeltas = base, // the load IS this epoch's change window
       epochs = snap.epochs + (writerId -> epoch),
-      maxLsn = math.max(snap.maxLsn, observedMaxLsn),
-      lsnHigh = observedMaxLsn))
+      maxLsn = math.max(snap.maxLsn, obs.maxLsnIn),
+      lsnHigh = obs.maxLsnIn))
     st
   }
 

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.core.{Gen, Model}
 import graft.engine.cdc.CdcPipeline
 import graft.lake.LakeTable
@@ -10,6 +8,8 @@ import graft.lake.LakeTable
   * `datax -job config.json` (go-datax `cmd/datax/main.go:52-55`).
   *
   * Usage: CdcReplayMain <workDir> [nEvents] [cores] [numBuckets] [format] [distCols]
+  * `cores` sizes the local session and the generator (default: see
+  * [[Session]]).
   * `format` = parquet (default) | debezium | canal | maxwell — the envelope
   * formats generate the log as JSONL binlog envelopes and exercise the
   * decode tail (dead-lettering malformed lines under <workDir>/dlq-<format>).
@@ -26,26 +26,13 @@ object CdcReplayMain {
   def main(args: Array[String]): Unit = {
     val workDir = args.headOption.getOrElse("/tmp/graft-cdc-demo")
     val nEvents = if (args.length > 1) args(1).toLong else 100000L
-    val cores = if (args.length > 2) args(2).toInt else 8
+    val cores = if (args.length > 2) args(2).toInt else Session.defaultCores
     val buckets = if (args.length > 3) args(3).toInt else 16
     val format = if (args.length > 4) args(4) else "parquet"
     val distCols: Seq[String] =
       if (args.length > 5) args(5).split(',').toSeq else Nil
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-cdc-replay")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE partition coalescing targets bytes-per-task, which under-
-      // parallelizes the bucket-sorted MERGE write (measured: 32-partition
-      // shuffle coalesced to 18 tasks regardless of core count)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "32m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(cores)
 
     val cfg = Gen.GenConfig(nEvents = nEvents, nConvs = math.max(10L, nEvents / 100), partitions = cores)
     val logDir = s"$workDir/log-$format"

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.lake.LakeTable
 
 /** Lake-table maintenance CLI — the ops surface of the snapshot table
@@ -127,19 +125,55 @@ import graft.lake.LakeTable
   * layout is rejected by the table itself.
   */
 object LakeMaint {
+  /** Each command's required argument count (after the command) and usage. */
+  private val Commands: Map[String, (Int, String)] = Map(
+    "history" -> (0, "history"),
+    "metrics" -> (0, "metrics"),
+    "state" -> (0, "state [count]"),
+    "compact" -> (0, "compact"),
+    "cluster" -> (1, "cluster <c1,c2|zorder:c1,c2|none>"),
+    "expire" -> (1, "expire <horizonLsn>"),
+    "vacuum" -> (0, "vacuum [retainVersions]"),
+    "tag" -> (1, "tag <name> [version] [replace]"),
+    "tags" -> (0, "tags"),
+    "droptag" -> (1, "droptag <name>"),
+    "readtag" -> (1, "readtag <name> [limit]"),
+    "asof" -> (1, "asof <yyyy-MM-ddTHH:mm:ss> [limit]"),
+    "expiresnapshots" -> (1, "expiresnapshots <retainVersions>"),
+    "check" -> (0, "check [retainVersions]"),
+    "where" -> (1, "where <sqlPredicate> [limit]"),
+    "delete" -> (1, "delete <sqlPredicate>"),
+    "set" -> (3, "set <sqlPredicate> <col> <sqlExpr>"),
+    "rollback" -> (1, "rollback <version>"),
+    "export" -> (2, "export <debezium|canal|maxwell> <dstDir> [sinceVersion]"),
+    "feed" -> (2, "feed <debezium|canal|maxwell> <feedDir> [expireUpto]"),
+    "rebucket" -> (2, "rebucket <dstRoot> <newBuckets>"),
+    "rollup" -> (1, "rollup <dstRoot> [groupCol]"),
+    "rollupadd" -> (1, "rollupadd <dstRoot> [groupCol]"),
+    "stateat" -> (1, "stateat <lsnCut> [limit] — run against an scd2 history table"),
+    "scd2" -> (1, "scd2 <dstRoot>"),
+    "mirror" -> (3, "mirror <jdbcUrl> <table> <dialect> [k1,k2]"),
+    "parity" -> (1, "parity <otherLakeRootOrParquetPath> [exact]"),
+    "tail" -> (1, "tail <dstRoot>"))
+
+  /** Why `args` cannot run (unknown command, too few arguments), checked
+    * before any session starts; None when they can.
+    */
+  def usageError(args: Seq[String]): Option[String] = args match {
+    case Seq(_, cmd, rest @ _*) => Commands.get(cmd) match {
+      case None => Some(s"unknown command '$cmd'; one of: " +
+        Commands.keys.toSeq.sorted.mkString(", "))
+      case Some((n, use)) if rest.length < n => Some(s"usage: LakeMaint <tableRoot> $use")
+      case _ => None
+    }
+    case _ => Some("usage: LakeMaint <tableRoot> <cmd> [args]")
+  }
+
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: LakeMaint <tableRoot> <cmd> [args]")
+    usageError(args.toSeq).foreach { msg => System.err.println(msg); sys.exit(2) }
     val root = args(0)
     val cmd = args(1)
-
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .appName("graft-lake-maint")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
 
     val table = LakeTable.open(spark, root)
     cmd match {
@@ -157,7 +191,6 @@ object LakeMaint {
         table.compactAll()
         println(s"compacted -> version ${table.currentSnapshot().version}")
       case "cluster" =>
-        require(args.length >= 3, "cluster <c1,c2|zorder:c1,c2|none>")
         if (args(2).startsWith("zorder:")) {
           // multi-dimensional rewrite (LakeTable.reclusterZOrder): NON-STICKY
           // — the manifest's linear sortCols stays; re-run after heavy ingest
@@ -178,7 +211,6 @@ object LakeMaint {
             s"files=${s.files.size} rows=${s.rows}")
         }
       case "expire" =>
-        require(args.length >= 3, "expire <horizonLsn>")
         table.expireTombstones(args(2).toLong)
         println(s"expired tombstones < ${args(2)} -> version ${table.currentSnapshot().version}")
       case "vacuum" =>
@@ -186,7 +218,6 @@ object LakeMaint {
         val n = table.vacuum(retain)
         println(s"vacuumed $n unreferenced files (retained $retain versions of deltas)")
       case "tag" =>
-        require(args.length >= 3, "tag <name> [version] [replace]")
         val rest = args.drop(3)
         val replace = rest.contains("replace")
         val version = rest.filterNot(_ == "replace").headOption.map(_.toLong).getOrElse(-1L)
@@ -197,24 +228,20 @@ object LakeMaint {
         if (ts.isEmpty) println("(no tags)")
         else ts.toSeq.sortBy(_._1).foreach { case (n, v) => println(s"$n -> v$v") }
       case "droptag" =>
-        require(args.length >= 3, "droptag <name>")
         println(if (table.dropTag(args(2))) s"dropped tag '${args(2)}'"
           else s"no tag '${args(2)}'")
       case "readtag" =>
-        require(args.length >= 3, "readtag <name> [limit]")
         val limit = if (args.length >= 4) args(3).toInt else 20
         val v = table.tagVersion(args(2))
         println(s"tag '${args(2)}' = version $v")
         table.readTag(args(2)).show(limit, truncate = false)
       case "asof" =>
-        require(args.length >= 3, "asof <yyyy-MM-ddTHH:mm:ss> [limit]")
         val ts = LakeTable.parseTimestamp(args(2))
         val limit = if (args.length >= 4) args(3).toInt else 20
         val v = table.versionAsOf(ts)
         println(s"as of $ts = version $v")
         table.readVersion(v).show(limit, truncate = false)
       case "expiresnapshots" =>
-        require(args.length >= 3, "expiresnapshots <retainVersions>")
         val n = table.expireSnapshots(args(2).toInt)
         println(s"expired $n manifests (retained newest ${args(2)})")
       case "check" =>
@@ -227,28 +254,23 @@ object LakeMaint {
         (r.missing ++ r.rowMismatches).foreach(m => println(s"  CORRUPT: $m"))
         if (!r.clean) sys.exit(2)
       case "where" =>
-        require(args.length >= 3, "where <sqlPredicate> [limit]")
         val r = table.scanWhere(org.apache.spark.sql.functions.expr(args(2)))
         println(s"scan: ${r.filesKept} of ${r.filesTotal} files after " +
           s"manifest-bounds skipping (snapshot v${r.version})")
         r.df.show(if (args.length >= 4) args(3).toInt else 20, truncate = false)
       case "delete" =>
-        require(args.length >= 3, "delete <sqlPredicate>")
         val st = table.deleteWhere(org.apache.spark.sql.functions.expr(args(2)),
           epoch = table.currentSnapshot().lastEpochFor("maint") + 1, writerId = "maint")
         println(s"deleted ${st.deletes} rows -> version ${table.currentSnapshot().version}")
       case "set" =>
-        require(args.length >= 5, "set <sqlPredicate> <col> <sqlExpr>")
         import org.apache.spark.sql.functions.expr
         val st = table.updateWhere(expr(args(2)), Map(args(3) -> expr(args(4))),
           epoch = table.currentSnapshot().lastEpochFor("maint") + 1, writerId = "maint")
         println(s"rewrote ${st.rowsApplied} rows -> version ${table.currentSnapshot().version}")
       case "rollback" =>
-        require(args.length >= 3, "rollback <version>")
         table.rollbackTo(args(2).toLong)
         println(s"rolled back to snapshot ${args(2)} -> version ${table.currentSnapshot().version}")
       case "export" =>
-        require(args.length >= 4, "export <debezium|canal|maxwell> <dstDir> [sinceVersion]")
         val since = if (args.length >= 5) args(4).toLong else -1L
         val changes = table.readChangesSince(since)
           .withColumnRenamed(LakeTable.OpCol, "op")
@@ -257,7 +279,6 @@ object LakeMaint {
           graft.engine.SyncJob.Sink(args(2), args(3), keyCols = table.keyCols))
         println(s"exported changes since version $since as ${args(2)} -> ${args(3)}")
       case "feed" =>
-        require(args.length >= 4, "feed <debezium|canal|maxwell> <feedDir> [expireUpto]")
         // incrementally maintained envelope feed (CdcFeed scaladoc): the
         // watermark lives in the feed directory, so re-running this command
         // ships exactly the commits since the last run (cron-able outbox).
@@ -273,13 +294,11 @@ object LakeMaint {
           println(s"expired $n consumed window(s) up to v${args(4)}")
         }
       case "rebucket" =>
-        require(args.length >= 4, "rebucket <dstRoot> <newBuckets>")
         val dst = table.rebucketTo(args(2), args(3).toInt)
         val s = dst.currentSnapshot()
         println(s"rebucketed -> ${args(2)} buckets=${args(3)} rows=${s.rows} " +
           s"writers=${s.epochs.map { case (w, e) => s"$w:$e" }.mkString(",")}")
       case "rollup" =>
-        require(args.length >= 3, "rollup <dstRoot> [groupCol]")
         // incrementally maintained per-group aggregate (Rollup scaladoc):
         // the destination's epoch lineage is the watermark, so re-running
         // this command refreshes only groups changed since the last run
@@ -291,7 +310,6 @@ object LakeMaint {
           else s"rollup -> ${args(2)} group=$groupCol refreshed=${st.rowsApplied} " +
             s"groups physicalRows=${dst.currentSnapshot().rows}")
       case "rollupadd" =>
-        require(args.length >= 3, "rollupadd <dstRoot> [groupCol]")
         // additive variant (Rollup.syncAdditive): per-group SUMs folded
         // from state diffs of the changed keys — NO live-table scan on any
         // layout, so it stays O(changes) even when the group column is not
@@ -305,7 +323,6 @@ object LakeMaint {
           else s"rollupadd -> ${args(2)} group=$groupCol refreshed=${st.rowsApplied} " +
             s"groups physicalRows=${dst.currentSnapshot().rows}")
       case "stateat" =>
-        require(args.length >= 3, "stateat <lsnCut> [limit] — run against an scd2 history table")
         require(table.keyCols.lastOption.contains(graft.lake.Scd2.SeqCol),
           s"stateat reads an SCD2 history table (key ending in " +
             s"${graft.lake.Scd2.SeqCol}); this table is keyed " +
@@ -314,7 +331,6 @@ object LakeMaint {
         println(s"state as of lsn ${args(2)}: ${cutState.count()} rows")
         cutState.show(if (args.length >= 4) args(3).toInt else 20, truncate = false)
       case "scd2" =>
-        require(args.length >= 3, "scd2 <dstRoot>")
         // incrementally maintained SCD Type-2 history (Scd2 scaladoc): the
         // destination's epoch lineage is the watermark, so re-running this
         // command extends the history only with commits since the last run
@@ -330,7 +346,6 @@ object LakeMaint {
           else s"scd2 -> $dstRoot @epoch ${st.epoch} rowsApplied=${st.rowsApplied} " +
             s"historyRows=${dst.currentSnapshot().rows}")
       case "mirror" =>
-        require(args.length >= 5, "mirror <jdbcUrl> <table> <dialect> [k1,k2]")
         val (url, tbl, dialect) = (args(2), args(3), graft.engine.Dialect.byName(args(4)))
         val keys: Seq[String] =
           if (args.length >= 6) args(5).split(",").toSeq.filter(_.nonEmpty)
@@ -346,7 +361,6 @@ object LakeMaint {
         println(if (st.skipped) s"mirror $tbl already at source version ${st.sourceVersion}"
           else s"mirrored -> $tbl @v${st.sourceVersion} upserts=${st.upserts} deletes=${st.deletes}")
       case "parity" =>
-        require(args.length >= 3, "parity <otherLakeRootOrParquetPath> [exact]")
         val exact = args.length >= 4 && args(3) == "exact"
         // `other` is a lake root when it carries a manifest dir; anything
         // else is read as plain parquet (an export, an RDBMS dump staged to
@@ -369,7 +383,6 @@ object LakeMaint {
           sys.exit(2)
         }
       case "tail" =>
-        require(args.length >= 3, "tail <dstRoot>")
         // committed-manifest-driven (NOT readStreamChanges): change windows
         // respect rollbacks and never see uncommitted-publish orphans, and
         // the destination's epoch lineage is the watermark. The writerId is
@@ -388,7 +401,6 @@ object LakeMaint {
         val applied = graft.lake.Replicate.follow(table, dst, writerId = "lake-tail",
           pollMillis = 500L, idleRounds = 2)
         println(s"tailed -> ${args(2)} physicalRows=${dst.currentSnapshot().rows} applied=$applied")
-      case other => throw new IllegalArgumentException(s"unknown command '$other'")
     }
     spark.stop()
   }

@@ -650,12 +650,7 @@ object RunJob {
       println(s"content[$i]:\n${describe(t)}")
     }
     if (!dryRun) {
-      val spark = SparkSession.builder()
-        .appName("graft-runjob")
-        .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val spark = Session()
       try {
         val results = translated.map(runContent(spark, _))
         results.zipWithIndex.foreach { case (r, i) =>
