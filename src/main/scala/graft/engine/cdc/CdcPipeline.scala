@@ -2,6 +2,7 @@ package graft.engine.cdc
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, sum, when}
+import org.apache.spark.sql.graftbridge.SessionBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.core.Model
@@ -393,13 +394,24 @@ object CdcPipeline {
 
   /** Run `body` on every micro-batch of `src` under the config's checkpoint
     * and trigger (AvailableNow, a processing-time interval, or Spark's
-    * as-fast-as-possible default).
+    * as-fast-as-possible default). The only stream sink in the engine.
+    *
+    * Session contract: `body` sees each micro-batch rebound to the session
+    * that built `src`, so every merge, LWW and compaction job runs under
+    * the caller's conf (AQE, shuffle partitions, time zone), not a
+    * checkpoint's restored `spark.sql.shuffle.partitions` (harmless: the
+    * merge partitions by the table's bucket count). The stream's own
+    * cloned session misses Spark's generated-class cache, so the apply
+    * path would re-compile at every stream start; here it compiles once
+    * per JVM.
     */
   private def runBatches(src: DataFrame, cfg: CdcConfig)(
       body: (DataFrame, Long) => Unit): StreamingQuery = {
     val writer = src.writeStream
       .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (batch: DataFrame, epoch: Long) => body(batch, epoch) }
+      .foreachBatch { (batch: DataFrame, epoch: Long) =>
+        body(SessionBridge.rebind(src.sparkSession, batch), epoch)
+      }
     ((cfg.availableNow, cfg.triggerInterval) match {
       case (true, _) => writer.trigger(Trigger.AvailableNow())
       case (false, Some(interval)) => writer.trigger(Trigger.ProcessingTime(interval))

@@ -125,46 +125,66 @@ import graft.lake.LakeTable
   * layout is rejected by the table itself.
   */
 object LakeMaint {
-  /** Each command's required argument count (after the command) and usage. */
-  private val Commands: Map[String, (Int, String)] = Map(
-    "history" -> (0, "history"),
-    "metrics" -> (0, "metrics"),
-    "state" -> (0, "state [count]"),
-    "compact" -> (0, "compact"),
-    "cluster" -> (1, "cluster <c1,c2|zorder:c1,c2|none>"),
-    "expire" -> (1, "expire <horizonLsn>"),
-    "vacuum" -> (0, "vacuum [retainVersions]"),
-    "tag" -> (1, "tag <name> [version] [replace]"),
-    "tags" -> (0, "tags"),
-    "droptag" -> (1, "droptag <name>"),
-    "readtag" -> (1, "readtag <name> [limit]"),
-    "asof" -> (1, "asof <yyyy-MM-ddTHH:mm:ss> [limit]"),
-    "expiresnapshots" -> (1, "expiresnapshots <retainVersions>"),
-    "check" -> (0, "check [retainVersions]"),
-    "where" -> (1, "where <sqlPredicate> [limit]"),
-    "delete" -> (1, "delete <sqlPredicate>"),
-    "set" -> (3, "set <sqlPredicate> <col> <sqlExpr>"),
-    "rollback" -> (1, "rollback <version>"),
-    "export" -> (2, "export <debezium|canal|maxwell> <dstDir> [sinceVersion]"),
-    "feed" -> (2, "feed <debezium|canal|maxwell> <feedDir> [expireUpto]"),
-    "rebucket" -> (2, "rebucket <dstRoot> <newBuckets>"),
-    "rollup" -> (1, "rollup <dstRoot> [groupCol]"),
-    "rollupadd" -> (1, "rollupadd <dstRoot> [groupCol]"),
-    "stateat" -> (1, "stateat <lsnCut> [limit] — run against an scd2 history table"),
-    "scd2" -> (1, "scd2 <dstRoot>"),
-    "mirror" -> (3, "mirror <jdbcUrl> <table> <dialect> [k1,k2]"),
-    "parity" -> (1, "parity <otherLakeRootOrParquetPath> [exact]"),
-    "tail" -> (1, "tail <dstRoot>"))
+  /** One command's required argument count (after the command), its usage,
+    * and the check each numeric argument must pass, keyed by its position
+    * after the command.
+    */
+  private final case class Cmd(min: Int, usage: String,
+      numeric: Map[Int, String => Boolean] = Map.empty)
 
-  /** Why `args` cannot run (unknown command, too few arguments), checked
-    * before any session starts; None when they can.
+  private val int: String => Boolean = _.toIntOption.isDefined
+  private val long: String => Boolean = _.toLongOption.isDefined
+  /** `tag`'s optional version and `replace` flag come in either order */
+  private val versionOrReplace: String => Boolean = a => a == "replace" || long(a)
+
+  private val Commands: Map[String, Cmd] = Map(
+    "history" -> Cmd(0, "history"),
+    "metrics" -> Cmd(0, "metrics"),
+    "state" -> Cmd(0, "state [count]"),
+    "compact" -> Cmd(0, "compact"),
+    "cluster" -> Cmd(1, "cluster <c1,c2|zorder:c1,c2|none>"),
+    "expire" -> Cmd(1, "expire <horizonLsn>", Map(0 -> long)),
+    "vacuum" -> Cmd(0, "vacuum [retainVersions]", Map(0 -> int)),
+    "tag" -> Cmd(1, "tag <name> [version] [replace]",
+      Map(1 -> versionOrReplace, 2 -> versionOrReplace)),
+    "tags" -> Cmd(0, "tags"),
+    "droptag" -> Cmd(1, "droptag <name>"),
+    "readtag" -> Cmd(1, "readtag <name> [limit]", Map(1 -> int)),
+    "asof" -> Cmd(1, "asof <yyyy-MM-ddTHH:mm:ss> [limit]", Map(1 -> int)),
+    "expiresnapshots" -> Cmd(1, "expiresnapshots <retainVersions>", Map(0 -> int)),
+    "check" -> Cmd(0, "check [retainVersions]", Map(0 -> int)),
+    "where" -> Cmd(1, "where <sqlPredicate> [limit]", Map(1 -> int)),
+    "delete" -> Cmd(1, "delete <sqlPredicate>"),
+    "set" -> Cmd(3, "set <sqlPredicate> <col> <sqlExpr>"),
+    "rollback" -> Cmd(1, "rollback <version>", Map(0 -> long)),
+    "export" -> Cmd(2, "export <debezium|canal|maxwell> <dstDir> [sinceVersion]",
+      Map(2 -> long)),
+    "feed" -> Cmd(2, "feed <debezium|canal|maxwell> <feedDir> [expireUpto]", Map(2 -> long)),
+    "rebucket" -> Cmd(2, "rebucket <dstRoot> <newBuckets>", Map(1 -> int)),
+    "rollup" -> Cmd(1, "rollup <dstRoot> [groupCol]"),
+    "rollupadd" -> Cmd(1, "rollupadd <dstRoot> [groupCol]"),
+    "stateat" -> Cmd(1, "stateat <lsnCut> [limit] - run against an scd2 history table",
+      Map(0 -> long, 1 -> int)),
+    "scd2" -> Cmd(1, "scd2 <dstRoot>"),
+    "mirror" -> Cmd(3, "mirror <jdbcUrl> <table> <dialect> [k1,k2]"),
+    "parity" -> Cmd(1, "parity <otherLakeRootOrParquetPath> [exact]"),
+    "tail" -> Cmd(1, "tail <dstRoot>"))
+
+  /** Why `args` cannot run (unknown command, too few arguments, a
+    * non-numeric count, version or lsn), checked before any session
+    * starts; None when they can.
     */
   def usageError(args: Seq[String]): Option[String] = args match {
     case Seq(_, cmd, rest @ _*) => Commands.get(cmd) match {
       case None => Some(s"unknown command '$cmd'; one of: " +
         Commands.keys.toSeq.sorted.mkString(", "))
-      case Some((n, use)) if rest.length < n => Some(s"usage: LakeMaint <tableRoot> $use")
-      case _ => None
+      case Some(c) =>
+        val usage = s"usage: LakeMaint <tableRoot> ${c.usage}"
+        if (rest.length < c.min) Some(usage)
+        else c.numeric.toSeq.sortBy(_._1).collectFirst {
+          case (i, ok) if i < rest.length && !ok(rest(i)) =>
+            s"not a number: '${rest(i)}'\n$usage"
+        }
     }
     case _ => Some("usage: LakeMaint <tableRoot> <cmd> [args]")
   }
@@ -326,7 +346,7 @@ object LakeMaint {
         require(table.keyCols.lastOption.contains(graft.lake.Scd2.SeqCol),
           s"stateat reads an SCD2 history table (key ending in " +
             s"${graft.lake.Scd2.SeqCol}); this table is keyed " +
-            s"${table.keyCols.mkString(",")} — point at the history root")
+            s"${table.keyCols.mkString(",")} - point at the history root")
         val cutState = graft.lake.Scd2.stateAt(table, args(2).toLong)
         println(s"state as of lsn ${args(2)}: ${cutState.count()} rows")
         cutState.show(if (args.length >= 4) args(3).toInt else 20, truncate = false)
@@ -354,7 +374,7 @@ object LakeMaint {
             try graft.engine.JdbcExec.primaryKeys(conn, tbl) finally conn.close()
           }
         require(keys.nonEmpty,
-          s"mirror $tbl: no conflict columns — pass k1,k2 or declare a PK on the target")
+          s"mirror $tbl: no conflict columns - pass k1,k2 or declare a PK on the target")
         val st = graft.engine.cdc.JdbcApply.sync(table,
           graft.engine.cdc.CdcPipeline.JdbcDest(dialect, url, tbl,
             keyCols = keys, writerId = "lake-mirror"))

@@ -117,7 +117,7 @@ object RunJob {
         if (lr.columns.isEmpty) base
         else base.select(lr.columns.map(org.apache.spark.sql.functions.col): _*)
       case _: JobConfig.CdcRead => throw new IllegalArgumentException(
-        "cdcreader is a streaming tail, not a batch input — it pairs with " +
+        "cdcreader is a streaming tail, not a batch input - it pairs with " +
           "lakewriter or an RDBMS writer")
     })
 
@@ -159,7 +159,7 @@ object RunJob {
         try JdbcExec.primaryKeys(conn, jw.table) finally conn.close()
     }
     require(keyCols.nonEmpty,
-      s"cdc apply into ${jw.table}: no conflict columns — set onConflictColumn " +
+      s"cdc apply into ${jw.table}: no conflict columns - set onConflictColumn " +
         "or declare a primary key on the target table")
     val cfg = graft.engine.cdc.CdcPipeline.CdcConfig(
       logDir = rebasePath(cdc.logDir, ov.rebase),
@@ -242,7 +242,7 @@ object RunJob {
           toVersion = pinnedVersion(src, lr))
       } else {
         require(lr.toVersion.isEmpty && lr.tag.isEmpty && lr.asOf.isEmpty,
-          "toVersion/tag/asOf pinning is a rollup feature — replication always tracks the head")
+          "toVersion/tag/asOf pinning is a rollup feature - replication always tracks the head")
         graft.lake.Replicate.sync(src, dst, writerId = wid)
       }
     SyncJob.JobResult(rowsWritten = st.rowsApplied, rowsBad = 0L,
@@ -406,7 +406,7 @@ object RunJob {
             try JdbcExec.primaryKeys(conn, f.jdbcTable) finally conn.close()
           }
         require(keyCols.nonEmpty,
-          s"jdbc follower on ${f.jdbcTable}: no conflict columns — set " +
+          s"jdbc follower on ${f.jdbcTable}: no conflict columns - set " +
             "onConflictColumn or declare a primary key on the target table")
         graft.engine.cdc.CdcPipeline.JdbcFollower(
           graft.engine.cdc.CdcPipeline.JdbcDest(
@@ -547,11 +547,11 @@ object RunJob {
   def describe(t: JobConfig.Translated): String = {
     def reader(plan: JobConfig.ReaderPlan): String = plan match {
       case JobConfig.FileRead(src) => s"file[${src.format}] ${src.path}"
-      case JobConfig.StreamRead(cols, n, s) => s"stream ${cols.length} cols × $n rows × $s slices"
+      case JobConfig.StreamRead(cols, n, s) => s"stream ${cols.length} cols x $n rows x $s slices"
       case JobConfig.JdbcRead(d, url, table, preds, _, _, splitPk, splitN) =>
         s"jdbc[${d.name}] $url $table" +
           (if (splitPk.nonEmpty && splitN > 1)
-             s" splitPk=$splitPk×$splitN (range/dictionary probe at run time;" +
+             s" splitPk=${splitPk}x$splitN (range/dictionary probe at run time;" +
                s" static fallback${if (preds.nonEmpty) s": ${preds.head} ..." else ": single task"})"
            else if (preds.nonEmpty) s" split=${preds.length}: ${preds.head} ..." else "")
       case lr: JobConfig.LakeRead =>
@@ -637,7 +637,7 @@ object RunJob {
           ).mkString
     }
     val tr = if (t.transforms.isEmpty) "" else
-      s"\n  transform: ${t.transforms.map(_.getClass.getSimpleName).mkString(" → ")}"
+      s"\n  transform: ${t.transforms.map(_.getClass.getSimpleName).mkString(" -> ")}"
     s"  read:  $r$tr\n  write: $w\n  channel=${t.channel} errorLimit=${t.errorLimit}"
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.core.{Gen, Model}
@@ -17,14 +18,24 @@ class JobAuditSpec extends SparkSpec {
   private val FlushKey = "graft.jobaudit.flush"
 
   /** Spark jobs submitted per streaming epoch while `run` executes. */
-  private def jobsPerEpoch(run: => Unit): Map[Long, Int] = {
+  private def jobsPerEpoch(run: => Unit): Map[Long, Int] = auditJobs(run)._1
+
+  /** Jobs per streaming epoch while `run` executes, and the call sites of
+    * the jobs that carried no epoch.
+    */
+  private def auditJobs(run: => Unit): (Map[Long, Int], Seq[String]) = {
     val counts = scala.collection.mutable.Map.empty[Long, Int].withDefaultValue(0)
+    val untagged = scala.collection.mutable.ArrayBuffer.empty[String]
     val token = java.util.UUID.randomUUID().toString
     @volatile var flushed = false
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = Option(e.properties).foreach { p =>
-        Option(p.getProperty("streaming.sql.batchId"))
-          .foreach(b => counts.synchronized(counts(b.toLong) += 1))
+        Option(p.getProperty("streaming.sql.batchId")) match {
+          case Some(b) => counts.synchronized(counts(b.toLong) += 1)
+          case None if p.getProperty(FlushKey) != token => untagged.synchronized(
+            untagged += e.stageInfos.headOption.map(_.name).getOrElse(s"job ${e.jobId}"))
+          case None =>
+        }
         if (p.getProperty(FlushKey) == token) flushed = true
       }
     }
@@ -40,7 +51,7 @@ class JobAuditSpec extends SparkSpec {
       while (!flushed && System.nanoTime() < deadline) Thread.sleep(10)
       assert(flushed, "the listener never saw the flush job")
     } finally sc.removeSparkListener(listener)
-    counts.synchronized(counts.toMap)
+    (counts.synchronized(counts.toMap), untagged.synchronized(untagged.toList))
   }
 
   test("a parquet tail epoch submits a pinned number of jobs") {
@@ -78,5 +89,32 @@ class JobAuditSpec extends SparkSpec {
     // the dirty count rides the merge's write job: no probe before it
     assert(withDlq === plain + (2L -> (plain(2L) + 1)))
     assert(spark.read.text(s"$work/dlq/epoch=2").count() === 2L)
+  }
+
+  test("a second stream start over the same plan compiles no new classes") {
+    // the compile counter is JVM-wide and immune to host load: a replay
+    // whose apply path hits the generated-class cache compiles nothing
+    def replay(seed: Long): (Map[Long, Int], Seq[String], Long) = {
+      val work = tmpDir(s"jobs-compile-$seed")
+      Gen.writeChangeLog(spark,
+        Gen.GenConfig(seed = seed, nEvents = 6000L, nConvs = 100L, partitions = 4),
+        s"$work/log", nChunks = 3, filesPerChunk = 2)
+      val t = LakeTable.create(spark, s"$work/lake", Model.keyCols, 4)
+      var compiled = 0L
+      val (jobs, untagged) = auditJobs {
+        val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        CdcPipeline.replayAll(spark, t,
+          CdcPipeline.CdcConfig(s"$work/log", s"$work/cp", maxFilesPerTrigger = 2))
+        compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      }
+      (jobs, untagged, compiled)
+    }
+    replay(7L)
+    val (jobs, untagged, compiled) = replay(8L)
+    assert(compiled === 0L)
+    // the epoch tag is a thread-local job property, not session state: it
+    // still marks every job the rebound micro-batch submits
+    assert(jobs === Map(0L -> 4, 1L -> 4, 2L -> 4))
+    assert(untagged === Nil)
   }
 }

@@ -47,6 +47,56 @@ class ToolsSpec extends AnyFunSuite {
     assert(LakeMaint.usageError(Seq("/t", "tag", "cut-1")).isEmpty)
   }
 
+  test("LakeMaint rejects a non-numeric count, version or lsn up front") {
+    Seq(
+      Seq("expire", "abc"),
+      Seq("vacuum", "abc"),
+      Seq("check", "abc"),
+      Seq("rollback", "abc"),
+      Seq("rebucket", "/dst", "abc"),
+      Seq("tag", "cut-1", "abc"),
+      Seq("tag", "cut-1", "replace", "abc"),
+      Seq("expiresnapshots", "abc"),
+      Seq("stateat", "abc"),
+      Seq("export", "debezium", "/dst", "abc"),
+      Seq("feed", "debezium", "/feed", "abc"),
+      Seq("readtag", "cut-1", "abc"),
+      Seq("asof", "2024-01-01T00:00:00", "abc"),
+      Seq("where", "id = 1", "abc"),
+      Seq("stateat", "5", "abc")
+    ).foreach { a =>
+      val msg = LakeMaint.usageError("/t" +: a)
+      assert(msg.exists(m => m.contains("not a number: 'abc'") &&
+        m.contains(s"usage: LakeMaint <tableRoot> ${a.head}")), a.mkString(" "))
+    }
+    Seq(
+      Seq("expire", "-5"),
+      Seq("vacuum", "3"),
+      Seq("tag", "cut-1", "replace"),
+      Seq("tag", "cut-1", "4", "replace"),
+      Seq("tag", "cut-1", "replace", "4"),
+      Seq("rebucket", "/dst", "16"),
+      Seq("stateat", "5", "10"),
+      Seq("where", "id = 1")
+    ).foreach(a => assert(LakeMaint.usageError("/t" +: a).isEmpty, a.mkString(" ")))
+  }
+
+  test("RunJob.describe prints pure ASCII") {
+    val spec = graft.engine.JobConfig.parse("""{
+      "job": {"setting": {"speed": {"channel": 2}},
+        "content": [{
+          "reader": {"name": "streamreader", "parameter": {"sliceRecordCount": 5,
+            "column": [{"type": "long", "value": "7"}]}},
+          "transformer": [
+            {"name": "dx_replace", "parameter": {"columnIndex": 0, "paras": ["a", "b"]}},
+            {"name": "dx_pad", "parameter": {"columnIndex": 0, "paras": ["left", "4", "0"]}}],
+          "writer": {"name": "streamwriter", "parameter": {"print": false}}}]}}""")
+    val desc = graft.tools.RunJob.describe(graft.engine.JobConfig.translate(spec).head)
+    assert(desc.contains("stream 1 cols x 5 rows x 2 slices"), desc)
+    assert(desc.contains(" -> "), desc)
+    assert(desc.forall(_ < 128), desc)
+  }
+
   test("SparkSession.builder appears only in the session builder, Bench and Verify") {
     val root = Paths.get("src/main/scala")
     val sites = Files.walk(root).iterator().asScala
@@ -54,5 +104,25 @@ class ToolsSpec extends AnyFunSuite {
       .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains("SparkSession.builder"))
       .map(p => root.relativize(p).toString).toSet
     assert(sites === Set("graft/tools/Session.scala", "graft/Bench.scala", "graft/Verify.scala"))
+  }
+
+  test("writeStream and foreachBatch appear only in CdcPipeline.runBatches") {
+    // the one stream sink rebinds each micro-batch to the caller's session;
+    // a second sink would run its batches in the stream's own session and
+    // re-compile its generated classes at every stream start
+    val root = Paths.get("src/main/scala/graft")
+    val hits = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val lines = Files.readAllLines(p).asScala.toIndexedSeq
+        lines.indices.collect {
+          case i if lines(i).contains("writeStream") || lines(i).contains(".foreachBatch {") =>
+            // the enclosing def: the nearest preceding `def` line
+            val owner = lines.take(i + 1).reverseIterator
+              .map(_.trim).find(_.matches("""(private |override )*def .*""")).getOrElse("")
+            s"${root.relativize(p)}:${owner.takeWhile(c => c != '(' && c != '[')}"
+        }
+      }.toSet
+    assert(hits === Set("engine/cdc/CdcPipeline.scala:private def runBatches"))
   }
 }
