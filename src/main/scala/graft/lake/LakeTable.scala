@@ -23,8 +23,9 @@ import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, In
   *
   * Layout:
   * {{{
-  *   <root>/data/b<v>-<bucket>-<n>.parquet          // base files (compacted)
-  *   <root>/data/d<v>-<bucket>-<n>.parquet          // delta files (one merge epoch)
+  *   <root>/data/b<v>-<nonce>-<bucket>-<n>.parquet  // base files (compacted)
+  *   <root>/data/d<v>-<nonce>-<bucket>-<n>.parquet  // delta files (one merge epoch)
+  *   <root>/_staging-<file prefix>/                 // a publish in flight
   *   <root>/_snapshots/snap-<version>.txt           // manifest
   *   <root>/_current                                // pointer: latest version (atomic swap)
   * }}}
@@ -253,8 +254,8 @@ final class LakeTable(
       fileRowsMeta = targetFileRows.getOrElse(0L),
       sortMeta = sortCols)
     fs.mkdirs(new Path(snapDir))
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val body = new Path(s"$snapDir/snap-${s.version}.txt.$nonce")
+    val id = nonce()
+    val body = new Path(s"$snapDir/snap-${s.version}.txt.$id")
     writeString(fs, body, renderSnapshot(s))
     val snapPath = new Path(s"$snapDir/snap-${s.version}.txt")
     if (!atomicClaim(fs, body, snapPath)) {
@@ -267,11 +268,17 @@ final class LakeTable(
     // must not rewind the hint past a newer committed version)
     val cur = if (fs.exists(new Path(pointer))) readString(fs, new Path(pointer)).trim.toLong else -1L
     if (s.version > cur) {
-      val tmp = new Path(s"$pointer.tmp-$nonce")
+      val tmp = new Path(s"$pointer.tmp-$id")
       writeString(fs, tmp, s.version.toString)
       atomicReplace(fs, tmp, new Path(pointer))
     }
   }
+
+  /** A fresh 8-character nonce. Every staging dir, data-file prefix and
+    * temp file a writer names carries one, so no two writers, and no two
+    * attempts of one writer, ever share a name.
+    */
+  private def nonce(): String = java.util.UUID.randomUUID().toString.take(8)
 
   // ---------------------------------------------------------------- read
 
@@ -285,10 +292,20 @@ final class LakeTable(
     * versions remain on disk until [[vacuum]] — Iceberg-style snapshot
     * reads).
     */
-  def readVersion(version: Long): DataFrame = {
+  def readVersion(version: Long): DataFrame =
+    resolved(snapshotAt(version)).drop(LsnCol, OpCol)
+
+  /** The committed manifest of `version`, with one sharp error for a
+    * version that was never committed or has been expired
+    * ([[expireSnapshots]]).
+    */
+  private def snapshotAt(version: Long): Snapshot = manifestAt(version).getOrElse(
+    throw new IllegalArgumentException(s"snapshot version $version does not exist"))
+
+  /** The manifest of `version`, if it exists. */
+  private def manifestAt(version: Long): Option[Snapshot] = {
     val p = new Path(s"$snapDir/snap-$version.txt")
-    require(fs.exists(p), s"snapshot version $version does not exist")
-    resolved(readSnapshot(fs, p, version)).drop(LsnCol, OpCol)
+    if (fs.exists(p)) Some(readSnapshot(fs, p, version)) else None
   }
 
   /** Contents including the internal `_lsn` arbitration column. */
@@ -325,8 +342,7 @@ final class LakeTable(
     require(fromVersion <= toVersion && toVersion <= cur.version,
       s"invalid window ($fromVersion, $toVersion] against current ${cur.version}")
     val snaps = ((fromVersion + 1) to toVersion).map { v =>
-      if (v == cur.version) cur
-      else readSnapshot(fs, new Path(s"$snapDir/snap-$v.txt"), v)
+      if (v == cur.version) cur else snapshotAt(v)
     }
     // versions undone by a rollback commit inside the window contribute no
     // deltas (a rollback BEFORE the window reverted only versions before it)
@@ -367,7 +383,7 @@ final class LakeTable(
     val cur = currentSnapshot()
     require(version <= cur.version, s"cannot roll forward to $version")
     if (version == cur.version) return
-    val target = readSnapshot(fs, new Path(s"$snapDir/snap-$version.txt"), version)
+    val target = snapshotAt(version)
     val missing = target.files.filterNot(f => fs.exists(new Path(s"$dataDir/${f.path}")))
     require(missing.isEmpty,
       s"cannot roll back to $version: ${missing.size} of its data files were " +
@@ -458,11 +474,8 @@ final class LakeTable(
     * choosing V and scanning (the export would otherwise carry changes its
     * own watermark claims not to, duplicating them on the next window).
     */
-  def readChangesBootstrap(version: Long): DataFrame = {
-    val p = new Path(s"$snapDir/snap-$version.txt")
-    require(fs.exists(p), s"snapshot version $version does not exist")
-    readChangesBootstrapAt(readSnapshot(fs, p, version))
-  }
+  def readChangesBootstrap(version: Long): DataFrame =
+    readChangesBootstrapAt(snapshotAt(version))
 
   private def readChangesBootstrapAt(s: Snapshot): DataFrame = {
     if (s.files.isEmpty) {
@@ -625,11 +638,8 @@ final class LakeTable(
     resolved(currentSnapshot(), buckets = Some(buckets)).drop(LsnCol, OpCol)
 
   /** [[readBuckets]] pinned to snapshot `version` (time-travel variant). */
-  def readVersionBuckets(version: Long, buckets: Set[Int]): DataFrame = {
-    val p = new Path(s"$snapDir/snap-$version.txt")
-    require(fs.exists(p), s"snapshot version $version does not exist")
-    resolved(readSnapshot(fs, p, version), buckets = Some(buckets)).drop(LsnCol, OpCol)
-  }
+  def readVersionBuckets(version: Long, buckets: Set[Int]): DataFrame =
+    resolved(snapshotAt(version), buckets = Some(buckets)).drop(LsnCol, OpCol)
 
   /** Buckets the given distribution-key rows route to, computed with the
     * writer's own bucket expression — driver-collected, bounded by
@@ -896,12 +906,8 @@ final class LakeTable(
       tLast = now
     }
 
-    val newVersion = snap.version + 1
-    // staging dirs carry a nonce so concurrent writers of the same epoch
-    // number (independent writerIds) never collide on the staging path
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
     // -- the single write job (dedupe + observe + bucketed delta publish) --
-    val deltas = publish(deltaOut, s"$root/_staging-d-$epoch-$nonce", s"d$newVersion-$nonce", "d",
+    val deltas = publish(deltaOut, s"d${snap.version + 1}-${nonce()}", "d",
       numBuckets, reshuffle = false)
     lap("delta-publish")
     val obs = observed(obsIn)
@@ -989,14 +995,7 @@ final class LakeTable(
     }.map(_._1).toSet
 
     if (toCompact.nonEmpty) {
-      val cSnap = snap.copy(schema = Some(storedNew), files = files)
-      // tombstone winners ride into the new base (_op = D kept) — see
-      // resolvedBucketed: dropping them would un-delete keys on late
-      // re-delivery of older duplicates
-      val compacted = resolvedBucketed(cSnap, toCompact)
-      val newBase = publish(compacted, s"$root/_staging-c-$epoch-$nonce", s"b$newVersion-$nonce", "b",
-        math.max(toCompact.size, 1), reshuffle = false)
-      files = files.filterNot(f => toCompact.contains(f.bucket)) ++ newBase
+      files = rewriteBuckets(snap.copy(schema = Some(storedNew), files = files), toCompact)
       lap(s"compact-${toCompact.size}")
     }
 
@@ -1063,7 +1062,6 @@ final class LakeTable(
     val (out, storedNew, obsIn) = prepareBatch(batch, snap, s"lake-bulk-$epoch")
 
     val newVersion = snap.version + 1
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
     // file-name prefix `s` (seed), manifest kind "b": every kind-driven
     // path (pruning, compaction, resolution) treats these as ordinary base
     // files, but the [[readStreamChanges]] file tail — which must EXCLUDE
@@ -1071,8 +1069,7 @@ final class LakeTable(
     // the seed epoch exactly once via its `{d,s}*` glob. Without the
     // distinct prefix, a tail consumer attached to an onboarded table
     // would permanently miss every seeded key that never changes again.
-    val base = publish(out, s"$root/_staging-bl-$epoch-$nonce",
-      s"s$newVersion-$nonce", "b", numBuckets, reshuffle = false)
+    val base = publish(out, s"s$newVersion-${nonce()}", "b", numBuckets, reshuffle = false)
     val obs = observed(obsIn)
     val rowsDistinct = base.map(_.rows).sum
     val st = MergeStats(epoch, skipped = false, obs.rowsIn, rowsDistinct,
@@ -1094,17 +1091,20 @@ final class LakeTable(
     st
   }
 
-  /** Two-phase publish: write `df` partitioned by bucket into a staging dir,
-    * move files into data/ under collision-proof names, return the entries.
+  /** Two-phase publish: write `df` partitioned by bucket into the staging
+    * dir `_staging-<prefix>`, move the files into data/ as
+    * `<prefix>-<bucket>-<n>.parquet`, return the entries. Every caller's
+    * prefix carries a fresh [[nonce]], so no two publishes share a staging
+    * dir or a data file name.
     */
-  private def publish(df: DataFrame, staging: String, prefix: String, kind: String,
+  private def publish(df: DataFrame, prefix: String, kind: String,
       parallelism: Int, reshuffle: Boolean = true,
       /** COMPUTED clustering expressions overriding `sortCols` for this one
         * publish (the z-order rewrite, [[reclusterZOrder]]): evaluated on
         * the fly for the task-local sort, never stored in the files
         */
       sortExprOverride: Option[Seq[Column]] = None): Seq[FileEntry] = {
-    fs.delete(new Path(staging), true)
+    val staging = s"$root/_staging-$prefix"
     val reparted = if (reshuffle) df.repartition(parallelism, col(BucketCol)) else df
     // under file slicing a reshuffled input (rebucketTo) is additionally
     // key-sorted within partitions so the slices are contiguous key ranges;
@@ -1167,11 +1167,7 @@ final class LakeTable(
       if (fileRows == 0) None // drop empty files
       else {
         val dest = s"$prefix-$bucket-$n.parquet"
-        val destPath = new Path(s"$dataDir/$dest")
-        // a dest can only pre-exist from a dead attempt of this same
-        // (uncommitted) version — overwriting is the recovery path
-        if (fs.exists(destPath)) fs.delete(destPath, false)
-        if (!fs.rename(src, destPath))
+        if (!fs.rename(src, new Path(s"$dataDir/$dest")))
           throw new IllegalStateException(s"rename failed publishing $dest")
         Some(FileEntry(bucket, dest, fileRows, kind, colStats))
       }
@@ -1246,9 +1242,7 @@ final class LakeTable(
     // A snap-0 reclaimed by expireSnapshots is indistinguishable from an
     // untracked birth, so it takes the (correct, just slower) scan branch
     // instead of crashing routine maintenance after routine metadata GC
-    val snap0 = new Path(s"$snapDir/snap-0.txt")
-    val trackedFromBirth = snap.version >= 0 && fs.exists(snap0) &&
-      readSnapshot(fs, snap0, 0L).maxLsn >= 0
+    val trackedFromBirth = snap.version >= 0 && manifestAt(0L).exists(_.maxLsn >= 0)
     if (tracked >= 0 && trackedFromBirth) {
       tracked + 1
     } else {
@@ -1284,12 +1278,11 @@ final class LakeTable(
     val pre = if (preVersion == cur.version) cur
       else if (preVersion < 0) Snapshot(version = -1L, lastEpoch = -1L,
         schema = None, rows = 0L, files = Nil)
-      else readSnapshot(fs, new Path(s"$snapDir/snap-$preVersion.txt"), preVersion)
+      else snapshotAt(preVersion)
     var prevEpoch: Option[Long] = pre.epochs.get(writerId)
     var prevMax = pre.maxLsn
     ((preVersion + 1) to cur.version).exists { v =>
-      val s = if (v == cur.version) cur
-        else readSnapshot(fs, new Path(s"$snapDir/snap-$v.txt"), v)
+      val s = if (v == cur.version) cur else snapshotAt(v)
       val isOurs = s.epochs.get(writerId).contains(epoch) && !prevEpoch.contains(epoch)
       val raced = s.lsnHigh >= opLsn ||
         (s.maxLsn >= opLsn && s.maxLsn > prevMax) // pre-lsnHigh fallback
@@ -1382,16 +1375,43 @@ final class LakeTable(
     */
   def compactAll(): Unit = {
     val snap = currentSnapshot()
-    if (!snap.files.exists(_.kind == "d")) return
     val buckets = snap.files.filter(_.kind == "d").map(_.bucket).toSet
-    val compacted = resolvedBucketed(snap, buckets)
-    val newVersion = snap.version + 1
-    val newBase = publish(compacted, s"$root/_staging-ca-$newVersion", s"b$newVersion-${java.util.UUID.randomUUID().toString.take(8)}", "b",
-      math.max(buckets.size, 1), reshuffle = false)
-    val files = snap.files.filterNot(f => buckets.contains(f.bucket)) ++ newBase
-    commitSnapshot(snap.copy(version = newVersion, rows = files.map(_.rows).sum,
-      files = files, addedDeltas = Nil, lsnHigh = -1L))
+    if (buckets.nonEmpty) commitRewrite(snap, rewriteBuckets(snap, buckets))
   }
+
+  /** The one bucket rewrite behind merge's inline compaction and every
+    * maintenance op: resolve `buckets` of `snap` (LWW winners, tombstone
+    * winners kept — see [[resolvedBucketed]]), drop the rows `keep` rejects,
+    * publish the rest as base files and return `snap.files` with those
+    * buckets' files replaced by the new base. `reshuffle` pins each bucket
+    * to one task for a clustered rewrite of clean buckets ([[recluster]]);
+    * non-empty `zcols` clusters the rewrite by their z-value
+    * ([[reclusterZOrder]]), at the cost of one pass for the bounds.
+    * `buckets` must be non-empty.
+    */
+  private def rewriteBuckets(snap: Snapshot, buckets: Set[Int],
+      keep: Option[Column] = None, reshuffle: Boolean = false,
+      zcols: Seq[String] = Nil): Seq[FileEntry] = {
+    val resolved = resolvedBucketed(snap, buckets)
+    val rows = keep.fold(resolved)(resolved.filter)
+    val zorder =
+      if (zcols.isEmpty) None
+      else Some(Seq(ZOrder.zvalue(zcols, ZOrder.boundsOf(rows, zcols))))
+    val newBase = publish(rows, s"b${snap.version + 1}-${nonce()}", "b", buckets.size,
+      reshuffle, zorder)
+    snap.files.filterNot(f => buckets.contains(f.bucket)) ++ newBase
+  }
+
+  /** Commits a maintenance rewrite of `snap` as the next version: the new
+    * file list, no change window and no ingest stats of its own (an epoch's
+    * [[MergeStats]] ride only the commit that applied it, so [[metrics]]
+    * lists each epoch once). A concurrent commit surfaces as
+    * [[LakeTable.CommitConflictException]]: the rewrite folded a file list
+    * that is no longer the head's, so it is never rebased.
+    */
+  private def commitRewrite(snap: Snapshot, files: Seq[FileEntry]): Unit =
+    commitSnapshot(snap.copy(version = snap.version + 1, rows = files.map(_.rows).sum,
+      files = files, stats = None, addedDeltas = Nil, lsnHigh = -1L))
 
   /** Rewrite EVERY bucket's base through the clustered publish path — the
     * in-place retrofit for [[sortCols]] on a table that already has data
@@ -1416,14 +1436,7 @@ final class LakeTable(
     val snap = currentSnapshot()
     require(snap.version >= 0, "nothing to recluster: no committed snapshot")
     val buckets = snap.files.map(_.bucket).toSet
-    if (buckets.isEmpty) return
-    val resolved = resolvedBucketed(snap, buckets)
-    val newVersion = snap.version + 1
-    val newBase = publish(resolved, s"$root/_staging-rc-$newVersion",
-      s"b$newVersion-${java.util.UUID.randomUUID().toString.take(8)}", "b",
-      buckets.size, reshuffle = true)
-    commitSnapshot(snap.copy(version = newVersion, rows = newBase.map(_.rows).sum,
-      files = newBase, addedDeltas = Nil, lsnHigh = -1L))
+    if (buckets.nonEmpty) commitRewrite(snap, rewriteBuckets(snap, buckets, reshuffle = true))
   }
 
   /** Z-ORDER rewrite: [[recluster]] with the interleaved [[ZOrder]] value of
@@ -1446,16 +1459,8 @@ final class LakeTable(
     val snap = currentSnapshot()
     require(snap.version >= 0, "nothing to recluster: no committed snapshot")
     val buckets = snap.files.map(_.bucket).toSet
-    if (buckets.isEmpty) return
-    val resolved = resolvedBucketed(snap, buckets)
-    val bounds = ZOrder.boundsOf(resolved, zcols)
-    val z = ZOrder.zvalue(zcols, bounds)
-    val newVersion = snap.version + 1
-    val newBase = publish(resolved, s"$root/_staging-rz-$newVersion",
-      s"b$newVersion-${java.util.UUID.randomUUID().toString.take(8)}", "b",
-      buckets.size, reshuffle = true, sortExprOverride = Some(Seq(z)))
-    commitSnapshot(snap.copy(version = newVersion, rows = newBase.map(_.rows).sum,
-      files = newBase, addedDeltas = Nil, lsnHigh = -1L))
+    if (buckets.nonEmpty)
+      commitRewrite(snap, rewriteBuckets(snap, buckets, reshuffle = true, zcols = zcols))
   }
 
   /** Re-bucket the table into a NEW table at `dstRoot` with `newBuckets`
@@ -1488,17 +1493,13 @@ final class LakeTable(
       s"rebucket destination $dstRoot already has committed snapshots")
     val resolvedAll = resolvedBucketed(snap, snap.files.map(_.bucket).toSet)
       .withColumn(BucketCol, pmod(hash(distributionCols.map(col): _*), lit(newBuckets)))
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val base = dst.publish(resolvedAll, s"$dstRoot/_staging-rb-$nonce", s"b0-$nonce", "b",
-      newBuckets, reshuffle = true)
+    val base = dst.publish(resolvedAll, s"b0-${nonce()}", "b", newBuckets, reshuffle = true)
     // stamp the destination's birth maxLsn ONLY if the source's running max
     // is COMPLETE (tracked since ITS version 0): a partial running max
     // copied into the new table's snap-0 would make nextSyntheticLsn trust
     // it ("tracked from birth") and mint maintenance lsns BELOW stored
     // rows' _lsn — a deleteWhere that silently loses LWW to old rows
-    val srcSnap0 = new Path(s"$snapDir/snap-0.txt")
-    val maxLsnComplete = fs.exists(srcSnap0) &&
-      readSnapshot(fs, srcSnap0, 0L).maxLsn >= 0
+    val maxLsnComplete = manifestAt(0L).exists(_.maxLsn >= 0)
     dst.commitSnapshot(Snapshot(
       version = 0L,
       lastEpoch = snap.lastEpoch,
@@ -1532,15 +1533,8 @@ final class LakeTable(
       .collect().map(_.getString(0)).toSet
     val buckets = snap.files
       .filter(f => hot.exists(_.endsWith("/" + f.path))).map(_.bucket).toSet
-    if (buckets.isEmpty) return
-    val kept = resolvedBucketed(snap, buckets)
-      .filter(coalesce(col(OpCol), lit("U")) =!= "D" || col(LsnCol) >= horizonLsn)
-    val newVersion = snap.version + 1
-    val newBase = publish(kept, s"$root/_staging-tg-$newVersion", s"b$newVersion-${java.util.UUID.randomUUID().toString.take(8)}", "b",
-      math.max(buckets.size, 1), reshuffle = false)
-    val files = snap.files.filterNot(f => buckets.contains(f.bucket)) ++ newBase
-    commitSnapshot(snap.copy(version = newVersion, rows = files.map(_.rows).sum,
-      files = files, addedDeltas = Nil, lsnHigh = -1L))
+    if (buckets.nonEmpty) commitRewrite(snap, rewriteBuckets(snap, buckets, keep = Some(
+      coalesce(col(OpCol), lit("U")) =!= "D" || col(LsnCol) >= horizonLsn)))
   }
 
   /** Remove data files referenced by neither the current snapshot nor the
@@ -1593,10 +1587,7 @@ final class LakeTable(
     */
   private def retainedDeltaPaths(cur: Snapshot, retainVersions: Int): Seq[String] =
     (math.max(0L, cur.version - retainVersions + 1) to cur.version)
-      .flatMap { v =>
-        val p = new Path(s"$snapDir/snap-$v.txt")
-        if (fs.exists(p)) readSnapshot(fs, p, v).addedDeltas.map(_.path) else Nil
-      }
+      .flatMap(v => manifestAt(v).toSeq.flatMap(_.addedDeltas.map(_.path)))
 
   /** Time travel by WALL-CLOCK commit time (Iceberg `TIMESTAMP AS OF`
     * analog): the newest committed version whose commit time is ≤ `ts`.
@@ -1658,7 +1649,7 @@ final class LakeTable(
     require(replace || !fs.exists(ref),
       s"tag '$name' already exists (at version ${readString(fs, ref).trim}) — " +
         "pass replace=true to re-point it")
-    val tmp = new Path(s"$refsDir/.$name.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
+    val tmp = new Path(s"$refsDir/.$name.tmp-${nonce()}")
     writeString(fs, tmp, v.toString)
     LakeTable.atomicReplace(fs, tmp, ref)
     v
@@ -1705,11 +1696,7 @@ final class LakeTable(
     * pins nothing, rather than failing every later maintenance run.
     */
   private def taggedFilePaths(): Set[String] =
-    tags().values.toSet.flatMap { (v: Long) =>
-      val p = new Path(s"$snapDir/snap-$v.txt")
-      if (fs.exists(p)) readSnapshot(fs, p, v).files.map(_.path).toSet
-      else Set.empty[String]
-    }
+    tags().values.toSet.flatMap((v: Long) => manifestAt(v).toSeq.flatMap(_.files.map(_.path)))
 
   /** Metadata consistency check (the ops `fsck`): verifies every file the
     * CURRENT snapshot references exists with the manifest's row count
@@ -1786,7 +1773,7 @@ final class LakeTable(
     // surviving manifests
     val hint = readString(fs, new Path(pointer)).trim.toLong
     if (hint < cur.version) {
-      val tmp = new Path(s"$pointer.tmp-exp${java.util.UUID.randomUUID().toString.take(8)}")
+      val tmp = new Path(s"$pointer.tmp-exp${nonce()}")
       writeString(fs, tmp, cur.version.toString)
       LakeTable.atomicReplace(fs, tmp, new Path(pointer))
     }
@@ -1799,10 +1786,12 @@ final class LakeTable(
     n
   }
 
-  /** Remove `_staging-*` dirs abandoned by CRASHED publishes — a two-phase
-    * publish cleans its own staging on entry and exit, but the nonce'd path
-    * of a dead attempt is never retried, so without this sweep every crash
-    * leaks a staging tree forever (at 100 TB scale, a real storage leak).
+  /** Remove `_staging-*` dirs abandoned by CRASHED publishes. Every staging
+    * path is nonce'd (`_staging-<prefix>`, the prefix carrying a fresh
+    * [[nonce]]), so a publish never reuses another's dir and cleans only its
+    * own on exit; a dead attempt's dir is never retried, so without this
+    * sweep every crash leaks a staging tree forever (at 100 TB scale, a real
+    * storage leak).
     * Age-gated on the NEWEST modification time anywhere in the subtree: a
     * LIVE publish touches files continuously, so only a writer silent for
     * `staleHours` (default 24 — stalled that long, its commit has lost any
@@ -1838,9 +1827,12 @@ final class LakeTable(
 object LakeTable {
 
   /** Another writer claimed the snapshot version this commit targeted.
-    * [[LakeTable#merge]] rebases and retries automatically; maintenance
-    * operations ([[LakeTable#compactAll]], [[LakeTable#expireTombstones]])
-    * surface it — run them single-writer or retry at the call site.
+    * [[LakeTable#merge]] rebases and retries automatically; every other
+    * committer surfaces it — [[LakeTable#compactAll]],
+    * [[LakeTable#recluster]], [[LakeTable#reclusterZOrder]],
+    * [[LakeTable#expireTombstones]], [[LakeTable#rollbackTo]] and
+    * [[LakeTable#bulkLoad]] — run them single-writer or retry at the call
+    * site.
     */
   final class CommitConflictException(msg: String) extends RuntimeException(msg)
 

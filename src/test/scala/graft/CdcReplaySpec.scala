@@ -411,6 +411,13 @@ class CdcReplaySpec extends SparkSpec {
     table.vacuum()
     val e = intercept[IllegalArgumentException] { table.rollbackTo(goodVersion + 1) }
     assert(e.getMessage.contains("vacuumed"))
+    // a version that never existed, or whose manifest expired, is refused
+    // sharply and by name
+    val never = intercept[IllegalArgumentException] { table.rollbackTo(-1L) }
+    assert(never.getMessage.contains("snapshot version -1 does not exist"))
+    assert(table.expireSnapshots(retainVersions = 2) > 0)
+    val expired = intercept[IllegalArgumentException] { table.rollbackTo(goodVersion) }
+    assert(expired.getMessage.contains(s"snapshot version $goodVersion does not exist"))
     events.unpersist()
     ()
   }
@@ -558,6 +565,65 @@ class CdcReplaySpec extends SparkSpec {
     val v = table.currentSnapshot().version
     table.expireTombstones(horizonLsn = 2000L)
     assert(table.currentSnapshot().version === v, "empty GC must not commit")
+  }
+
+  /** Three merges into 8 buckets: 64 inserts, then a delete of `conv-3` at
+    * lsn 1000 and an update of `conv-5` at lsn 1001, both left as deltas.
+    */
+  private def threeEpochTable(name: String, targetFileRows: Option[Long] = None): LakeTable = {
+    import spark.implicits._
+    val table = LakeTable.create(spark, tmpDir(name), Model.keyCols, numBuckets = 8,
+      targetFileRows = targetFileRows)
+    val ts = new java.sql.Timestamp(1704067200000L)
+    def ev(op: String, lsn: Long, conv: String) =
+      Model.ChangeEvent(op, lsn, ts, conv, 0,
+        if (op == "D") None else Some("user"),
+        if (op == "D") None else Some(s"text-$conv-$lsn"), None)
+    table.merge((0 until 64).map(i => ev("I", i + 1L, s"conv-$i")).toDF(), 0L)
+    table.merge(Seq(ev("D", 1000L, "conv-3")).toDF(), 1L)
+    table.merge(Seq(ev("U", 1001L, "conv-5")).toDF(), 2L)
+    table
+  }
+
+  test("maintenance commits add no metrics rows: one row per merged epoch") {
+    val table = threeEpochTable("lake-mstats")
+    val v = table.currentSnapshot().version
+    table.compactAll()
+    table.expireTombstones(horizonLsn = 2000L)
+    table.recluster()
+    assert(table.currentSnapshot().version === v + 3, "every op must commit")
+    assert(table.metrics().orderBy("epoch").collect().map(_.getAs[Long]("epoch")).toSeq ===
+      Seq(0L, 1L, 2L))
+    assert(table.read().count() === 63L)
+  }
+
+  test("maintenance staging never collides with another writer's staging dir") {
+    val table = threeEpochTable("lake-mstage", targetFileRows = Some(4L))
+    val fs = new org.apache.hadoop.fs.Path(table.root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def stagingDirs(): Set[String] = fs.listStatus(new org.apache.hadoop.fs.Path(table.root))
+      .filter(f => f.isDirectory && f.getPath.getName.startsWith("_staging-"))
+      .map(_.getPath.getName).toSet
+    val ops = Seq[(String, () => Unit)](
+      "ca" -> (() => table.compactAll()),
+      "tg" -> (() => table.expireTombstones(horizonLsn = 2000L)),
+      "rc" -> (() => table.recluster()),
+      "rz" -> (() => table.reclusterZOrder(Seq("turn_idx", "ts"))))
+    val planted = ops.map { case (tag, op) =>
+      // a concurrent writer's fresh staging dir under the name a
+      // version-keyed scheme would give this op
+      val v = table.currentSnapshot().version
+      val dir = new org.apache.hadoop.fs.Path(s"${table.root}/_staging-$tag-${v + 1}")
+      val file = new org.apache.hadoop.fs.Path(dir, "part-0.parquet")
+      fs.mkdirs(dir)
+      fs.create(file).close()
+      op()
+      assert(table.currentSnapshot().version === v + 1, s"$tag must commit")
+      assert(fs.exists(file), s"$tag deleted another writer's staging dir")
+      dir.getName
+    }
+    assert(stagingDirs() === planted.toSet, "an op left its own staging dir behind")
+    assert(table.read().count() === 63L)
   }
 
   test("incremental CDC-out: readChangesSince yields the window's LWW change set") {

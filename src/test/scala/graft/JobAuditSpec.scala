@@ -91,6 +91,34 @@ class JobAuditSpec extends SparkSpec {
     assert(spark.read.text(s"$work/dlq/epoch=2").count() === 2L)
   }
 
+  test("each maintenance op submits a pinned number of jobs") {
+    import spark.implicits._
+    val gen = Gen.GenConfig(nEvents = 6000L, nConvs = 100L, partitions = 4)
+    val events = Gen.changeEvents(spark, gen).toDF().cache()
+    val t = LakeTable.create(spark, tmpDir("jobs-maint"), Model.keyCols, 4,
+      targetFileRows = Some(500L))
+    // a large first epoch compacts every bucket; the small second one stays
+    // as deltas for compactAll to fold
+    t.merge(events.filter($"lsn" < 5400L), 0L)
+    t.merge(events.filter($"lsn" >= 5400L), 1L)
+    val horizon = t.currentSnapshot().maxLsn + 1
+    def jobs(op: => Unit): Int = {
+      val v = t.currentSnapshot().version
+      val (epochs, untagged) = auditJobs(op)
+      assert(epochs.isEmpty)
+      assert(t.currentSnapshot().version === v + 1, "the op must commit")
+      untagged.size
+    }
+    val counts = Seq(
+      "compactAll" -> jobs(t.compactAll()),
+      "expireTombstones" -> jobs(t.expireTombstones(horizon)),
+      "recluster" -> jobs(t.recluster()),
+      "reclusterZOrder" -> jobs(t.reclusterZOrder(Seq("turn_idx", "ts"))))
+    events.unpersist()
+    assert(counts === Seq("compactAll" -> 2, "expireTombstones" -> 3,
+      "recluster" -> 2, "reclusterZOrder" -> 4))
+  }
+
   test("a second stream start over the same plan compiles no new classes") {
     // the compile counter is JVM-wide and immune to host load: a replay
     // whose apply path hits the generated-class cache compiles nothing

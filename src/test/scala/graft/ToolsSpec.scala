@@ -106,6 +106,31 @@ class ToolsSpec extends AnyFunSuite {
     assert(sites === Set("graft/tools/Session.scala", "graft/Bench.scala", "graft/Verify.scala"))
   }
 
+  test("a _staging- path is named only in LakeTable.publish") {
+    // publish derives its staging dir from a nonce'd file prefix; a staging
+    // name built anywhere else (e.g. keyed by version) could be shared by
+    // two writers, and one would delete the other's files. The sweep and
+    // fsck only test the prefix.
+    val root = Paths.get("src/main/scala/graft")
+    val hits = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val lines = Files.readAllLines(p).asScala.toIndexedSeq
+        lines.indices.collect {
+          case i if lines(i).contains("_staging-") && lines(i).contains("\"") &&
+              !lines(i).trim.startsWith("*") && !lines(i).trim.startsWith("//") =>
+            // the enclosing member: the nearest preceding top-level `def`
+            val owner = lines.take(i + 1).reverseIterator
+              .find(_.matches("""  (private |override )*def .*""")).map(_.trim).getOrElse("")
+            s"${root.relativize(p)}:${owner.takeWhile(c => c != '(' && c != '[')}"
+        }
+      }.toSet
+    assert(hits === Set(
+      "lake/LakeTable.scala:private def publish",
+      "lake/LakeTable.scala:def sweepStaleStaging",
+      "lake/LakeTable.scala:def fsck"))
+  }
+
   test("writeStream and foreachBatch appear only in CdcPipeline.runBatches") {
     // the one stream sink rebinds each micro-batch to the caller's session;
     // a second sink would run its batches in the stream's own session and
