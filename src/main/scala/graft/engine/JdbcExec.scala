@@ -369,7 +369,8 @@ object JdbcExec {
     (upserts.value, deletes.value)
   }
 
-  private def connect(url: String, props: Map[String, String]): Connection = {
+  /** A connection with the `user`/`password` of `props` (others ignored). */
+  def connect(url: String, props: Map[String, String]): Connection = {
     val p = new Properties()
     props.filter { case (k, v) => (k == "user" || k == "password") && v.nonEmpty }
       .foreach { case (k, v) => p.setProperty(k, v) }

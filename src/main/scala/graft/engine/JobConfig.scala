@@ -158,7 +158,8 @@ object JobConfig {
       payload: Option[org.apache.spark.sql.types.StructType] = None,
       /** initial-snapshot onboarding: before the tail starts, the nested
         * batch reader loads the source's consistent state and it merges as
-        * one insert epoch stamped `lsn` ([[graft.engine.cdc.CdcPipeline.bootstrap]])
+        * one insert epoch stamped `lsn` ([[graft.engine.cdc.CdcPipeline.bootstrap]]);
+        * [[translate]] moves it onto the lakewriter's [[LakeDest]]
         */
       bootstrap: Option[CdcBootstrap] = None,
       /** single-table filter over a MULTI-TABLE envelope stream
@@ -246,12 +247,13 @@ object JobConfig {
       session: Seq[String], preSql: Seq[String], postSql: Seq[String],
       props: Map[String, String]) extends WriterPlan
   /** lakewriter (graft-native extension): MERGE-apply the paired
-    * [[CdcRead]]'s change events into the snapshot-committed lake table at
-    * `root`. An existing table is opened with its manifest layout;
-    * `primaryKey`/`buckets` are the create-time layout for a fresh table.
+    * [[CdcRead]]'s change events into one lake table (`target` Left) or,
+    * with `routes` set, fan the stream out into one lake table per route
+    * (`target` Right, [[graft.engine.cdc.CdcPipeline.startRouted]]). The
+    * remaining fields are stream-level: they apply to every destination.
     */
-  final case class LakeWrite(root: String, keyCols: Seq[String], buckets: Int,
-      writerId: String, vacuumEvery: Int, vacuumRetainVersions: Int,
+  final case class LakeWrite(target: Either[LakeDest, Seq[RouteSpec]],
+      vacuumEvery: Int = 0, vacuumRetainVersions: Int = 8,
       /** GC tombstones every N epochs / keep those within `retainLsns` of
         * the max applied lsn — the source's re-delivery horizon
         * ([[graft.engine.cdc.CdcPipeline.CdcConfig.expireTombstonesEvery]])
@@ -266,6 +268,19 @@ object JobConfig {
       tagEvery: Int = 0,
       tagPrefix: String = "epoch-",
       tagKeep: Int = 8,
+      /** routed mode: max routes whose merges overlap within one epoch
+        * (`routeParallelism`; 1 = sequential) — see
+        * [[graft.engine.cdc.CdcPipeline.CdcConfig.routeParallelism]]
+        */
+      routeParallelism: Int = 1) extends WriterPlan {
+    def dests: Seq[LakeDest] = target.fold(Seq(_), _.map(_.dest))
+  }
+
+  /** One lake destination — the lakewriter's own table or one `routes`
+    * entry. An existing table is opened with its manifest layout;
+    * `primaryKey`/`buckets` are the create-time layout for a fresh table.
+    */
+  final case class LakeDest(root: String, keyCols: Seq[String], buckets: Int,
       /** optional distribution-key subset (`distributionColumns`) — bucket
         * on a key prefix for group locality ([[graft.lake.LakeTable.distCols]])
         */
@@ -281,23 +296,18 @@ object JobConfig {
         * ([[graft.lake.LakeTable.sortCols]]; needs `targetFileRows`)
         */
       sortCols: Seq[String] = Nil,
+      writerId: String = graft.lake.LakeTable.DefaultWriter,
       /** downstream tables co-maintained per streaming epoch (`followers`)
         * — replicas (no aggregations) or rollups (aggregations set, the
         * follower's `primaryKey` are the group columns); see
         * [[graft.engine.cdc.CdcPipeline.Follower]]
         */
       followers: Seq[FollowerSpec] = Nil,
-      /** MULTI-TABLE demultiplex: with `routes` set the paired cdcreader's
-        * stream fans out into one lake table per route
-        * ([[graft.engine.cdc.CdcPipeline.startRouted]]); the lakewriter's
-        * own `path`/`primaryKey` are then omitted
+      /** initial-snapshot onboarding before the tail starts (the
+        * cdcreader's `bootstrap` for the single-table writer, a route's own
+        * `bootstrap` otherwise; see [[graft.engine.cdc.CdcPipeline.bootstrap]])
         */
-      routes: Seq[RouteSpec] = Nil,
-      /** routed mode: max routes whose merges overlap within one epoch
-        * (`routeParallelism`; 1 = sequential) — see
-        * [[graft.engine.cdc.CdcPipeline.CdcConfig.routeParallelism]]
-        */
-      routeParallelism: Int = 1) extends WriterPlan
+      bootstrap: Option[CdcBootstrap] = None)
 
   /** one `followers` entry on a lakewriter (the streaming analog of a
     * standalone lakereader→lakewriter job, sharing its config shape).
@@ -330,23 +340,11 @@ object JobConfig {
 
   /** one `routes` entry on a lakewriter — a destination of the MULTI-TABLE
     * demultiplex ([[graft.engine.cdc.CdcPipeline.Route]]): envelopes whose
-    * table metadata matches `table` merge into the lake table at `root`
-    * with their OWN payload schema (`column` typed specs; omitted ⇒ the
-    * transcript shape)
+    * table metadata matches `table` merge into `dest` with their OWN
+    * payload schema (`column` typed specs; omitted ⇒ the transcript shape)
     */
-  final case class RouteSpec(table: String, root: String,
-      keyCols: Seq[String], buckets: Int, distCols: Seq[String],
-      targetFileRows: Option[Long], sortCols: Seq[String], writerId: String,
-      payload: Option[org.apache.spark.sql.types.StructType],
-      /** per-destination downstreams co-maintained each epoch (same shape
-        * as the lakewriter's own `followers`)
-        */
-      followers: Seq[FollowerSpec] = Nil,
-      /** per-destination initial-snapshot onboarding (`{lsn, reader}` —
-        * each routed table full-loads from its OWN batch source before the
-        * shared tail starts; see [[graft.engine.cdc.CdcPipeline.bootstrap]])
-        */
-      bootstrap: Option[CdcBootstrap] = None)
+  final case class RouteSpec(table: String,
+      payload: Option[org.apache.spark.sql.types.StructType], dest: LakeDest)
 
   final case class Translated(
       reader: ReaderPlan,
@@ -361,38 +359,35 @@ object JobConfig {
     // the streaming pair is all-or-nothing: change events only make sense
     // MERGE-applied by key, and the lake sink only accepts change events
     // (or a lakereader's replication/rollup window)
-    (reader, writer) match {
+    val (r, w) = (reader, writer) match {
       case (cr: CdcRead, lw: LakeWrite) =>
         require(c.transforms.isEmpty,
           "cdcreader content takes no transformer chain — change events are " +
             "applied verbatim (transform downstream of the lake table instead)")
-        if (lw.routes.nonEmpty) {
-          require(cr.format != "parquet",
-            "lakewriter routes read envelope table metadata — parquet " +
-              "change logs carry none (run one content per table instead)")
-          require(cr.tableFilter.isEmpty,
-            "cdcreader table filter and lakewriter routes are exclusive — " +
-              "routes already scope each destination to its table")
-          require(cr.bootstrap.isEmpty,
-            "bootstrap onboarding targets a single-table lakewriter — " +
-              "onboard each routed destination with its own job, then " +
-              "start the routed tail")
-          require(cr.payload.isEmpty,
-            "a routed cdcreader takes no top-level column specs — each " +
-              "route carries its own payload schema")
-          // same ambiguity rule as CdcPipeline.startRouted: a bare table
-          // name matches any database, so it may not coexist with another
-          // route of the same table
-          val byPart = lw.routes.groupBy(r =>
-            graft.sources.CdcEnvelope.refTablePart(r.table))
-          val overlap = byPart.collect {
-            case (t, rs) if rs.size > 1 &&
-              (rs.map(_.table).distinct.size < rs.size ||
-                rs.exists(!_.table.contains('.'))) => t
-          }
-          require(overlap.isEmpty,
-            s"overlapping route table(s): ${overlap.mkString(", ")} — " +
-              "qualify both as db.table, or drop the duplicate")
+        lw.target match {
+          // the single-table writer onboards from the cdcreader's
+          // bootstrap: the plan carries it on the destination it seeds
+          case Left(d) =>
+            (cr.copy(bootstrap = None), lw.copy(target = Left(d.copy(bootstrap = cr.bootstrap))))
+          case Right(routes) =>
+            require(cr.format != "parquet",
+              "lakewriter routes read envelope table metadata — parquet " +
+                "change logs carry none (run one content per table instead)")
+            require(cr.tableFilter.isEmpty,
+              "cdcreader table filter and lakewriter routes are exclusive — " +
+                "routes already scope each destination to its table")
+            require(cr.bootstrap.isEmpty,
+              "bootstrap onboarding targets a single-table lakewriter — " +
+                "onboard each routed destination with its own job, then " +
+                "start the routed tail")
+            require(cr.payload.isEmpty,
+              "a routed cdcreader takes no top-level column specs — each " +
+                "route carries its own payload schema")
+            // the routed tail's own rule, checked before any destination
+            // is opened or onboarded
+            graft.engine.cdc.CdcPipeline.validateRoutes(
+              routes.map(r => (r.table, r.dest.root, r.dest.writerId)))
+            (cr, lw)
         }
       case (cr: CdcRead, jw: JdbcWrite) =>
         // live-database destination: the streaming MERGE-apply
@@ -412,10 +407,11 @@ object JobConfig {
           "clickhouse has no conflict clause and no standard DELETE (dedup " +
             "is engine-side ReplacingMergeTree) — land the stream in a lake " +
             "table and export, instead of the per-key CDC apply")
+        (cr, jw)
       case (_: CdcRead, _) => throw new IllegalArgumentException(
         s"cdcreader must pair with lakewriter or an RDBMS writer (got ${c.writerName})")
       case (lr: LakeRead, lw: LakeWrite) =>
-        require(lw.routes.isEmpty,
+        require(lw.target.isLeft,
           "lakewriter routes demultiplex a cdcreader envelope stream — a " +
             "lakereader source is single-table (run one content per " +
             "destination instead)")
@@ -423,7 +419,7 @@ object JobConfig {
           "lakereader→lakewriter content takes no transformer chain — the " +
             "change window is applied verbatim (transform downstream, or " +
             "export through a file/jdbc writer instead)")
-        require(lw.followers.isEmpty,
+        require(lw.dests.forall(_.followers.isEmpty),
           "followers are a streaming (cdcreader→lakewriter) feature — for a " +
             "batch lake→lake chain, run one lakereader job per destination")
         require(lr.where.isEmpty && lr.columns.isEmpty,
@@ -434,6 +430,7 @@ object JobConfig {
           "lakereader fromVersion is a CDC-out export feature — a " +
             "lakewriter destination already ships the incremental window " +
             "(Replicate.sync watermarks on the destination's epoch lineage)")
+        (lr, lw)
       case (lr: LakeRead, _) =>
         require(lr.aggregations.isEmpty,
           s"lakereader aggregations need a lakewriter destination (the " +
@@ -443,16 +440,13 @@ object JobConfig {
           "a change export (fromVersion) ships the window verbatim — " +
             "where/column apply to state exports only (a filtered feed would " +
             "drop tombstones whose payload is null)")
+        (lr, writer)
       case (_, _: LakeWrite) => throw new IllegalArgumentException(
         s"lakewriter must pair with cdcreader or lakereader (got ${c.readerName})")
-      case _ => ()
+      case rw => rw
     }
-    Translated(
-      reader = reader,
-      transforms = c.transforms,
-      writer = writer,
-      errorLimit = spec.errorLimit,
-      channel = spec.channel)
+    Translated(reader = r, transforms = c.transforms, writer = w,
+      errorLimit = spec.errorLimit, channel = spec.channel)
   }
 
   /** Plugins that exist in the reference but cannot run here (zero-egress
@@ -766,6 +760,27 @@ object JobConfig {
       }
     }
 
+  /** One lake destination's keys — shared by the lakewriter and by its
+    * `routes` entries.
+    */
+  private def parseDest(p: Conf, what: String,
+      bootstrap: Option[CdcBootstrap]): LakeDest = {
+    val targetFileRows = Some(p.long("targetFileRows", 0L)).filter(_ > 0L)
+    val sortCols = p.strList("sortColumns")
+    require(sortCols.isEmpty || targetFileRows.nonEmpty,
+      s"$what sortColumns needs targetFileRows — clustering only " +
+        "tightens bounds when buckets slice into multiple files")
+    LakeDest(p.str("path"),
+      keyCols = p.strList("primaryKey"),
+      buckets = p.int("buckets", 32),
+      distCols = p.strList("distributionColumns"),
+      targetFileRows = targetFileRows,
+      sortCols = sortCols,
+      writerId = p.str("writerId", graft.lake.LakeTable.DefaultWriter),
+      followers = parseFollowers(p),
+      bootstrap = bootstrap)
+  }
+
   def translateWriter(name: String, p: Conf, channel: Int = 1): WriterPlan = name match {
     case "streamwriter" =>
       StreamWrite(p.str("fieldDelimiter", "\t"), p.bool("print"))
@@ -846,7 +861,6 @@ object JobConfig {
         header = Nil, preSql = Nil, postSql = Nil)
 
     case "lakewriter" =>
-      val root = p.str("path")
       // multi-table demultiplex: each route is its own destination table
       // with its own layout and payload schema (column typed specs)
       val routes = p.listConf("routes").map { r =>
@@ -857,37 +871,21 @@ object JobConfig {
           s"route ${r.str("table")}: primaryKey is required — a routed " +
             "destination carries its own payload shape, so there is no " +
             "sensible default merge key")
-        val payload = parsePayloadSchema(r, "route")
-        val sc = r.strList("sortColumns")
-        require(sc.isEmpty || r.long("targetFileRows", 0L) > 0L,
-          "route sortColumns needs targetFileRows — clustering only " +
-            "tightens bounds when buckets slice into multiple files")
-        RouteSpec(r.str("table"), r.str("path"),
-          keyCols = r.strList("primaryKey"),
-          buckets = r.int("buckets", 32),
-          distCols = r.strList("distributionColumns"),
-          targetFileRows = Some(r.long("targetFileRows", 0L)).filter(_ > 0L),
-          sortCols = sc,
-          writerId = r.str("writerId", graft.lake.LakeTable.DefaultWriter),
-          payload = payload,
-          followers = parseFollowers(r),
-          bootstrap = parseBootstrap(r, channel))
+        RouteSpec(r.str("table"), parsePayloadSchema(r, "route"),
+          parseDest(r, "route", parseBootstrap(r, channel)))
       }
-      require(root.nonEmpty || routes.nonEmpty,
+      // the single-table writer's bootstrap is the cdcreader's (translate)
+      val own = parseDest(p, "lakewriter", bootstrap = None)
+      require(own.root.nonEmpty || routes.nonEmpty,
         "lakewriter: path (the lake table root) is required (or 'routes' " +
           "for a multi-table demultiplex)")
-      require(root.isEmpty || routes.isEmpty,
+      require(own.root.isEmpty || routes.isEmpty,
         "lakewriter: path and routes are exclusive — a routed writer's " +
           "destinations are the route entries")
-      if (routes.nonEmpty) {
-        require(p.listConf("followers").isEmpty,
-          "a routed lakewriter takes no top-level followers — put each " +
-            "follower on its route entry (routes[].followers)")
-      }
-      LakeWrite(root,
-        keyCols = p.strList("primaryKey"),
-        buckets = p.int("buckets", 32),
-        writerId = p.str("writerId", graft.lake.LakeTable.DefaultWriter),
+      require(routes.isEmpty || own.followers.isEmpty,
+        "a routed lakewriter takes no top-level followers — put each " +
+          "follower on its route entry (routes[].followers)")
+      val lw = LakeWrite(if (routes.isEmpty) Left(own) else Right(routes),
         vacuumEvery = p.int("vacuumEvery", 0),
         vacuumRetainVersions = p.int("vacuumRetainVersions", 8),
         expireTombstonesEvery = {
@@ -900,32 +898,12 @@ object JobConfig {
         },
         tombstoneRetainLsns = p.long("tombstoneRetainLsns", 0L),
         tagEvery = p.int("tagEvery", 0),
-        tagPrefix = {
-          // fail at PLAN time, not inside the stream's first cadence epoch
-          // (LakeTable.tag's name rule would otherwise throw in foreachBatch
-          // and the deterministic failure replays forever)
-          val pre = p.str("tagPrefix", "epoch-")
-          require(pre.forall(c =>
-              c.toInt < 128 && (c.isLetterOrDigit || c == '.' || c == '_' || c == '-')),
-            s"lakewriter tagPrefix '$pre' must be [A-Za-z0-9._-]* " +
-              "(it becomes part of a tag ref file name)")
-          pre
-        },
+        tagPrefix = p.str("tagPrefix", "epoch-"),
         tagKeep = {
           val k = p.int("tagKeep", 8)
           require(k >= 1, s"lakewriter tagKeep must be >= 1 (got $k)")
           k
         },
-        distCols = p.strList("distributionColumns"),
-        targetFileRows = Some(p.long("targetFileRows", 0L)).filter(_ > 0L),
-        sortCols = {
-          val sc = p.strList("sortColumns")
-          require(sc.isEmpty || p.long("targetFileRows", 0L) > 0L,
-            "lakewriter sortColumns needs targetFileRows — clustering only " +
-              "tightens bounds when buckets slice into multiple files")
-          sc
-        },
-        routes = routes,
         routeParallelism = {
           val n = p.int("routeParallelism", 1)
           require(n >= 1, s"lakewriter routeParallelism must be >= 1 (got $n)")
@@ -933,8 +911,19 @@ object JobConfig {
             "lakewriter routeParallelism applies to routed (multi-table) " +
               "writers only")
           n
-        },
-        followers = parseFollowers(p))
+        })
+      // fail at PLAN time, not inside the stream's first cadence epoch
+      // (LakeTable.tag's name rule would otherwise throw in foreachBatch and
+      // the deterministic failure replays forever): the prefix always, and
+      // every destination's writerId once the ring is on
+      require(graft.lake.LakeTable.tagSafe(lw.tagPrefix),
+        s"lakewriter tagPrefix '${lw.tagPrefix}' must be [A-Za-z0-9._-]* " +
+          "(it becomes part of a tag ref file name)")
+      if (lw.tagEvery > 0) lw.dests.foreach(d =>
+        require(graft.lake.LakeTable.tagSafe(d.writerId),
+          s"lakewriter writerId '${d.writerId}' must be [A-Za-z0-9._-]* with " +
+            "tagEvery set (it becomes part of the auto-tag ref file names)"))
+      lw
 
     case w if outOfScope.contains(w) => throw new UnsupportedPlugin(w, outOfScope(w))
 

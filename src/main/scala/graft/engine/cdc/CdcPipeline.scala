@@ -272,8 +272,7 @@ object CdcPipeline {
     */
   private def validateRing(cfg: CdcConfig, writerIds: Seq[String]): Unit =
     if (cfg.tagEvery > 0) (cfg.tagPrefix +: writerIds).foreach { s =>
-      require(s.forall(c =>
-          c.toInt < 128 && (c.isLetterOrDigit || c == '.' || c == '_' || c == '-')),
+      require(LakeTable.tagSafe(s),
         s"auto-tag ring: '$s' must be [A-Za-z0-9._-]* — tagPrefix and " +
           "writerId become part of tag ref file names")
     }
@@ -497,6 +496,31 @@ object CdcPipeline {
         */
       followers: Seq[Follower] = Nil)
 
+  /** The routed tail's plan rule over `(table ref, destination root,
+    * writerId)` triples, checked by [[startRouted]] and by the job spec's
+    * translate (before any destination is opened). Two routes may not claim
+    * the same envelopes: exact duplicates aside, a BARE route ("orders")
+    * matches its table under ANY database, so it overlaps every qualified
+    * route of that table ("shop.orders"). And two routes may not share a
+    * `(destination, writerId)` epoch lineage, or one would skip the
+    * other's epochs.
+    */
+  def validateRoutes(routes: Seq[(String, String, String)]): Unit = {
+    val overlap = routes.map(_._1).groupBy(graft.sources.CdcEnvelope.refTablePart).collect {
+      case (t, ts) if ts.size > 1 && (ts.distinct.size < ts.size || ts.exists(!_.contains('.'))) => t
+    }
+    require(overlap.isEmpty,
+      s"overlapping route table(s) on ${overlap.mkString(", ")} — a bare " +
+        "table name matches any database, so it cannot coexist with " +
+        "another route of the same table (qualify both as db.table), and " +
+        "one destination per table (a second consumer is its own stream)")
+    val destDup = routes.groupBy { case (_, root, writerId) => (root, writerId) }
+      .collect { case (k, rs) if rs.size > 1 => k }
+    require(destDup.isEmpty,
+      s"routes share a (destination, writerId) lineage: ${destDup.mkString(", ")} — " +
+        "two routes merging into one table need distinct writerIds")
+  }
+
   /** DEMULTIPLEX one multi-table envelope tail into N lake tables — the
     * shape a real binlog/WAL subscription has (Canal and Maxwell publish
     * one stream per INSTANCE; Debezium Server's single-topic mode likewise),
@@ -542,25 +566,7 @@ object CdcPipeline {
     require(cfg.format != "parquet",
       "routing reads envelope table metadata — parquet change logs carry " +
         "none (tail one log per table instead)")
-    // ambiguity guard: two routes may not claim the same envelopes. Exact
-    // duplicates aside, a BARE route ("orders") matches its table under ANY
-    // database, so it overlaps every qualified route of that table
-    // ("shop.orders") — reject the mix rather than double-apply changes.
-    val byPart = routes.groupBy(r => graft.sources.CdcEnvelope.refTablePart(r.table))
-    val overlap = byPart.collect {
-      case (t, rs) if rs.size > 1 &&
-        (rs.map(_.table).distinct.size < rs.size || rs.exists(!_.table.contains('.'))) => t
-    }
-    require(overlap.isEmpty,
-      s"overlapping route table(s) on ${overlap.mkString(", ")} — a bare " +
-        "table name matches any database, so it cannot coexist with " +
-        "another route of the same table (qualify both as db.table), and " +
-        "one destination per table (a second consumer is its own stream)")
-    val destDup = routes.groupBy(r => (r.dest.root, r.writerId))
-      .collect { case (k, rs) if rs.size > 1 => k }
-    require(destDup.isEmpty,
-      s"routes share a (destination, writerId) lineage: ${destDup.mkString(", ")} — " +
-        "two routes merging into one table need distinct writerIds")
+    validateRoutes(routes.map(r => (r.table, r.dest.root, r.writerId)))
 
     val raw = spark.readStream
       .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)

@@ -1636,8 +1636,7 @@ final class LakeTable(
     * requires `replace = true`. Returns the pinned version.
     */
   def tag(name: String, version: Long = -1L, replace: Boolean = false): Long = {
-    require(name.nonEmpty && name.forall(c =>
-        c.toInt < 128 && (c.isLetterOrDigit || c == '.' || c == '_' || c == '-')),
+    require(name.nonEmpty && LakeTable.tagSafe(name),
       s"tag name '$name' must be [A-Za-z0-9._-]+ (it becomes a ref file name; " +
         "ASCII only — non-ASCII names break on filesystems with different " +
         "unicode normalization)")
@@ -1891,6 +1890,14 @@ object LakeTable {
       }
   }
   val DefaultWriter = "default"
+
+  /** The tag-name character rule, `[A-Za-z0-9._-]*`: a tag name becomes a
+    * ref file name, and non-ASCII names break on filesystems with different
+    * unicode normalization. Checked by [[LakeTable#tag]] and, for the
+    * streaming auto-tag ring's prefix and writerIds, at plan time.
+    */
+  def tagSafe(s: String): Boolean =
+    s.forall(c => c.toInt < 128 && (c.isLetterOrDigit || c == '.' || c == '_' || c == '-'))
 
   /** One data file in a snapshot. `stats` holds per-column min/max
     * (canonical string encoding, see [[FileStats]]) harvested from the

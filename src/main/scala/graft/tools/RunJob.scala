@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.engine.{Dialect, JdbcExec, JobConfig, SyncJob, Transformers}
+import graft.engine.cdc.CdcPipeline
 import graft.sources.SyntheticSource
 
 /** `datax -job config.json`, graft edition:
@@ -126,7 +127,7 @@ object RunJob {
     // lake→lake: replication catch-up or rollup refresh, one epoch-guarded
     // merge — never through buildInput (the window math IS the job)
     case (lr: JobConfig.LakeRead, lw: JobConfig.LakeWrite) =>
-      runLakePair(spark, lr, lw, ov)
+      runLakePair(spark, lr, lw.dests.head, ov) // translate() rejects routes here
     // the streaming pairs never go through buildInput — the change log is
     // tailed by the pipeline's own readStream, not materialized as a batch
     case (_, lw: JobConfig.LakeWrite) => runCdcContent(spark, t, lw, ov)
@@ -136,59 +137,79 @@ object RunJob {
   }
 
   /** cdcreader→RDBMS-writer content: the streaming MERGE-apply into a live
-    * database ([[graft.engine.cdc.CdcPipeline.startJdbc]]) — per-epoch LWW
-    * dedupe, key-ranged DELETEs for tombstones, dialect-native upsert (or the
-    * portable same-transaction DELETE+INSERT), and an epoch ledger on the
-    * TARGET for exactly-once end state across checkpoint rebuilds. The
-    * conflict columns come from `onConflictColumn` or, like the reference's
-    * writers, from the target's PK metadata ([[JdbcExec.primaryKeys]]).
+    * database ([[CdcPipeline.startJdbc]]) — per-epoch LWW dedupe, key-ranged
+    * DELETEs for tombstones, dialect-native upsert (or the portable
+    * same-transaction DELETE+INSERT), and an epoch ledger on the TARGET for
+    * exactly-once end state across checkpoint rebuilds.
     */
   private def runCdcJdbcContent(spark: SparkSession, cdc: JobConfig.CdcRead,
       jw: JobConfig.JdbcWrite, ov: Overrides): SyncJob.JobResult = {
     JdbcExec.execStatements(jw.url, jw.props, jw.preSql)
-    val keyCols: Seq[String] = jw.props.get("onConflictColumn") match {
-      case Some(cc) if cc.nonEmpty => cc.split(",").toSeq
-      case _ =>
-        val conn = java.sql.DriverManager.getConnection(jw.url, {
-          val p = new java.util.Properties()
-          jw.props.filter { case (k, v) =>
-            (k == "user" || k == "password") && v.nonEmpty
-          }.foreach { case (k, v) => p.setProperty(k, v) }
-          p
-        })
-        try JdbcExec.primaryKeys(conn, jw.table) finally conn.close()
-    }
-    require(keyCols.nonEmpty,
-      s"cdc apply into ${jw.table}: no conflict columns - set onConflictColumn " +
-        "or declare a primary key on the target table")
-    val cfg = graft.engine.cdc.CdcPipeline.CdcConfig(
-      logDir = rebasePath(cdc.logDir, ov.rebase),
-      checkpointDir = rebasePath(cdc.checkpoint, ov.rebase),
-      maxFilesPerTrigger = cdc.maxFilesPerTrigger,
-      availableNow = !cdc.continuous,
-      toolColumn = cdc.toolColumn,
-      format = cdc.format,
-      dlqDir = cdc.dlqDir.map(rebasePath(_, ov.rebase)),
-      triggerInterval = cdc.triggerInterval,
-      payloadSchema = cdc.payload,
-      tableFilter = cdc.tableFilter)
-    val dest = graft.engine.cdc.CdcPipeline.JdbcDest(
+    val dest = CdcPipeline.JdbcDest(
       dialect = jw.dialect, url = jw.url, table = jw.table,
       columns = jw.columns.filterNot(_ == "*"),
-      keyCols = keyCols,
+      keyCols = conflictKeys(s"cdc apply into ${jw.table}", jw.url, jw.table, jw.props,
+        jw.props.get("onConflictColumn").filter(_.nonEmpty).toSeq.flatMap(_.split(","))),
       batchSize = jw.batchSize,
       session = jw.session,
       props = jw.props,
       writerId = jw.props.getOrElse("writerId", "cdc"),
       ledgerTable = jw.props.getOrElse("ledgerTable", "graft_cdc_epochs"))
     val t0 = System.nanoTime()
-    val stream = graft.engine.cdc.CdcPipeline.startJdbc(spark, cfg, dest)
+    val stream = CdcPipeline.startJdbc(spark, tailConfig(cdc, ov), dest)
     stream.query.awaitTermination()
     JdbcExec.execStatements(jw.url, jw.props, jw.postSql)
     SyncJob.JobResult(
       rowsWritten = stream.upserts.get() + stream.deletes.get(),
       rowsBad = 0L, seconds = (System.nanoTime() - t0) / 1e9)
   }
+
+  /** Conflict columns of a live-database destination: the configured
+    * `onConflictColumn`, else, like the reference's writers, the target's
+    * PK metadata ([[JdbcExec.primaryKeys]]).
+    */
+  private def conflictKeys(what: String, url: String, table: String,
+      props: Map[String, String], configured: Seq[String]): Seq[String] = {
+    val keys =
+      if (configured.nonEmpty) configured
+      else {
+        val conn = JdbcExec.connect(url, props)
+        try JdbcExec.primaryKeys(conn, table) finally conn.close()
+      }
+    require(keys.nonEmpty, s"$what: no conflict columns - set onConflictColumn " +
+      "or declare a primary key on the target table")
+    keys
+  }
+
+  /** The one tail config: the cdcreader's log, checkpoint and decode
+    * settings, the lakewriter's stream-level cadence (a jdbc tail has none:
+    * the defaults), and the single-table writer's lineage and followers.
+    */
+  private def tailConfig(cdc: JobConfig.CdcRead, ov: Overrides,
+      lw: JobConfig.LakeWrite = JobConfig.LakeWrite(Right(Nil)),
+      writerId: String = graft.lake.LakeTable.DefaultWriter,
+      followers: Seq[CdcPipeline.Follower] = Nil): CdcPipeline.CdcConfig =
+    CdcPipeline.CdcConfig(
+      logDir = rebasePath(cdc.logDir, ov.rebase),
+      checkpointDir = rebasePath(cdc.checkpoint, ov.rebase),
+      maxFilesPerTrigger = cdc.maxFilesPerTrigger,
+      availableNow = !cdc.continuous,
+      toolColumn = cdc.toolColumn,
+      vacuumEvery = lw.vacuumEvery,
+      vacuumRetainVersions = lw.vacuumRetainVersions,
+      expireTombstonesEvery = lw.expireTombstonesEvery,
+      tombstoneRetainLsns = lw.tombstoneRetainLsns,
+      tagEvery = lw.tagEvery,
+      tagPrefix = lw.tagPrefix,
+      tagKeep = lw.tagKeep,
+      writerId = writerId,
+      format = cdc.format,
+      dlqDir = cdc.dlqDir.map(rebasePath(_, ov.rebase)),
+      triggerInterval = cdc.triggerInterval,
+      followers = followers,
+      payloadSchema = cdc.payload,
+      tableFilter = cdc.tableFilter,
+      routeParallelism = lw.routeParallelism)
 
   /** lakereader→lakewriter content: [[graft.lake.Replicate.sync]] (no
     * aggregations — a lake→lake catch-up that converges the destination to
@@ -212,20 +233,18 @@ object RunJob {
       .orElse(lr.toVersion)
 
   private def runLakePair(spark: SparkSession, lr: JobConfig.LakeRead,
-      lw: JobConfig.LakeWrite, ov: Overrides): SyncJob.JobResult = {
+      d: JobConfig.LakeDest, ov: Overrides): SyncJob.JobResult = {
     val src = graft.lake.LakeTable.open(spark, rebasePath(lr.root, ov.rebase))
     val rollup = lr.aggregations.nonEmpty
-    if (rollup) require(lw.keyCols.nonEmpty,
+    if (rollup) require(d.keyCols.nonEmpty,
       "lakewriter primaryKey is required for a rollup destination (the group columns)")
-    val dst = openOrCreateLake(spark, rebasePath(lw.root, ov.rebase),
-      keys = if (lw.keyCols.nonEmpty) lw.keyCols else src.keyCols,
-      buckets = lw.buckets, distCols = lw.distCols, targetFileRows = lw.targetFileRows,
-      sortCols = lw.sortCols)
+    val dst = openOrCreateLake(spark,
+      if (d.keyCols.nonEmpty) d else d.copy(keyCols = src.keyCols), ov)
     // the ingest-default writerId would cross the replication watermark with
     // the table's own ingest epochs (different epoch spaces) — scope it by
     // role unless the config names one explicitly
     val wid =
-      if (lw.writerId != graft.lake.LakeTable.DefaultWriter) lw.writerId
+      if (d.writerId != graft.lake.LakeTable.DefaultWriter) d.writerId
       else if (rollup) "rollup" else "replication"
     val st =
       if (rollup && lr.additive) {
@@ -316,6 +335,13 @@ object RunJob {
     }
   }
 
+  /** cdcreader→lakewriter content: every destination opens
+    * ([[openDest]]), then the log is tailed into the one table
+    * ([[CdcPipeline.start]]) or demultiplexed into the routes
+    * ([[CdcPipeline.startRouted]]). Job stats are the manifest-stat delta
+    * across the run summed over the destinations: metadata reads, no table
+    * scan (the 100 TB-safe way to count).
+    */
   private def runCdcContent(spark: SparkSession, t: JobConfig.Translated,
       lw: JobConfig.LakeWrite, ov: Overrides): SyncJob.JobResult = {
     val cdc = t.reader match {
@@ -323,62 +349,56 @@ object RunJob {
       case other => throw new IllegalArgumentException(
         s"lakewriter requires cdcreader (got $other)") // translate() guards this
     }
-    if (lw.routes.nonEmpty) return runCdcRouted(spark, cdc, lw, ov)
-    val root = rebasePath(lw.root, ov.rebase)
-    val table = openOrCreateLake(spark, root, lw.keyCols, lw.buckets,
-      lw.distCols, lw.targetFileRows, lw.sortCols)
+    val opened = lw.dests.map(openDest(spark, _, ov))
+    def statTotals(): (Long, Long) = opened.map { case (table, _) =>
+      val m = table.metrics()
+        .agg(org.apache.spark.sql.functions.sum("rowsApplied"),
+          org.apache.spark.sql.functions.sum("bytesIn")).head()
+      (if (m.isNullAt(0)) 0L else m.getLong(0), if (m.isNullAt(1)) 0L else m.getLong(1))
+    }.foldLeft((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b + d) }
+    val (rows0, bytes0) = statTotals()
+    val t0 = System.nanoTime()
+    val q = lw.target match {
+      case Left(d) =>
+        val (table, followers) = opened.head
+        CdcPipeline.start(spark, table, tailConfig(cdc, ov, lw, d.writerId, followers))
+      case Right(routes) =>
+        val base = if (cdc.toolColumn) graft.core.Model.changeEventSchema
+          else graft.core.Model.changeEventSchemaV1
+        val transcript = org.apache.spark.sql.types.StructType(
+          base.fields.filterNot(f => f.name == "op" || f.name == "lsn"))
+        CdcPipeline.startRouted(spark, tailConfig(cdc, ov, lw),
+          routes.zip(opened).map { case (r, (table, followers)) =>
+            CdcPipeline.Route(r.table, table, r.payload.getOrElse(transcript),
+              r.dest.writerId, followers)
+          })
+    }
+    q.awaitTermination() // availableNow stops at end-of-log; continuous tails until killed
+    val secs = (System.nanoTime() - t0) / 1e9
+    val (rows1, bytes1) = statTotals()
+    SyncJob.JobResult(rowsWritten = rows1 - rows0, rowsBad = 0L,
+      seconds = secs, bytesWritten = bytes1 - bytes0)
+  }
+
+  /** One lake destination of a tail (the single-table writer's or a
+    * route's): open-or-create it with its layout, onboard it from its
+    * bootstrap source, and build its followers.
+    */
+  private def openDest(spark: SparkSession, d: JobConfig.LakeDest,
+      ov: Overrides): (graft.lake.LakeTable, Seq[CdcPipeline.Follower]) = {
+    val table = openOrCreateLake(spark, d, ov)
     // initial-snapshot onboarding: seed the table through the ordinary
     // batch-input machinery (splitPk probe included) BEFORE the tail starts.
     // The bootstrap lineage is scoped off the stream's writerId, so the
     // load is exactly-once across onboarding re-runs and never collides
     // with the tail's epochs. See CdcPipeline.bootstrap for the
     // convergence contract.
-    cdc.bootstrap.foreach { bs =>
-      val bwid = s"${lw.writerId}-bootstrap"
-      if (table.currentSnapshot().lastEpochFor(bwid) < 0L) {
-        val snapshot = buildInput(spark, bs.plan, ov)
-        graft.engine.cdc.CdcPipeline.bootstrap(table, snapshot, bs.lsn, bwid)
-      }
+    d.bootstrap.foreach { bs =>
+      val bwid = s"${d.writerId}-bootstrap"
+      if (table.currentSnapshot().lastEpochFor(bwid) < 0L)
+        CdcPipeline.bootstrap(table, buildInput(spark, bs.plan, ov), bs.lsn, bwid)
     }
-    // followers: same open-or-create + role-scoped writerId defaults as a
-    // standalone lakereader→lakewriter job (runLakePair), attached per epoch
-    val followers = buildFollowers(spark, table, lw.followers, ov)
-    val cfg = graft.engine.cdc.CdcPipeline.CdcConfig(
-      logDir = rebasePath(cdc.logDir, ov.rebase),
-      checkpointDir = rebasePath(cdc.checkpoint, ov.rebase),
-      maxFilesPerTrigger = cdc.maxFilesPerTrigger,
-      availableNow = !cdc.continuous,
-      toolColumn = cdc.toolColumn,
-      vacuumEvery = lw.vacuumEvery,
-      vacuumRetainVersions = lw.vacuumRetainVersions,
-      expireTombstonesEvery = lw.expireTombstonesEvery,
-      tombstoneRetainLsns = lw.tombstoneRetainLsns,
-      tagEvery = lw.tagEvery,
-      tagPrefix = lw.tagPrefix,
-      tagKeep = lw.tagKeep,
-      writerId = lw.writerId,
-      format = cdc.format,
-      dlqDir = cdc.dlqDir.map(rebasePath(_, ov.rebase)),
-      triggerInterval = cdc.triggerInterval,
-      followers = followers,
-      payloadSchema = cdc.payload,
-      tableFilter = cdc.tableFilter)
-    // job stats are the manifest-stat delta across the run: two cheap
-    // metadata reads, no table scan (the 100 TB-safe way to count)
-    def statTotals(): (Long, Long) = {
-      val r = table.metrics()
-        .agg(org.apache.spark.sql.functions.sum("rowsApplied"),
-          org.apache.spark.sql.functions.sum("bytesIn")).head()
-      (if (r.isNullAt(0)) 0L else r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-    val (rows0, bytes0) = statTotals()
-    val t0 = System.nanoTime()
-    val q = graft.engine.cdc.CdcPipeline.start(spark, table, cfg)
-    q.awaitTermination() // availableNow stops at end-of-log; continuous tails until killed
-    val secs = (System.nanoTime() - t0) / 1e9
-    val (rows1, bytes1) = statTotals()
-    SyncJob.JobResult(rowsWritten = rows1 - rows0, rowsBad = 0L,
-      seconds = secs, bytesWritten = bytes1 - bytes0)
+    (table, buildFollowers(spark, table, d.followers, ov))
   }
 
   /** Follower specs → live followers: same open-or-create + role-scoped
@@ -388,156 +408,74 @@ object RunJob {
     */
   private def buildFollowers(spark: SparkSession, table: graft.lake.LakeTable,
       followers: Seq[JobConfig.FollowerSpec],
-      ov: Overrides): Seq[graft.engine.cdc.CdcPipeline.Follower] =
+      ov: Overrides): Seq[CdcPipeline.Follower] =
     followers.map { f =>
-      if (f.jdbcUrl.nonEmpty) {
-        // live-database mirror: keys from onConflictColumn or, like the
-        // reference's writers, the target's PK metadata
-        val keyCols =
-          if (f.keyCols.nonEmpty) f.keyCols
-          else {
-            val conn = java.sql.DriverManager.getConnection(f.jdbcUrl, {
-              val pr = new java.util.Properties()
-              f.jdbcProps.filter { case (k, v) =>
-                (k == "user" || k == "password") && v.nonEmpty
-              }.foreach { case (k, v) => pr.setProperty(k, v) }
-              pr
-            })
-            try JdbcExec.primaryKeys(conn, f.jdbcTable) finally conn.close()
-          }
-        require(keyCols.nonEmpty,
-          s"jdbc follower on ${f.jdbcTable}: no conflict columns - set " +
-            "onConflictColumn or declare a primary key on the target table")
-        graft.engine.cdc.CdcPipeline.JdbcFollower(
-          graft.engine.cdc.CdcPipeline.JdbcDest(
-            dialect = Dialect.byName(f.jdbcDialect), url = f.jdbcUrl,
-            table = f.jdbcTable, keyCols = keyCols, props = f.jdbcProps,
-            writerId = if (f.writerId.nonEmpty) f.writerId else "cdc-mirror"))
-      } else if (f.feedFormat.nonEmpty) {
+      if (f.jdbcUrl.nonEmpty)
+        // live-database mirror
+        CdcPipeline.JdbcFollower(CdcPipeline.JdbcDest(
+          dialect = Dialect.byName(f.jdbcDialect), url = f.jdbcUrl, table = f.jdbcTable,
+          keyCols = conflictKeys(s"jdbc follower on ${f.jdbcTable}", f.jdbcUrl,
+            f.jdbcTable, f.jdbcProps, f.keyCols),
+          props = f.jdbcProps,
+          writerId = if (f.writerId.nonEmpty) f.writerId else "cdc-mirror"))
+      else if (f.feedFormat.nonEmpty) {
         // outbound envelope feed: debezium delete images need the keys —
         // default to the ingest table's primary key, like the mirror does
         val keys = if (f.keyCols.nonEmpty) f.keyCols else table.keyCols
-        graft.engine.cdc.CdcPipeline.FeedFollower(
-          rebasePath(f.root, ov.rebase), f.feedFormat, keys)
+        CdcPipeline.FeedFollower(rebasePath(f.root, ov.rebase), f.feedFormat, keys)
       } else if (f.history) {
         // SCD2 history table: layout is DERIVED from the ingest table
         // (keys + scd_seq sentinel, distributed by the ingest key) so the
         // open-row lookup stays bucket-pruned — see Scd2.createDst
-        val dst = openOrCreateLake(spark, rebasePath(f.root, ov.rebase),
-          keys = table.keyCols :+ graft.lake.Scd2.SeqCol,
-          buckets = table.numBuckets, distCols = table.keyCols,
-          targetFileRows = f.targetFileRows)
-        graft.engine.cdc.CdcPipeline.Scd2Follower(dst,
-          if (f.writerId.nonEmpty) f.writerId else "scd2")
+        val dst = openOrCreateLake(spark, JobConfig.LakeDest(f.root,
+          table.keyCols :+ graft.lake.Scd2.SeqCol, table.numBuckets,
+          distCols = table.keyCols, targetFileRows = f.targetFileRows), ov)
+        CdcPipeline.Scd2Follower(dst, if (f.writerId.nonEmpty) f.writerId else "scd2")
       } else {
         val rollup = f.aggregations.nonEmpty
-        val dst = openOrCreateLake(spark, rebasePath(f.root, ov.rebase),
-          keys = if (f.keyCols.nonEmpty) f.keyCols else table.keyCols,
-          buckets = f.buckets, distCols = f.distCols,
-          targetFileRows = f.targetFileRows)
+        val dst = openOrCreateLake(spark, JobConfig.LakeDest(f.root,
+          if (f.keyCols.nonEmpty) f.keyCols else table.keyCols, f.buckets,
+          distCols = f.distCols, targetFileRows = f.targetFileRows), ov)
         val wid = if (f.writerId.nonEmpty) f.writerId
           else if (rollup) "rollup" else "replication"
         if (rollup && f.additive) {
           val sums = f.aggregations.map { case (n, e) =>
             (n, org.apache.spark.sql.functions.expr(e))
           }
-          graft.engine.cdc.CdcPipeline.AdditiveRollupFollower(dst, sums, wid)
+          CdcPipeline.AdditiveRollupFollower(dst, sums, wid)
         } else if (rollup) {
           val aggs = f.aggregations.map { case (n, e) =>
             org.apache.spark.sql.functions.expr(e).as(n)
           }
-          graft.engine.cdc.CdcPipeline.RollupFollower(dst, aggs, wid)
-        } else graft.engine.cdc.CdcPipeline.ReplicaFollower(dst, wid)
+          CdcPipeline.RollupFollower(dst, aggs, wid)
+        } else CdcPipeline.ReplicaFollower(dst, wid)
       }
     }
-
-  /** Multi-table demultiplex: the cdcreader's envelope stream fans out
-    * into one lake table per `routes` entry
-    * ([[graft.engine.cdc.CdcPipeline.startRouted]]). Each destination
-    * opens/creates with its own layout and may onboard from its own
-    * bootstrap source and trail its own followers; job stats are the
-    * manifest-stat delta summed across destinations (metadata reads, no
-    * data scan).
-    */
-  private def runCdcRouted(spark: SparkSession, cdc: JobConfig.CdcRead,
-      lw: JobConfig.LakeWrite, ov: Overrides): SyncJob.JobResult = {
-    val routes = lw.routes.map { r =>
-      val dest = openOrCreateLake(spark, rebasePath(r.root, ov.rebase),
-        r.keyCols, r.buckets, r.distCols, r.targetFileRows, r.sortCols)
-      val base = if (cdc.toolColumn) graft.core.Model.changeEventSchema
-        else graft.core.Model.changeEventSchemaV1
-      val payload = r.payload.getOrElse(org.apache.spark.sql.types.StructType(
-        base.fields.filterNot(f => f.name == "op" || f.name == "lsn")))
-      // per-route initial-snapshot onboarding, exactly-once under its own
-      // lineage (the single-table path's contract, one route at a time)
-      r.bootstrap.foreach { bs =>
-        val bwid = s"${r.writerId}-bootstrap"
-        if (dest.currentSnapshot().lastEpochFor(bwid) < 0L) {
-          val snapshot = buildInput(spark, bs.plan, ov)
-          graft.engine.cdc.CdcPipeline.bootstrap(dest, snapshot, bs.lsn, bwid)
-        }
-      }
-      graft.engine.cdc.CdcPipeline.Route(r.table, dest, payload, r.writerId,
-        followers = buildFollowers(spark, dest, r.followers, ov))
-    }
-    val cfg = graft.engine.cdc.CdcPipeline.CdcConfig(
-      logDir = rebasePath(cdc.logDir, ov.rebase),
-      checkpointDir = rebasePath(cdc.checkpoint, ov.rebase),
-      maxFilesPerTrigger = cdc.maxFilesPerTrigger,
-      availableNow = !cdc.continuous,
-      toolColumn = cdc.toolColumn,
-      vacuumEvery = lw.vacuumEvery,
-      vacuumRetainVersions = lw.vacuumRetainVersions,
-      expireTombstonesEvery = lw.expireTombstonesEvery,
-      tombstoneRetainLsns = lw.tombstoneRetainLsns,
-      tagEvery = lw.tagEvery,
-      tagPrefix = lw.tagPrefix,
-      tagKeep = lw.tagKeep,
-      format = cdc.format,
-      dlqDir = cdc.dlqDir.map(rebasePath(_, ov.rebase)),
-      triggerInterval = cdc.triggerInterval,
-      routeParallelism = lw.routeParallelism)
-    def statTotals(): (Long, Long) = routes.map { r =>
-      val m = r.dest.metrics()
-        .agg(org.apache.spark.sql.functions.sum("rowsApplied"),
-          org.apache.spark.sql.functions.sum("bytesIn")).head()
-      (if (m.isNullAt(0)) 0L else m.getLong(0), if (m.isNullAt(1)) 0L else m.getLong(1))
-    }.foldLeft((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b + d) }
-    val (rows0, bytes0) = statTotals()
-    val t0 = System.nanoTime()
-    val q = graft.engine.cdc.CdcPipeline.startRouted(spark, cfg, routes)
-    q.awaitTermination()
-    val secs = (System.nanoTime() - t0) / 1e9
-    val (rows1, bytes1) = statTotals()
-    SyncJob.JobResult(rowsWritten = rows1 - rows0, rowsBad = 0L,
-      seconds = secs, bytesWritten = bytes1 - bytes0)
-  }
 
   /** Open the lake table with its manifest-recorded layout when it exists;
     * create it with the config's layout otherwise. Config keys that
     * contradict an existing table's manifest fail fast rather than silently
     * merging on the wrong key.
     */
-  private def openOrCreateLake(spark: SparkSession, root: String,
-      keys: Seq[String], buckets: Int, distCols: Seq[String],
-      targetFileRows: Option[Long] = None,
-      sortCols: Seq[String] = Nil): graft.lake.LakeTable = {
+  private def openOrCreateLake(spark: SparkSession, d: JobConfig.LakeDest,
+      ov: Overrides): graft.lake.LakeTable = {
+    val root = rebasePath(d.root, ov.rebase)
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val exists = fs.exists(new org.apache.hadoop.fs.Path(s"$root/_snapshots/snap-0.txt"))
     if (exists) {
-      val table = graft.lake.LakeTable.open(spark, root, targetFileRows = targetFileRows)
-      require(keys.isEmpty || keys == table.keyCols,
-        s"lakewriter primaryKey ${keys.mkString(",")} contradicts the existing " +
+      val table = graft.lake.LakeTable.open(spark, root, targetFileRows = d.targetFileRows)
+      require(d.keyCols.isEmpty || d.keyCols == table.keyCols,
+        s"lakewriter primaryKey ${d.keyCols.mkString(",")} contradicts the existing " +
           s"table's manifest layout ${table.keyCols.mkString(",")} at $root")
-      require(distCols.isEmpty || distCols == table.distributionCols,
-        s"lakewriter distributionColumns ${distCols.mkString(",")} contradicts " +
+      require(d.distCols.isEmpty || d.distCols == table.distributionCols,
+        s"lakewriter distributionColumns ${d.distCols.mkString(",")} contradicts " +
           s"the existing table's manifest layout " +
           s"${table.distributionCols.mkString(",")} at $root")
       table
     } else graft.lake.LakeTable.create(spark, root,
-      if (keys.nonEmpty) keys else graft.core.Model.keyCols, buckets,
-      distCols = distCols, targetFileRows = targetFileRows, sortCols = sortCols)
+      if (d.keyCols.nonEmpty) d.keyCols else graft.core.Model.keyCols, d.buckets,
+      distCols = d.distCols, targetFileRows = d.targetFileRows, sortCols = d.sortCols)
   }
 
   def run(spark: SparkSession, spec: JobConfig.Spec,
@@ -578,10 +516,24 @@ object RunJob {
           c.triggerInterval.map(i => s" trigger='$i'").getOrElse("") +
           c.dlqDir.map(d => s" dlq=$d").getOrElse("") +
           c.payload.map(ps => s" payload=(${ps.fieldNames.mkString(",")})")
-            .getOrElse(if (!c.toolColumn) " schema=v1(no tool col)" else "") +
-          c.bootstrap.map(bs =>
-            s"\n    bootstrap[lsn=${bs.lsn}]: ${reader(bs.plan)}").getOrElse("")
+            .getOrElse(if (!c.toolColumn) " schema=v1(no tool col)" else "")
     }
+    def follower(f: JobConfig.FollowerSpec): String =
+      if (f.jdbcUrl.nonEmpty) s"jdbc-mirror[${f.jdbcDialect}] ${f.jdbcUrl} ${f.jdbcTable}"
+      else if (f.feedFormat.nonEmpty) s"feed[${f.feedFormat}] ${f.root}"
+      else if (f.history) s"scd2 ${f.root}"
+      else if (f.aggregations.isEmpty) s"replica ${f.root}"
+      else s"rollup ${f.root} group=(${f.keyCols.mkString(",")}) " +
+        f.aggregations.map { case (n, e) => s"$n=$e" }.mkString(",")
+    // a lake destination: its layout (then `more`) on one line, one line
+    // below it per onboarding source and follower
+    def dest(d: JobConfig.LakeDest, more: String, indent: String): String =
+      s"${d.root} key=(${d.keyCols.mkString(",")}) buckets=${d.buckets} writerId=${d.writerId}" +
+        (if (d.distCols.nonEmpty) s" dist=(${d.distCols.mkString(",")})" else "") +
+        d.targetFileRows.map(n => s" targetFileRows=$n").getOrElse("") +
+        (if (d.sortCols.nonEmpty) s" sort=(${d.sortCols.mkString(",")})" else "") + more +
+        d.bootstrap.map(b => s"\n${indent}bootstrap[lsn=${b.lsn}]: ${reader(b.plan)}").getOrElse("") +
+        d.followers.map(f => s"\n${indent}follower: ${follower(f)}").mkString
     val r = reader(t.reader)
     val w = t.writer match {
       case JobConfig.FileWrite(sink, header, _, _) =>
@@ -598,43 +550,25 @@ object RunJob {
         }
         s"jdbc[${d.name}] $url $table mode=$mode batch=$bs\n    sql: $sql" +
           (if (preSql.nonEmpty) s"\n    preSql: ${preSql.mkString("; ")}" else "")
-      case lw: JobConfig.LakeWrite if lw.routes.nonEmpty =>
-        s"lake-route (${lw.routes.length} tables, one epoch lineage each" +
-          (if (lw.routeParallelism > 1) s", parallelism=${lw.routeParallelism}" else "") +
-          ")" +
-          lw.routes.map(r => s"\n    route: ${r.table} -> ${r.root} " +
-            s"key=(${r.keyCols.mkString(",")}) buckets=${r.buckets}" +
-            s" writerId=${r.writerId}" +
-            r.payload.map(ps => s" cols=${ps.fieldNames.length}").getOrElse("") +
-            r.bootstrap.map(b =>
-              s"\n      bootstrap[lsn=${b.lsn}]: ${reader(b.plan)}").getOrElse("") +
-            r.followers.map(f => "\n      follower: " +
-              (if (f.jdbcUrl.nonEmpty) s"jdbc-mirror[${f.jdbcDialect}] ${f.jdbcUrl} ${f.jdbcTable}"
-               else if (f.feedFormat.nonEmpty) s"feed[${f.feedFormat}] ${f.root}"
-               else if (f.history) s"scd2 ${f.root}"
-               else if (f.aggregations.isEmpty) s"replica ${f.root}"
-               else s"rollup ${f.root} group=(${f.keyCols.mkString(",")})")).mkString
-          ).mkString
       case lw: JobConfig.LakeWrite =>
-        s"lake-merge ${lw.root} key=(${lw.keyCols.mkString(",")}) " +
-          s"buckets=${lw.buckets} writerId=${lw.writerId}" +
-          (if (lw.distCols.nonEmpty) s" dist=(${lw.distCols.mkString(",")})" else "") +
+        val cadence =
           (if (lw.vacuumEvery > 0)
             s" vacuumEvery=${lw.vacuumEvery} retain=${lw.vacuumRetainVersions}" else "") +
           (if (lw.expireTombstonesEvery > 0)
             s" expireTombstonesEvery=${lw.expireTombstonesEvery}" +
               s" retainLsns=${lw.tombstoneRetainLsns}" else "") +
           (if (lw.tagEvery > 0)
-            s" tagEvery=${lw.tagEvery} prefix=${lw.tagPrefix} keep=${lw.tagKeep}"
-           else "") +
-          lw.targetFileRows.map(n => s" targetFileRows=$n").getOrElse("") +
-          lw.followers.map(f => "\n    follower: " +
-            (if (f.jdbcUrl.nonEmpty)
-               s"jdbc-mirror[${f.jdbcDialect}] ${f.jdbcUrl} ${f.jdbcTable}"
-             else if (f.aggregations.isEmpty) s"replica ${f.root}"
-             else s"rollup ${f.root} group=(${f.keyCols.mkString(",")}) " +
-               f.aggregations.map { case (n, e) => s"$n=$e" }.mkString(","))
-          ).mkString
+            s" tagEvery=${lw.tagEvery} prefix=${lw.tagPrefix} keep=${lw.tagKeep}" else "")
+        lw.target match {
+          case Left(d) => s"lake-merge ${dest(d, cadence, "    ")}"
+          case Right(routes) =>
+            s"lake-route (${routes.length} tables, one epoch lineage each" +
+              (if (lw.routeParallelism > 1) s", parallelism=${lw.routeParallelism}" else "") +
+              ")" + cadence +
+              routes.map(r => s"\n    route: ${r.table} -> " + dest(r.dest,
+                r.payload.map(ps => s" cols=${ps.fieldNames.length}").getOrElse(""),
+                "      ")).mkString
+        }
     }
     val tr = if (t.transforms.isEmpty) "" else
       s"\n  transform: ${t.transforms.map(_.getClass.getSimpleName).mkString(" -> ")}"

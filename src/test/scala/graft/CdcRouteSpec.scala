@@ -380,7 +380,7 @@ class CdcRouteSpec extends SparkSpec {
     val spec = JobConfig.parse(s"""{"job": {"content": [{
       "reader": {"name": "cdcreader", "parameter": {
         "path": "$logDir", "format": "debezium", "checkpoint": "$cp"}},
-      "writer": {"name": "lakewriter", "parameter": {
+      "writer": {"name": "lakewriter", "parameter": {"vacuumEvery": 2,
         "routes": [
           {"table": "shop.orders", "path": "$oDir", "primaryKey": ["id"],
            "buckets": 4, "column": [
@@ -390,6 +390,9 @@ class CdcRouteSpec extends SparkSpec {
            "buckets": 4, "column": [
              {"name": "sku", "type": "string"}, {"name": "qty", "type": "int"}]}
         ]}}}]}}""")
+    // the stream-level cadence runs on every route, and the plan says so
+    val desc = RunJob.describe(JobConfig.translate(spec).head)
+    assert(desc.contains("vacuumEvery=2 retain=8"), desc)
     val res = RunJob.run(spark, spec).head
     assert(res.rowsWritten > 0L)
     val ordersT = LakeTable.open(spark, oDir)
@@ -479,6 +482,13 @@ class CdcRouteSpec extends SparkSpec {
     translate(""""routes": [
       {"table": "a.t", "path": "/t1", "primaryKey": ["k"]},
       {"table": "b.t", "path": "/t2", "primaryKey": ["k"]}]""")
+    // ...unless they share one destination lineage: one would skip the
+    // other's epochs (rejected before any destination is opened)
+    assert(intercept[IllegalArgumentException] {
+      translate(""""routes": [
+        {"table": "a.t", "path": "/t1", "primaryKey": ["k"]},
+        {"table": "b.t", "path": "/t1", "primaryKey": ["k"]}]""")
+    }.getMessage.contains("lineage"))
     // a route without primaryKey has no sensible default merge key
     assert(intercept[IllegalArgumentException] {
       translate(""""routes": [{"table": "t", "path": "/t1"}]""")

@@ -789,6 +789,8 @@ class JobSpecSpec extends SparkSpec {
       "writer": {"name": "lakewriter", "parameter": {
         "path": "$work/lake", "primaryKey": ["conv_id", "turn_idx"], "buckets": 4,
         "followers": [{"path": "$work/hist", "history": true}]}}}]}}""")
+    val desc = RunJob.describe(JobConfig.translate(spec).head)
+    assert(desc.contains(s"follower: scd2 $work/hist"), desc)
     RunJob.run(spark, spec)
     val hist = LakeTable.open(spark, s"$work/hist")
     assert(hist.keyCols === Seq("conv_id", "turn_idx", "scd_seq"))
@@ -898,12 +900,15 @@ class JobSpecSpec extends SparkSpec {
     val cfg = Gen.GenConfig(nEvents = 4000L, nConvs = 50L, partitions = 4)
     val work = tmpDir("cdcjob-feed")
     Gen.writeChangeLog(spark, cfg, s"$work/log", nChunks = 4)
-    RunJob.run(spark, JobConfig.parse(s"""{"job": {"content": [{
+    val spec = JobConfig.parse(s"""{"job": {"content": [{
       "reader": {"name": "cdcreader", "parameter": {
         "path": "$work/log", "checkpoint": "$work/cp", "maxFilesPerTrigger": 2}},
       "writer": {"name": "lakewriter", "parameter": {
         "path": "$work/lake", "primaryKey": ["conv_id", "turn_idx"], "buckets": 4,
-        "followers": [{"path": "$work/feed", "format": "debezium"}]}}}]}}"""))
+        "followers": [{"path": "$work/feed", "format": "debezium"}]}}}]}}""")
+    val desc = RunJob.describe(JobConfig.translate(spec).head)
+    assert(desc.contains(s"follower: feed[debezium] $work/feed"), desc)
+    RunJob.run(spark, spec)
     // the follower ran inside each micro-batch: one window marker per epoch
     val markers = new java.io.File(s"$work/feed").list().toSeq.filter(_.endsWith(".ok"))
     assert(markers.size >= 2, s"expected one feed window per epoch, got $markers")

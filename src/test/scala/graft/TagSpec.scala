@@ -171,4 +171,27 @@ class TagSpec extends SparkSpec {
     intercept[IllegalArgumentException](t.tag("way-ahead", version = 99L))
     intercept[IllegalArgumentException](t.tagVersion("never-made"))
   }
+
+  test("the auto-tag ring's writerIds are checked at translate time") {
+    // with tagEvery set, every destination's writerId becomes part of a tag
+    // ref file name: reject it before the job creates or onboards anything
+    def translate(writer: String): Unit = {
+      graft.engine.JobConfig.translate(graft.engine.JobConfig.parse(s"""{"job": {"content": [{
+        "reader": {"name": "cdcreader", "parameter": {
+          "path": "/log", "format": "debezium", "checkpoint": "/cp"}},
+        "writer": {"name": "lakewriter", "parameter": {$writer}}}]}}"""))
+      ()
+    }
+    val single = """"path": "/lake", "writerId": "a/b""""
+    val routed = """"routes": [{"table": "t", "path": "/t", "primaryKey": ["k"],
+      "writerId": "a/b"}]"""
+    for (w <- Seq(single, routed)) {
+      val e = intercept[IllegalArgumentException](translate(s"""$w, "tagEvery": 2"""))
+      assert(e.getMessage.contains("writerId 'a/b'"), e.getMessage)
+      translate(w) // no ring, no tag names: the writerId is free-form
+    }
+    assert(intercept[IllegalArgumentException] {
+      translate(""""path": "/lake", "tagPrefix": "x y"""")
+    }.getMessage.contains("tagPrefix"))
+  }
 }

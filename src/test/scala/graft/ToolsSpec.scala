@@ -150,4 +150,14 @@ class ToolsSpec extends AnyFunSuite {
       }.toSet
     assert(hits === Set("engine/cdc/CdcPipeline.scala:private def runBatches"))
   }
+
+  test("RunJob builds its tail config and looks up conflict keys in one place each") {
+    // the single-table and the routed lakewriter and the jdbc tail share one
+    // tail-config builder, and every jdbc destination one key lookup; a
+    // second copy is how the two lakewriter shapes drifted apart
+    val src = new String(Files.readAllBytes(
+      Paths.get("src/main/scala/graft/tools/RunJob.scala")), "UTF-8")
+    for (site <- Seq("CdcConfig(", "primaryKeys("))
+      assert(java.util.regex.Pattern.quote(site).r.findAllIn(src).size === 1, site)
+  }
 }
