@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.SessionBridge
 
 /** The reference jsonfilereader's SAMPLING schema inference, as an opt-in
   * (`inferMode = "datax"`) on graft's json sources — Spark's native JSON
@@ -51,7 +52,7 @@ object JsonInfer {
     val stats = mutable.LinkedHashMap.empty[String, FieldInfo]
     var sampled = 0
     val files = resolveFiles(spark, pathCsv).take(maxFiles)
-    val hconf = spark.sparkContext.hadoopConfiguration
+    val hconf = SessionBridge.hadoopConf(spark)
     val codecs = new org.apache.hadoop.io.compress.CompressionCodecFactory(hconf)
     files.foreach { p =>
       if (sampled < maxRows) {
@@ -129,7 +130,7 @@ object JsonInfer {
     else f.strings += 1
 
   private def resolveFiles(spark: SparkSession, pathCsv: String): Seq[Path] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
+    val hconf = SessionBridge.hadoopConf(spark)
     pathCsv.split(",").toSeq.flatMap { p =>
       val path = new Path(p)
       val fs = path.getFileSystem(hconf)

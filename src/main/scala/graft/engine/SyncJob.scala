@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SessionBridge
 
 import graft.lake.LakeTable
 
@@ -266,7 +267,7 @@ object SyncJob {
     */
   private def sniffJsonFormat(spark: SparkSession, path: String): String = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(SessionBridge.hadoopConf(spark))
     val isGlob = path.exists("*?[{".contains(_))
     val file =
       if (isGlob)
@@ -373,7 +374,7 @@ object SyncJob {
     // lake: epoch-idempotent merge needs no staging; jdbc: rows stream into
     // the target's transactions (the reference's mid-transfer abort shape)
     val staged = binding && sink.format != "lake" && sink.format != "jdbc"
-    val fs = new Path(sink.path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(sink.path).getFileSystem(SessionBridge.hadoopConf(spark))
     val stagingPath = s"${sink.path}.staging-${System.nanoTime()}"
 
     // nonConflict holds its exclusive sentinel from the pre-check through
@@ -617,7 +618,7 @@ object SyncJob {
       val nonConflictSentinel: Option[Path] =
         if (sink.writeMode == WriteMode.NonConflict) {
           val p = new Path(sink.path)
-          Some(nonConflictClaim(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p))
+          Some(nonConflictClaim(p.getFileSystem(SessionBridge.hadoopConf(spark)), p))
         } else None
       val mode = sink.writeMode match {
         case WriteMode.Append => "append"
@@ -660,6 +661,6 @@ object SyncJob {
           case f => throw new IllegalArgumentException(s"sink format '$f'")
         }
       } finally nonConflictSentinel.foreach(s =>
-        nonConflictRelease(s.getFileSystem(spark.sparkContext.hadoopConfiguration), s))
+        nonConflictRelease(s.getFileSystem(SessionBridge.hadoopConf(spark)), s))
   }
 }

@@ -2,6 +2,7 @@ package graft.engine.cdc
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftbridge.SessionBridge
 
 import graft.lake.LakeTable
 import graft.sources.CdcEnvelope
@@ -69,7 +70,7 @@ object CdcFeed {
       "a debezium feed needs key columns — a delete event's `before` image " +
         "is the key (REPLICA IDENTITY DEFAULT); pass the table's primary key")
     val spark = src.spark
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(dir).getFileSystem(SessionBridge.hadoopConf(spark))
     fs.mkdirs(new Path(dir))
     val srcVersion = src.currentSnapshot().version
     val since = watermark(fs, dir)
@@ -133,8 +134,7 @@ object CdcFeed {
     * the directory instead).
     */
   def expire(src: LakeTable, dir: String, uptoVersion: Long): Int = {
-    val fs = new Path(dir).getFileSystem(
-      src.spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(dir).getFileSystem(SessionBridge.hadoopConf(src.spark))
     if (!fs.exists(new Path(dir))) return 0
     val names = fs.listStatus(new Path(dir)).map(_.getPath.getName)
     val head = watermark(fs, dir)

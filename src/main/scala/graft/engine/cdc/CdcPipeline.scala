@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.{col, sum, when}
 import org.apache.spark.sql.graftbridge.SessionBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.core.Model
+import graft.core.{LocalFs, Model}
 import graft.lake.LakeTable
 
 /** The north-rule flagship: tail a binlog/WAL-shaped change-event log and
@@ -406,6 +406,9 @@ object CdcPipeline {
     */
   private def runBatches(src: DataFrame, cfg: CdcConfig)(
       body: (DataFrame, Long) => Unit): StreamingQuery = {
+    // before start(): the stream's cloned session copies the conf, so its
+    // checkpoint logs are written spawn-free too
+    LocalFs.install(src.sparkSession)
     val writer = src.writeStream
       .option("checkpointLocation", cfg.checkpointDir)
       .foreachBatch { (batch: DataFrame, epoch: Long) =>

@@ -5,7 +5,10 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SessionBridge
 import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
+
+import graft.core.LocalFs
 
 /** An Iceberg-shaped, snapshot-committed table over immutable Parquet files,
   * with MERGE-ON-READ upserts and per-bucket compaction.
@@ -152,7 +155,10 @@ final class LakeTable(
   /** Effective distribution key: `distCols`, or the full key when unset. */
   val distributionCols: Seq[String] = if (distCols.isEmpty) keyCols else distCols
 
-  private val hconf = spark.sparkContext.hadoopConfiguration
+  // every local write, read and stream checkpoint of this session goes
+  // through the spawn-free local filesystem from here on
+  LocalFs.install(spark)
+  private val hconf = SessionBridge.hadoopConf(spark)
   private def fs: FileSystem = new Path(root).getFileSystem(hconf)
 
   private val dataDir = s"$root/data"
@@ -2038,7 +2044,7 @@ object LakeTable {
       deltaRatio: Double = 0.3, maxDeltaFiles: Int = 12,
       targetFileRows: Option[Long] = None,
       sortColsOverride: Option[Seq[String]] = None): LakeTable = {
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(root).getFileSystem(SessionBridge.hadoopConf(spark))
     val snapDir = s"$root/_snapshots"
     val pointer = new Path(s"$root/_current")
     var v = if (fs.exists(pointer)) readString(fs, pointer).trim.toLong else -1L

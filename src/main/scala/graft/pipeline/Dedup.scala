@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SessionBridge
 
 import TextOps._
 
@@ -317,7 +318,6 @@ object Dedup {
         */
       checkpointDir: Option[String] = None): DataFrame = {
     val spark = pairs.sparkSession
-    val sc = spark.sparkContext
     var round = 0
     val e = pairs.select(col(aCol).as("s"), col(bCol).as("d"))
       .union(pairs.select(col(bCol).as("s"), col(aCol).as("d")))
@@ -344,7 +344,7 @@ object Dedup {
         // the subdir being (re)written holds only the round-(k-2)
         // state, unreferenced once round k-1 materialized
         val sub = new org.apache.hadoop.fs.Path(s"$dir/cc-${round % 2}")
-        sub.getFileSystem(sc.hadoopConfiguration).delete(sub, true)
+        sub.getFileSystem(SessionBridge.hadoopConf(spark)).delete(sub, true)
         round += 1
         df.write.parquet(sub.toString)
         spark.read.parquet(sub.toString)

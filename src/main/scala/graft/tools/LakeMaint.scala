@@ -1,5 +1,7 @@
 package graft.tools
 
+import org.apache.spark.sql.graftbridge.SessionBridge
+
 import graft.lake.LakeTable
 
 /** Lake-table maintenance CLI — the ops surface of the snapshot table
@@ -356,7 +358,7 @@ object LakeMaint {
         // command extends the history only with commits since the last run
         val dstRoot = args(2)
         val dfs = new org.apache.hadoop.fs.Path(dstRoot)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .getFileSystem(SessionBridge.hadoopConf(spark))
         val dst =
           if (dfs.exists(new org.apache.hadoop.fs.Path(s"$dstRoot/_snapshots/snap-0.txt")))
             LakeTable.open(spark, dstRoot)

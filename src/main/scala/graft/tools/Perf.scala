@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SessionBridge
 
 import graft.SparkEntry
 import graft.core.{Gen, Model}
@@ -301,7 +302,7 @@ object Perf {
     // merge path's superseded deltas are still on disk and the total shows
     // its write amplification directly
     val fs = new org.apache.hadoop.fs.Path(work)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileSystem(SessionBridge.hadoopConf(spark))
     def dataBytes(root: String): Long = {
       val d = new org.apache.hadoop.fs.Path(s"$root/data")
       if (!fs.exists(d)) 0L else fs.listStatus(d).map(_.getLen).sum

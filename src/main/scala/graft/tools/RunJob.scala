@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.SessionBridge
 
 import graft.engine.{Dialect, JdbcExec, JobConfig, SyncJob, Transformers}
 import graft.engine.cdc.CdcPipeline
@@ -461,7 +462,7 @@ object RunJob {
       ov: Overrides): graft.lake.LakeTable = {
     val root = rebasePath(d.root, ov.rebase)
     val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileSystem(SessionBridge.hadoopConf(spark))
     val exists = fs.exists(new org.apache.hadoop.fs.Path(s"$root/_snapshots/snap-0.txt"))
     if (exists) {
       val table = graft.lake.LakeTable.open(spark, root, targetFileRows = d.targetFileRows)

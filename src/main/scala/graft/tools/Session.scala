@@ -2,10 +2,13 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.LocalFs
+
 /** The one way the CLIs and [[Perf]] build a Spark session (graft.Bench and
   * graft.Verify keep their own, frozen for measurement). One config for
   * every caller: `local[cores]` with one shuffle partition per core, AQE on,
-  * 32 MB scan splits, UTC, no UI.
+  * 32 MB scan splits, UTC, no UI, and the spawn-free local filesystem
+  * ([[LocalFs.install]]).
   *
   * Cores come from `SPARK_GRAFT_CPUS` (default: the JVM's available
   * processors); `SPARK_GRAFT_MASTER` replaces the local master with a
@@ -31,6 +34,7 @@ object Session {
       .config("spark.ui.enabled", "false")
     val spark = localDir.fold(b)(d => b.config("spark.local.dir", d)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    LocalFs.install(spark)
     spark
   }
 }

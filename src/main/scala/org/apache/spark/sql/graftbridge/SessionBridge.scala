@@ -1,10 +1,11 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.classic
 
-/** Re-home a frame's logical plan in another session. Spark's
-  * `Dataset.ofRows` is `private[sql]`, so the factory lives inside the
+/** Session internals the engine needs. Spark's `Dataset.ofRows` and
+  * `SessionState` are `private[sql]`, so they are reached from inside the
   * `org.apache.spark.sql` package tree, like [[ColumnBridge]].
   */
 object SessionBridge {
@@ -14,4 +15,12 @@ object SessionBridge {
   def rebind(spark: SparkSession, df: DataFrame): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       df.asInstanceOf[classic.Dataset[_]].logicalPlan)
+
+  /** The Hadoop conf `spark`'s own reads and writes use: the context's conf
+    * overlaid with the session's runtime conf (so with what
+    * `graft.core.LocalFs.install` set there). Every engine FileSystem handle
+    * is opened with it.
+    */
+  def hadoopConf(spark: SparkSession): Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
 }

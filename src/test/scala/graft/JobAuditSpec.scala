@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, RawLocalFileSystem}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
-import graft.core.{Gen, Model}
+import graft.core.{Gen, LocalFs, Model, NioLocalFs}
 import graft.engine.cdc.CdcPipeline
 import graft.lake.LakeTable
 import graft.sources.CdcEnvelope
@@ -11,7 +12,9 @@ import graft.sources.CdcEnvelope
 /** Job-count audits: the Spark jobs a CDC epoch submits are the tail's
   * per-epoch fixed cost (each one a scheduling round trip on the driver),
   * so their number is pinned like a plan shape. Counted with a listener on
-  * the streaming batch-id local property every epoch job carries.
+  * the streaming batch-id local property every epoch job carries. The
+  * processes an epoch forks for local files are the other fixed cost;
+  * those are pinned at zero.
   */
 class JobAuditSpec extends SparkSpec {
 
@@ -89,6 +92,48 @@ class JobAuditSpec extends SparkSpec {
     // the dirty count rides the merge's write job: no probe before it
     assert(withDlq === plain + (2L -> (plain(2L) + 1)))
     assert(spark.read.text(s"$work/dlq/epoch=2").count() === 2L)
+  }
+
+  test("a merge, a checkpointed tail and a dead-letter write leave Hadoop's raw local filesystem unused") {
+    // without libhadoop the stock raw filesystem forks chmod for every file
+    // it creates and FileContext forks readlink for every rename; its write
+    // counter moves with any byte that still goes through it
+    def stockBytes: Long =
+      FileSystem.getStatistics("file", classOf[RawLocalFileSystem]).getBytesWritten
+    val work = tmpDir("jobs-spawn")
+    val gen = Gen.GenConfig(nEvents = 3000L, nConvs = 50L, partitions = 2)
+    val events = Gen.changeEvents(spark, gen).toDF()
+    Gen.writeChangeLog(spark, gen, s"$work/log", nChunks = 2, filesPerChunk = 2)
+    val lines = CdcEnvelope.encodeDebezium(events,
+      Seq("ts", "conv_id", "turn_idx", "role", "text", "tool"), Model.keyCols)
+      .limit(20).collect().map(_.getString(0))
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$work/dbz"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$work/dbz/part-0.txt"),
+      (lines :+ "not json").mkString("", "\n", "\n").getBytes)
+    val before = stockBytes
+    LakeTable.create(spark, s"$work/merged", Model.keyCols, 4).merge(events, 0L)
+    val jobs = jobsPerEpoch(CdcPipeline.replayAll(spark,
+      LakeTable.create(spark, s"$work/lake", Model.keyCols, 4),
+      CdcPipeline.CdcConfig(s"$work/log", s"$work/cp", maxFilesPerTrigger = 2)))
+    CdcPipeline.replayAll(spark, LakeTable.create(spark, s"$work/dbz-lake", Model.keyCols, 4),
+      CdcPipeline.CdcConfig(s"$work/dbz", s"$work/dbz-cp", format = "debezium",
+        dlqDir = Some(s"$work/dlq")))
+    assert(stockBytes === before)
+    assert(jobs === Map(0L -> 4, 1L -> 4))
+    assert(spark.read.text(s"$work/dlq/epoch=0").count() === 1L)
+  }
+
+  test("LocalFs.install keeps a caller's filesystem and a second call changes nothing") {
+    val s = spark.newSession()
+    val own = classOf[LocalFileSystem].getName
+    s.conf.set("fs.file.impl", own)
+    LocalFs.install(s)
+    val conf = s.conf.getAll
+    LocalFs.install(s)
+    assert(s.conf.getAll === conf)
+    assert(conf.get("fs.file.impl") === Some(own))
+    assert(conf.get("fs.file.impl.disable.cache") === None)
+    assert(conf.get("fs.AbstractFileSystem.file.impl") === Some(classOf[NioLocalFs].getName))
   }
 
   test("each maintenance op submits a pinned number of jobs") {

@@ -151,6 +151,21 @@ class ToolsSpec extends AnyFunSuite {
     assert(hits === Set("engine/cdc/CdcPipeline.scala:private def runBatches"))
   }
 
+  test("engine FileSystem handles take the session's Hadoop conf from one helper") {
+    // the context's conf misses the session's runtime conf: a handle opened
+    // with it bypasses LocalFs.install and forks chmod for every file
+    val root = Paths.get("src/main/scala")
+    val hits = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.map(_.trim).collect {
+          case l if (l.contains("hadoopConfiguration") || l.contains("newHadoopConf")) &&
+              !l.startsWith("*") && !l.startsWith("//") => root.relativize(p).toString
+        }
+      }.toSet
+    assert(hits === Set("org/apache/spark/sql/graftbridge/SessionBridge.scala"))
+  }
+
   test("RunJob builds its tail config and looks up conflict keys in one place each") {
     // the single-table and the routed lakewriter and the jdbc tail share one
     // tail-config builder, and every jdbc destination one key lookup; a
