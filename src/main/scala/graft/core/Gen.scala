@@ -119,7 +119,8 @@ object Gen {
     * splits, so a monolithic file per chunk would serialize the scan at any
     * cluster size). Chunks whose max lsn precedes `toolFromLsn` are written
     * WITHOUT the `tool` column (schema v1) so the merge stage must do
-    * additive evolution.
+    * additive evolution. Installs [[LocalFs]] first: the log is written
+    * before any lake table exists to do it.
     */
   def writeChangeLog(
       spark: SparkSession,
@@ -127,6 +128,7 @@ object Gen {
       dir: String,
       nChunks: Int,
       filesPerChunk: Int = 8): Unit = {
+    LocalFs.install(spark)
     val per = math.max(1L, cfg.nEvents / nChunks)
     var c = 0
     while (c < nChunks) {

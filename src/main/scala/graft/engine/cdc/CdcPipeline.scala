@@ -670,13 +670,11 @@ object CdcPipeline {
     * stamped here). Returns the merge stats; `skipped = true` means the
     * bootstrap had already committed.
     *
-    * WRITE PATH: on an empty table the load goes through
-    * [[graft.lake.LakeTable.bulkLoad]] — ONE clustered base-file publish,
-    * instead of merge's delta publish + the immediate full compaction the
-    * ratio rule triggers on empty-base buckets (2× the write I/O of a
-    * 100 TB onboarding, saved). A table that already holds rows falls back
-    * to an ordinary [[graft.lake.LakeTable.merge]], whose MOR read
-    * arbitrates the snapshot against stored state.
+    * WRITE PATH: one [[graft.lake.LakeTable.merge]]. On an empty table it
+    * lands the load as ONE clustered base-file publish (merge's first
+    * commit — no delta publish and compaction writing the data twice); on
+    * a table that already holds rows its MOR read arbitrates the snapshot
+    * against stored state.
     */
   def bootstrap(table: LakeTable, snapshot: DataFrame,
       snapshotLsn: Long, writerId: String = "bootstrap"): LakeTable.MergeStats = {
@@ -686,8 +684,7 @@ object CdcPipeline {
     val evs = snapshot
       .withColumn("op", org.apache.spark.sql.functions.lit("I"))
       .withColumn("lsn", org.apache.spark.sql.functions.lit(snapshotLsn))
-    if (table.currentSnapshot().files.isEmpty) table.bulkLoad(evs, epoch = 0L, writerId)
-    else table.merge(evs, epoch = 0L, writerId)
+    table.merge(evs, epoch = 0L, writerId)
   }
 
   /** A LIVE DATABASE as the streaming destination — the reference's flagship

@@ -452,9 +452,10 @@ final class LakeTable(
     spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      // delta files plus `s*` bulk-load SEED files ([[bulkLoad]]): the seed
-      // epoch is a change window and must reach tail consumers, while
-      // compaction rewrites (`b*`) stay excluded so rows never re-emit
+      // delta files plus `s*` SEED files (a first commit's base files,
+      // [[merge]]): the seed epoch is a change window and must reach tail
+      // consumers, while compaction rewrites (`b*`) stay excluded so rows
+      // never re-emit
       .option("pathGlobFilter", "{d,s}*.parquet")
       .parquet(dataDir)
       .withColumn(OpCol, coalesce(col(OpCol), lit("U")))
@@ -782,34 +783,7 @@ final class LakeTable(
 
   // ---------------------------------------------------------------- merge
 
-  /** MERGE a batch of change events, idempotently keyed by `epoch`. Batch
-    * columns: `op` (I/U/D), `lsn`, key columns, payload columns (extra
-    * columns are added to the table schema — additive evolution; missing
-    * stored columns are null-filled). O(batch): writes LWW-deduped delta
-    * files; compaction of over-threshold buckets happens in the same atomic
-    * commit. Returns per-epoch ingest metrics; a replayed epoch is skipped.
-    *
-    * Job structure per epoch (kept deliberately minimal — per-epoch driver
-    * work is the Amdahl serial fraction of the whole pipeline):
-    *  1. ONE write job: scan batch → single-exchange LWW dedupe → bucket-
-    *     laid-out parquet delta files. `rowsIn`/`deletes` ride the same job
-    *     via `observe`; per-bucket row counts come from parquet footers
-    *     (read in parallel); the skew-factor metric derives from the bucket
-    *     counts — no second pass over the data, ever.
-    *  2. Compaction (only for over-threshold buckets) + atomic commit.
-    *
-    * `expectPrevEpoch` is a compare-and-set on the writer's lineage: the
-    * commit (checked inside the OCC loop, so it holds under any rebase
-    * interleaving) aborts with [[LakeTable.ConcurrentRefreshException]]
-    * when the writer's last epoch is not exactly this value. Pass it when
-    * the batch is a NON-idempotent delta computed FROM that previous epoch
-    * (additive rollup windows): a concurrent refresher that advanced the
-    * lineage means this delta's window overlaps an applied one and must be
-    * recomputed, not committed.
-    */
-  /** Shared ingest prep for [[merge]] and [[bulkLoad]] — ONE definition so
-    * the two ingest paths can never silently diverge on schema or
-    * tie-break rules. Performs:
+  /** Ingest prep for [[merge]]. Performs:
     *  - schema resolution (additive evolution + lossless type widening;
     *    key column types are FROZEN: the bucket routing hashes the key's
     *    RUNTIME type — murmur3 of an int != murmur3 of the same value as a
@@ -894,6 +868,42 @@ final class LakeTable(
     else perBucket.max.toDouble / (perBucket.sum.toDouble / perBucket.size)
   }
 
+  /** MERGE a batch of change events, idempotently keyed by `epoch`. Batch
+    * columns: `op` (I/U/D), `lsn`, key columns, payload columns (extra
+    * columns are added to the table schema — additive evolution; missing
+    * stored columns are null-filled). O(batch): writes LWW-deduped delta
+    * files; compaction of over-threshold buckets happens in the same atomic
+    * commit. Returns per-epoch ingest metrics; a replayed epoch is skipped.
+    *
+    * Job structure per epoch (kept deliberately minimal — per-epoch driver
+    * work is the Amdahl serial fraction of the whole pipeline):
+    *  1. ONE write job: scan batch → single-exchange LWW dedupe → bucket-
+    *     laid-out parquet delta files. `rowsIn`/`deletes` ride the same job
+    *     via `observe`; per-bucket row counts come from parquet footers
+    *     (read in parallel); the skew-factor metric derives from the bucket
+    *     counts — no second pass over the data, ever.
+    *  2. Compaction (only for over-threshold buckets) + atomic commit.
+    *
+    * FIRST COMMIT: into a table that holds no files, the same write job
+    * publishes the batch as the first base generation — kind "b" files
+    * named `s<version>-*`, with stats on every mappable column and the
+    * `sortCols` clustering and `targetFileRows` slicing of a compaction
+    * rewrite — so step 2 finds no delta rows and the table is written
+    * once, not as deltas and then again as compacted base files. The base
+    * entries double as the commit's change window (`addedDeltas`), and the
+    * `s` prefix lets [[readStreamChanges]] emit them exactly once. A first
+    * commit that loses the OCC race lands its files on the winner's as
+    * kind "d", so a bucket never holds two base generations.
+    *
+    * `expectPrevEpoch` is a compare-and-set on the writer's lineage: the
+    * commit (checked inside the OCC loop, so it holds under any rebase
+    * interleaving) aborts with [[LakeTable.ConcurrentRefreshException]]
+    * when the writer's last epoch is not exactly this value. Pass it when
+    * the batch is a NON-idempotent delta computed FROM that previous epoch
+    * (additive rollup windows): a concurrent refresher that advanced the
+    * lineage means this delta's window overlaps an applied one and must be
+    * recomputed, not committed.
+    */
   def merge(batch: DataFrame, epoch: Long,
       writerId: String = DefaultWriter,
       expectPrevEpoch: Option[Long] = None): MergeStats = {
@@ -902,7 +912,7 @@ final class LakeTable(
     if (epoch <= snap.lastEpochFor(writerId))
       return MergeStats(epoch, skipped = true, 0, 0, 0, 0, 0, snap.rows, 1.0)
 
-    val (deltaOut, storedNew, obsIn) = prepareBatch(batch, snap, s"lake-in-$epoch")
+    val (out, storedNew, obsIn) = prepareBatch(batch, snap, s"lake-in-$epoch")
 
     val dbg = sys.env.contains("GRAFT_MERGE_DEBUG")
     var tLast = System.nanoTime()
@@ -912,14 +922,16 @@ final class LakeTable(
       tLast = now
     }
 
-    // -- the single write job (dedupe + observe + bucketed delta publish) --
-    val deltas = publish(deltaOut, s"d${snap.version + 1}-${nonce()}", "d",
+    // -- the single write job (dedupe + observe + bucketed publish): deltas,
+    // or the first base generation of a table with no files (scaladoc) --
+    val (prefix, kind) = if (snap.files.isEmpty) ("s", "b") else ("d", "d")
+    val added = publish(out, s"$prefix${snap.version + 1}-${nonce()}", kind,
       numBuckets, reshuffle = false)
-    lap("delta-publish")
+    lap("publish")
     val obs = observed(obsIn)
     val rowsIn = obs.rowsIn
-    val rowsDistinct = deltas.map(_.rows).sum
-    val affected: Set[Int] = deltas.map(_.bucket).toSet
+    val rowsDistinct = added.map(_.rows).sum
+    val affected: Set[Int] = added.map(_.bucket).toSet
 
     // optimistic-concurrency commit: claim base.version+1; on conflict,
     // REBASE onto the winner's snapshot and retry. Rebasing with delta
@@ -981,9 +993,9 @@ final class LakeTable(
     // — the shuffle-partition-level skew that the salting/bucketing design
     // has to absorb, measured where it physically materializes.
     val deletes = obs.deletesIn
-    val skew = skewOf(deltas)
+    val skew = skewOf(added)
 
-    var files = snap.files ++ deltas
+    var files = snap.files ++ added
 
     // -- compaction: fold over-threshold buckets into new base files -----
     // Ratio-driven (amortized O(table/ratio) write amplification) with a
@@ -1006,95 +1018,30 @@ final class LakeTable(
     }
 
     // stats ride in the manifest so metrics commit atomically with data;
-    // on a rebase the file list is the WINNER's files + this epoch's deltas
-    // (compaction outputs dropped — see commitRebased)
+    // on a rebase the file list is the WINNER's files + this epoch's files
+    // as deltas (compaction outputs dropped — see commitRebased; a first
+    // commit's base files must not become a second base generation)
+    def landed(base: Snapshot): Seq[FileEntry] =
+      if (base eq snap) added else added.map(_.copy(kind = "d"))
     commitRebased(
       base => {
-        val f = if (base eq snap) files else base.files ++ deltas
+        val f = if (base eq snap) files else base.files ++ landed(base)
         Snapshot(
           version = -1L, // overwritten by commitRebased
           lastEpoch = epoch,
           schema = Some(unionSchemas(base.schema.getOrElse(storedNew), storedNew)),
           rows = f.map(_.rows).sum,
           files = f,
-          addedDeltas = deltas) // pre-compaction: incremental readers keep them
+          addedDeltas = landed(base)) // pre-compaction: incremental readers keep them
       },
       base => {
-        val f = if (base eq snap) files else base.files ++ deltas
+        val f = if (base eq snap) files else base.files ++ landed(base)
         MergeStats(epoch, skipped = false, rowsIn, rowsDistinct,
           rowsIn - rowsDistinct, deletes, affected.size, f.map(_.rows).sum, skew,
           seconds = (System.nanoTime() - tStart) / 1e9,
           compactedBuckets = if (base eq snap) toCompact.size else 0,
           bytesIn = obs.bytesIn)
       })
-  }
-
-  /** BULK-LOAD: the table's FIRST data commit, published directly as BASE
-    * files. [[merge]] on an empty table writes everything twice — the
-    * delta publish, then the inline compaction the ratio rule triggers on
-    * every empty-base bucket — so a 100 TB initial load through merge
-    * costs 2× the write I/O and an extra full read. bulkLoad runs the same
-    * single-exchange LWW dedupe and ONE base publish: stats harvested for
-    * all mappable columns (base-file rule — file skipping works from the
-    * first commit), sort-order clustering and `targetFileRows` slicing
-    * applied exactly as a compaction rewrite would. The base entries
-    * double as the commit's change window (`addedDeltas`), so incremental
-    * consumers (replicas, rollups, feeds) see the load as one ordinary
-    * epoch.
-    *
-    * `batch` has merge's input shape (`op`/`lsn` + payload); a plain
-    * snapshot load stamps op=I and a constant lsn
-    * ([[graft.engine.cdc.CdcPipeline.bootstrap]]). The epoch is guarded by
-    * `writerId`'s lineage exactly like merge (a replayed bulk load is
-    * skipped). Requires an empty table: against stored rows only merge's
-    * MOR arbitration is sound. A concurrent commit surfaces as
-    * [[LakeTable.CommitConflictException]] and is NOT rebased — rebasing
-    * base files could overlap another writer's bucket coverage and break
-    * the one-base-generation-per-bucket invariant; loading into a table
-    * others are actively writing is a setup error.
-    */
-  def bulkLoad(batch: DataFrame, epoch: Long,
-      writerId: String = DefaultWriter): MergeStats = {
-    val tStart = System.nanoTime()
-    val snap = currentSnapshot()
-    if (epoch <= snap.lastEpochFor(writerId))
-      return MergeStats(epoch, skipped = true, 0, 0, 0, 0, 0, snap.rows, 1.0)
-    require(snap.files.isEmpty,
-      s"bulkLoad is the table's FIRST data commit ($root already holds " +
-        s"${snap.rows} rows) — use merge, whose MOR read arbitrates " +
-        "against stored rows")
-
-    // schema resolution + batch alignment + LWW dedupe: same rules as merge
-    val (out, storedNew, obsIn) = prepareBatch(batch, snap, s"lake-bulk-$epoch")
-
-    val newVersion = snap.version + 1
-    // file-name prefix `s` (seed), manifest kind "b": every kind-driven
-    // path (pruning, compaction, resolution) treats these as ordinary base
-    // files, but the [[readStreamChanges]] file tail — which must EXCLUDE
-    // compaction rewrites (`b*`) to never re-emit rows — can still emit
-    // the seed epoch exactly once via its `{d,s}*` glob. Without the
-    // distinct prefix, a tail consumer attached to an onboarded table
-    // would permanently miss every seeded key that never changes again.
-    val base = publish(out, s"s$newVersion-${nonce()}", "b", numBuckets, reshuffle = false)
-    val obs = observed(obsIn)
-    val rowsDistinct = base.map(_.rows).sum
-    val st = MergeStats(epoch, skipped = false, obs.rowsIn, rowsDistinct,
-      obs.rowsIn - rowsDistinct, obs.deletesIn,
-      base.map(_.bucket).toSet.size, rowsDistinct, skewOf(base),
-      seconds = (System.nanoTime() - tStart) / 1e9,
-      bytesIn = obs.bytesIn)
-    commitSnapshot(Snapshot(
-      version = newVersion,
-      lastEpoch = epoch,
-      schema = Some(storedNew),
-      rows = rowsDistinct,
-      files = base,
-      stats = Some(st),
-      addedDeltas = base, // the load IS this epoch's change window
-      epochs = snap.epochs + (writerId -> epoch),
-      maxLsn = math.max(snap.maxLsn, obs.maxLsnIn),
-      lsnHigh = obs.maxLsnIn))
-    st
   }
 
   /** Two-phase publish: write `df` partitioned by bucket into the staging
@@ -1832,11 +1779,11 @@ final class LakeTable(
 object LakeTable {
 
   /** Another writer claimed the snapshot version this commit targeted.
-    * [[LakeTable#merge]] rebases and retries automatically; every other
-    * committer surfaces it — [[LakeTable#compactAll]],
-    * [[LakeTable#recluster]], [[LakeTable#reclusterZOrder]],
-    * [[LakeTable#expireTombstones]], [[LakeTable#rollbackTo]] and
-    * [[LakeTable#bulkLoad]] — run them single-writer or retry at the call
+    * [[LakeTable#merge]] rebases and retries automatically, a table's first
+    * commit included; every other committer surfaces it —
+    * [[LakeTable#compactAll]], [[LakeTable#recluster]],
+    * [[LakeTable#reclusterZOrder]], [[LakeTable#expireTombstones]] and
+    * [[LakeTable#rollbackTo]] — run them single-writer or retry at the call
     * site.
     */
   final class CommitConflictException(msg: String) extends RuntimeException(msg)

@@ -74,15 +74,6 @@ object Replicate {
     val changes = (if (since < 0) src.readChangesBootstrap() else src.readChangesSince(since))
       .withColumnRenamed(LakeTable.OpCol, "op")
       .withColumnRenamed(LakeTable.LsnCol, "lsn")
-    // a fresh-lineage bootstrap into a still-EMPTY destination bulk-loads
-    // base files directly ([[LakeTable.bulkLoad]]): one write of the table
-    // instead of merge's delta publish + the immediate empty-base
-    // compaction — at a 100 TB replica seed that halves the write I/O.
-    // A destination with its own rows (or a concurrent first commit, which
-    // surfaces as a CommitConflictException on a re-runnable sync) takes
-    // the ordinary MOR merge.
-    if (since < 0 && dst.currentSnapshot().files.isEmpty)
-      dst.bulkLoad(changes, epoch = srcVersion, writerId = writerId)
-    else dst.merge(changes, epoch = srcVersion, writerId = writerId)
+    dst.merge(changes, epoch = srcVersion, writerId = writerId)
   }
 }

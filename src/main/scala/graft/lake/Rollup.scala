@@ -149,13 +149,7 @@ object Rollup {
     // lsn = source head version: monotone across syncs and unique per group
     // within one sync, so LWW keeps rollup rows converging even if windows
     // are replayed or applied out of order across writers
-    val out = events.withColumn("lsn", lit(head))
-    // the bootstrap aggregate into a still-empty destination bulk-loads
-    // base files directly — one write instead of merge's delta publish +
-    // immediate empty-base compaction (same trade as Replicate.sync)
-    if (since < 0L && dst.currentSnapshot().files.isEmpty)
-      dst.bulkLoad(out, epoch = head, writerId = writerId)
-    else dst.merge(out, epoch = head, writerId = writerId)
+    dst.merge(events.withColumn("lsn", lit(head)), epoch = head, writerId = writerId)
   }
 
   /** Incremental refresh for PURELY ADDITIVE rollups (SUM-shaped
@@ -273,13 +267,10 @@ object Rollup {
         next.withColumn("op",
           when(col("n_live") === 0L, lit("D")).otherwise(lit("U")))
       }
-    val out = events.withColumn("lsn", lit(head))
-    if (since < 0L && dst.currentSnapshot().files.isEmpty)
-      dst.bulkLoad(out, epoch = head, writerId = writerId)
     // deltas are NOT idempotent at the data level: the epoch CAS makes a
     // racing refresher abort (ConcurrentRefreshException) instead of
     // double-counting an overlapping window
-    else dst.merge(out, epoch = head, writerId = writerId,
+    dst.merge(events.withColumn("lsn", lit(head)), epoch = head, writerId = writerId,
       expectPrevEpoch = if (since >= 0L) Some(since) else None)
   }
 

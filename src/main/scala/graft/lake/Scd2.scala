@@ -100,7 +100,6 @@ object Scd2 {
       return LakeTable.MergeStats(head, skipped = true, 0, 0, 0, 0, 0,
         dst.currentSnapshot().rows, 1.0)
 
-    var last: LakeTable.MergeStats = null
     if (since < 0L) {
       // fresh consumer: full-history attach when the commit log reaches
       // back to snapshot 0, else seed from current state (see scaladoc)
@@ -122,14 +121,11 @@ object Scd2 {
           .withColumn("op", when(col(LakeTable.OpCol) === "D", "D").otherwise("U"))
           .withColumn("lsn", col(LakeTable.LsnCol))
           .drop(LakeTable.LsnCol, LakeTable.OpCol)
-        last =
-          if (dst.currentSnapshot().files.isEmpty)
-            dst.bulkLoad(open, epoch = head, writerId = writerId)
-          else dst.merge(open, epoch = head, writerId = writerId)
-        return last
+        return dst.merge(open, epoch = head, writerId = writerId)
       }
       since = -1L // attach from the very first commit
     }
+    var last: LakeTable.MergeStats = null
     var lo = since
     while (lo < head) {
       val hi = math.min(lo + maxVersionsPerMerge, head)

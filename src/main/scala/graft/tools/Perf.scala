@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.SessionBridge
 
 import graft.SparkEntry
 import graft.core.{Gen, Model}
@@ -29,10 +28,6 @@ import graft.sources.CdcEnvelope
   *       consumed as a single-table Debezium tail vs routed into nTables
   *       sequentially vs with overlapped merges (routeParallelism =
   *       nTables); requires equal live rows, prints one JSON line of events/s
-  *   bulkload [nEvents] [buckets] [workDir]   the two initial-load paths on
-  *       one snapshot: merge into an empty table (delta publish + inline
-  *       compaction — the data written twice) vs LakeTable.bulkLoad (one
-  *       base publish); requires identical end states
   *   manifest [eventsPerEpoch] [epochs] [workDir]   commit latency vs
   *       bucket count (32..4096) and metrics()/history() latency vs history
   *       length — the LakeTable manifest-scale note's curve
@@ -51,7 +46,6 @@ object Perf {
       |  queries [repeats] [query ...]
       |  plans <outDir> <suffix> [query ...]
       |  route [nEvents] [nTables] [buckets] [workDir]
-      |  bulkload [nEvents] [buckets] [workDir]
       |  manifest [eventsPerEpoch] [epochs] [workDir]
       |  scaling [nEvents] [nSmall] [smallfirst|bigfirst]""".stripMargin
 
@@ -136,12 +130,6 @@ object Perf {
         val buckets = count(rest, 2, "buckets", 8L).toInt
         val work = rest.lift(3).getOrElse(s"$scratch/graft-perf-route")
         () => withSession(route(_, nEvents, nTables, buckets, reset(work)))
-      case Some("bulkload") =>
-        atMost(3)
-        val nEvents = count(rest, 0, "nEvents", 4000000L)
-        val buckets = count(rest, 1, "buckets", 32L).toInt
-        val work = rest.lift(2).getOrElse(s"$scratch/graft-perf-bulkload")
-        () => withSession(bulkload(_, nEvents, buckets, reset(work)))
       case Some("manifest") =>
         atMost(3)
         val perEpoch = count(rest, 0, "eventsPerEpoch", 100000L)
@@ -284,57 +272,6 @@ object Perf {
       f""""single_sec":$singleSecs%.2f,"single_eps":${nEvents / singleSecs}%.0f,""" +
       f""""routed_seq_sec":$seqSecs%.2f,"routed_seq_eps":${nEvents / seqSecs}%.0f,""" +
       f""""routed_par_sec":$parSecs%.2f,"routed_par_eps":${nEvents / parSecs}%.0f}""")
-    0
-  }
-
-  private def bulkload(spark: SparkSession, nEvents: Long, buckets: Int, work: String): Int = {
-    // the onboarding input: a consistent snapshot stamped at one lsn
-    // (unique keys — the LWW dedupe stage is a pass-through for both paths)
-    val cfg = Gen.GenConfig(nEvents = nEvents, nConvs = math.max(10L, nEvents / 100),
-      partitions = Session.defaultCores)
-    val snapshot = Gen.expectedState(spark, cfg).toDF()
-      .withColumn("op", lit("I")).withColumn("lsn", lit(nEvents))
-      .persist()
-    val rows = snapshot.count() // materialize outside both timers
-    println(s"[gen] $rows snapshot rows from $nEvents events")
-
-    // bytes under data/ right after the load: neither path vacuums, so the
-    // merge path's superseded deltas are still on disk and the total shows
-    // its write amplification directly
-    val fs = new org.apache.hadoop.fs.Path(work)
-      .getFileSystem(SessionBridge.hadoopConf(spark))
-    def dataBytes(root: String): Long = {
-      val d = new org.apache.hadoop.fs.Path(s"$root/data")
-      if (!fs.exists(d)) 0L else fs.listStatus(d).map(_.getLen).sum
-    }
-
-    def run(name: String)(load: LakeTable => LakeTable.MergeStats): (String, Long) = {
-      val root = s"$work/$name"
-      val table = LakeTable.create(spark, root, Model.keyCols, numBuckets = buckets)
-      val t0 = System.nanoTime()
-      val st = load(table)
-      val secs = (System.nanoTime() - t0) / 1e9
-      val snap = table.currentSnapshot()
-      val kinds = snap.files.groupBy(_.kind).map { case (k, f) => s"$k=${f.size}" }.mkString(" ")
-      println(f"[$name] $secs%.2f s  rowsApplied=${st.rowsApplied}  files: $kinds  " +
-        f"live bytes=${dataBytes(root)}")
-      (root, st.rowsApplied)
-    }
-
-    val (mergeRoot, mergeRows) = run("merge")(_.merge(snapshot, 0L))
-    val mergeTotalBytes = dataBytes(mergeRoot)
-    val (bulkRoot, bulkRows) = run("bulkload")(_.bulkLoad(snapshot, 0L))
-    val bulkTotalBytes = dataBytes(bulkRoot)
-    println(f"[bytes] merge path wrote $mergeTotalBytes%,d bytes under data/ " +
-      f"(deltas + compacted base, pre-vacuum); bulk load wrote $bulkTotalBytes%,d " +
-      f"(${mergeTotalBytes.toDouble / math.max(1L, bulkTotalBytes)}%.2fx)")
-
-    require(mergeRows == bulkRows, s"row mismatch: merge=$mergeRows bulk=$bulkRows")
-    val a = LakeTable.open(spark, mergeRoot).read()
-    val b = LakeTable.open(spark, bulkRoot).read()
-    val diff = a.exceptAll(b).count() + b.exceptAll(a).count()
-    require(diff == 0L, s"end states differ: $diff rows")
-    println(s"[check] end states identical ($mergeRows rows)")
     0
   }
 

@@ -6,6 +6,18 @@ import org.apache.spark.sql.functions._
 
 import graft.lake.LakeTable
 
+/** Holds each racing writer's batch inside its write job until every racer
+  * has reached its own: all of them then publish against the head they read
+  * before the gate, and all but one commit lose the race.
+  */
+object RaceGate {
+  @volatile var latch = new CountDownLatch(0)
+  def meet(): Unit = {
+    latch.countDown()
+    latch.await(60, TimeUnit.SECONDS)
+  }
+}
+
 /** Optimistic-concurrency commit protocol: the snapshot-file claim is the
   * atomic commit point, the pointer is a roll-forward hint, and concurrent
   * merges rebase + retry so no update is lost (LWW by lsn makes rebased
@@ -58,6 +70,39 @@ class ConcurrencySpec extends SparkSpec {
       writerId = "writer-1")
     assert(replay.skipped)
     assert(table.read().count() === 150L)
+  }
+
+  test("two writers racing a fresh table's first commit: one base generation, LWW across both") {
+    val root = tmpDir("occ-fresh") + "/t"
+    val gate = udf { (id: Long) => RaceGate.meet(); id }
+    RaceGate.latch = new CountDownLatch(2)
+    // overlapping keys 25..49: writer 2 carries the higher lsns
+    def racer(w: Int, ids: Range) = spark.range(ids.start, ids.end, 1, 1)
+      .select(lit("U").as("op"), ($"id" + 1000L * w).as("lsn"), gate($"id").as("id"),
+        concat(lit(s"w$w-"), $"id").as("payload"))
+    val pool = Executors.newFixedThreadPool(2)
+    val results = Seq(1 -> (0 until 50), 2 -> (25 until 75)).map { case (w, ids) =>
+      pool.submit(new java.util.concurrent.Callable[LakeTable.MergeStats] {
+        def call(): LakeTable.MergeStats = LakeTable.create(spark, root, Seq("id"), numBuckets = 4)
+          .merge(racer(w, ids), epoch = 0L, writerId = s"writer-$w")
+      })
+    }
+    val stats = results.map(_.get(120, TimeUnit.SECONDS))
+    pool.shutdown()
+
+    assert(stats.forall(!_.skipped))
+    val table = LakeTable.create(spark, root, Seq("id"), numBuckets = 4)
+    val snap = table.currentSnapshot()
+    assert(snap.version === 1L)
+    def commitPrefix(path: String): String = path.split("-").take(2).mkString("-")
+    assert(snap.files.map(f => commitPrefix(f.path)).distinct.size === 2 &&
+      snap.files.forall(_.path.startsWith("s")), "both writers published a first commit")
+    assert(snap.files.filter(_.kind == "b").map(f => commitPrefix(f.path)).distinct.size === 1,
+      "the rebased first commit must land as deltas, not a second base generation")
+    val got = table.read().select("id", "payload").collect().toSeq
+      .map(r => (r.getLong(0), r.getString(1)))
+    assert(got.map(_._1).sorted === (0L until 75L))
+    assert(got.forall { case (id, p) => p == (if (id >= 25L) s"w2-$id" else s"w1-$id") })
   }
 
   test("maintenance race detector catches a concurrent commit at EXACTLY the synthetic lsn") {

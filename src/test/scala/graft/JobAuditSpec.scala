@@ -64,7 +64,7 @@ class JobAuditSpec extends SparkSpec {
     val t = LakeTable.create(spark, s"$work/lake", Model.keyCols, 4)
     val jobs = jobsPerEpoch(CdcPipeline.replayAll(spark, t,
       CdcPipeline.CdcConfig(s"$work/log", s"$work/cp", maxFilesPerTrigger = 2)))
-    assert(jobs === Map(0L -> 4, 1L -> 4, 2L -> 4))
+    assert(jobs === Map(0L -> 2, 1L -> 4, 2L -> 4))
   }
 
   test("a debezium tail's DLQ costs no job on a clean epoch and one write on a dirty one") {
@@ -119,8 +119,17 @@ class JobAuditSpec extends SparkSpec {
       CdcPipeline.CdcConfig(s"$work/dbz", s"$work/dbz-cp", format = "debezium",
         dlqDir = Some(s"$work/dlq")))
     assert(stockBytes === before)
-    assert(jobs === Map(0L -> 4, 1L -> 4))
+    assert(jobs === Map(0L -> 2, 1L -> 4))
     assert(spark.read.text(s"$work/dlq/epoch=0").count() === 1L)
+  }
+
+  test("a change log generated on a session without a lake table leaves Hadoop's raw local filesystem unused") {
+    val stock = FileSystem.getStatistics("file", classOf[RawLocalFileSystem])
+    val before = stock.getBytesWritten
+    Gen.writeChangeLog(spark.newSession(),
+      Gen.GenConfig(nEvents = 3000L, nConvs = 50L, partitions = 2),
+      s"${tmpDir("jobs-gen")}/log", nChunks = 2, filesPerChunk = 2)
+    assert(stock.getBytesWritten === before)
   }
 
   test("LocalFs.install keeps a caller's filesystem and a second call changes nothing") {
@@ -142,7 +151,7 @@ class JobAuditSpec extends SparkSpec {
     val events = Gen.changeEvents(spark, gen).toDF().cache()
     val t = LakeTable.create(spark, tmpDir("jobs-maint"), Model.keyCols, 4,
       targetFileRows = Some(500L))
-    // a large first epoch compacts every bucket; the small second one stays
+    // a large first epoch lands as base files; the small second one stays
     // as deltas for compactAll to fold
     t.merge(events.filter($"lsn" < 5400L), 0L)
     t.merge(events.filter($"lsn" >= 5400L), 1L)
@@ -187,7 +196,7 @@ class JobAuditSpec extends SparkSpec {
     assert(compiled === 0L)
     // the epoch tag is a thread-local job property, not session state: it
     // still marks every job the rebound micro-batch submits
-    assert(jobs === Map(0L -> 4, 1L -> 4, 2L -> 4))
+    assert(jobs === Map(0L -> 2, 1L -> 4, 2L -> 4))
     assert(untagged === Nil)
   }
 }

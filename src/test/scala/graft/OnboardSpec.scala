@@ -72,10 +72,10 @@ class OnboardSpec extends SparkSpec {
   }
 
   test("bootstrap on an empty table bulk-loads base files in one write") {
-    // the empty-table path must go through LakeTable.bulkLoad: ONE base
-    // publish (no delta + immediate-compaction double write), stats on all
-    // columns, and the base entries doubling as the change window so a
-    // replica can follow the table from its very first commit
+    // a first commit lands as base files: ONE base publish (no delta +
+    // immediate-compaction double write), stats on all columns, and the
+    // base entries doubling as the change window so a replica can follow
+    // the table from its very first commit
     val table = LakeTable.create(spark, tmpDir("onb-bulk") + "/t", Model.keyCols, numBuckets = 8)
     val st = CdcPipeline.bootstrap(table, snapshotAt(L0), L0)
     assert(!st.skipped && st.compactedBuckets === 0)
@@ -93,12 +93,29 @@ class OnboardSpec extends SparkSpec {
     assert(diff === 0L, "replica must converge from the bulk-loaded first commit")
   }
 
+  test("a fresh table's first merge writes each row once") {
+    // no delta publish superseded by an inline compaction: every byte under
+    // data/ belongs to a live base file of the first commit
+    val root = tmpDir("onb-first") + "/t"
+    val table = LakeTable.create(spark, root, Model.keyCols, numBuckets = 8)
+    val st = table.merge(Gen.changeEvents(spark, cfg).toDF(), epoch = 0L)
+    assert(!st.skipped && st.compactedBuckets === 0)
+    val snap = table.currentSnapshot()
+    assert(snap.files.nonEmpty && snap.files.forall(f => f.kind == "b" && f.path.startsWith("s")),
+      s"expected s-named base files, got ${snap.files.map(f => (f.kind, f.path)).take(3)}")
+    assert(snap.addedDeltas === snap.files, "the first commit is its own change window")
+    def bytes(names: Seq[String]): Long = names.map(n => new java.io.File(s"$root/data/$n").length).sum
+    val onDisk = new java.io.File(s"$root/data").list().toSeq.filter(_.endsWith(".parquet"))
+    assert(bytes(onDisk) === bytes(snap.files.map(_.path)))
+    assertMatchesFullReplay(table)
+  }
+
   test("the file tail emits the bulk-loaded seed epoch; compaction rewrites stay silent") {
-    // bulkLoad names its base files `s*` so readStreamChanges' {d,s} glob
-    // ships the onboarding epoch to tail consumers exactly once — without
-    // it, every seeded key that never changes again would be invisible to
-    // the file tail forever. Compaction rewrites keep the `b*` prefix and
-    // must stay excluded (no re-emission).
+    // a first commit names its base files `s*` so readStreamChanges' {d,s}
+    // glob ships the onboarding epoch to tail consumers exactly once —
+    // without it, every seeded key that never changes again would be
+    // invisible to the file tail forever. Compaction rewrites keep the `b*`
+    // prefix and must stay excluded (no re-emission).
     import spark.implicits._
     val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     val dir = tmpDir("onb-tail")

@@ -27,6 +27,7 @@ class ToolsSpec extends AnyFunSuite {
     Seq(
       Array.empty[String],
       Array("nosuch"),
+      Array("bulkload"),
       Array("queries", "three"),
       Array("queries", "0"),
       Array("queries", "3", typo),
