@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
-import graft.sources.SyntheticSource
+import graft.sources.{CdcEnvelope, SyntheticSource}
 
 /** The reference's ONLY user entry point is a JSON job config — `datax -job
   * config.json` (`core/engine/engine.go:34-81`) parsed into a dotted-path
@@ -552,8 +552,8 @@ object JobConfig {
       val path = p.str("path")
       require(path.nonEmpty, "cdcreader: path (the change-log directory) is required")
       val fmt = p.str("format", "parquet").toLowerCase
-      require(Set("parquet", "debezium", "canal", "maxwell")(fmt),
-        s"cdcreader format must be parquet|debezium|canal|maxwell (got '$fmt')")
+      require(fmt == "parquet" || CdcEnvelope.Formats(fmt),
+        s"cdcreader format must be parquet|${CdcEnvelope.Formats.mkString("|")} (got '$fmt')")
       val ckpt = p.str("checkpoint")
       require(ckpt.nonEmpty,
         "cdcreader: checkpoint is required — offset lineage is what makes the tail resumable")
@@ -722,8 +722,8 @@ object JobConfig {
         val fdir = f.str("path")
         require(fdir.nonEmpty, "a feed follower needs path (the feed directory)")
         val fmt = f.str("format").toLowerCase
-        require(Set("debezium", "canal", "maxwell")(fmt),
-          s"feed follower format must be debezium|canal|maxwell (got '$fmt')")
+        require(CdcEnvelope.Formats(fmt),
+          s"feed follower format must be ${CdcEnvelope.Formats.mkString("|")} (got '$fmt')")
         FollowerSpec(fdir, keyCols = f.strList("onConflictColumn"),
           buckets = 0, distCols = Nil, targetFileRows = None,
           writerId = "", aggregations = Nil, feedFormat = fmt)
@@ -847,8 +847,8 @@ object JobConfig {
       val dir = p.str("path")
       require(dir.nonEmpty, "cdcwriter: path (the feed directory) is required")
       val fmt = p.str("format", "debezium").toLowerCase
-      require(Set("debezium", "canal", "maxwell")(fmt),
-        s"cdcwriter format must be debezium|canal|maxwell (got '$fmt')")
+      require(CdcEnvelope.Formats(fmt),
+        s"cdcwriter format must be ${CdcEnvelope.Formats.mkString("|")} (got '$fmt')")
       val keys = p.strList("onConflictColumn")
       require(fmt != "debezium" || keys.nonEmpty,
         "cdcwriter format=debezium needs onConflictColumn — the key columns " +

@@ -168,19 +168,15 @@ object SyncJob {
       // PARQUET; only TEXT is implemented there — Spark gives ORC for free)
       case "orc" => spark.read.options(src.options).orc(paths: _*)
       case "text" => spark.read.options(src.options).text(paths: _*)
-      case env @ ("debezium" | "canal" | "maxwell") =>
+      case env if graft.sources.CdcEnvelope.Formats(env) =>
         // batch read of a binlog-dump file (the offline twin of the
         // CdcPipeline streaming tail): named `columns` specs define the
         // payload schema; output is canonical (op, lsn, payload...)
         require(src.columns.nonEmpty && src.columns.forall(_.name.nonEmpty),
           s"'$env' sources need named `columns` specs for the payload schema")
-        val payloadSchema = schemaFor(src.columns)
-        val raw = spark.read.options(src.options).text(src.path)
-        return env match { // typed projection already applied via the schema
-          case "debezium" => graft.sources.CdcEnvelope.debezium(raw, "value", payloadSchema)
-          case "canal" => graft.sources.CdcEnvelope.canal(raw, "value", payloadSchema)
-          case _ => graft.sources.CdcEnvelope.maxwell(raw, "value", payloadSchema)
-        }
+        // typed projection already applied via the schema
+        return graft.sources.CdcEnvelope.decode(env,
+          spark.read.options(src.options).text(src.path), "value", schemaFor(src.columns))
       case f => throw new IllegalArgumentException(s"source format '$f'")
     }
     val flattened =
@@ -329,7 +325,7 @@ object SyncJob {
     // and a lake sink fed by an envelope source consumes CHANGE EVENTS
     // (op/lsn preserved through the merge — the explicit opt-in is set
     // here, where the source format is known)
-    val isEnvelope = Set("debezium", "canal", "maxwell").contains(src.format)
+    val isEnvelope = graft.sources.CdcEnvelope.Formats(src.format)
     runFrom(spark, read(spark, src), transforms, sink, badPredicate, errorLimit,
       preSql, postSql, envelopeInput = isEnvelope)
   }
@@ -595,19 +591,13 @@ object SyncJob {
             case _ => lines0
           }
           (lines, "text")
-        case env @ ("debezium" | "canal" | "maxwell") =>
+        case env if graft.sources.CdcEnvelope.Formats(env) =>
           require(df.columns.contains("op") && df.columns.contains("lsn"),
             s"'$env' sink needs canonical (op, lsn, payload...) input columns")
+          require(env != "debezium" || sink.keyCols.nonEmpty,
+            "debezium sink needs keyCols for the delete key image")
           val payload = df.columns.filterNot(c => c == "op" || c == "lsn").toSeq
-          val enc = env match {
-            case "debezium" =>
-              require(sink.keyCols.nonEmpty,
-                "debezium sink needs keyCols for the delete key image")
-              graft.sources.CdcEnvelope.encodeDebezium(df, payload, sink.keyCols)
-            case "canal" => graft.sources.CdcEnvelope.encodeCanal(df, payload)
-            case _ => graft.sources.CdcEnvelope.encodeMaxwell(df, payload)
-          }
-          (enc, "text")
+          (graft.sources.CdcEnvelope.encode(env, df, payload, sink.keyCols), "text")
         case f => (df, f)
       }
       // reference nonConflict fails if ANY file exists at the target; the

@@ -1,7 +1,6 @@
 package graft.engine.cdc
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graftbridge.SessionBridge
 
 import graft.lake.LakeTable
@@ -64,8 +63,8 @@ object CdcFeed {
   /** Ship all source commits since the feed's watermark; see object docs. */
   def sync(src: LakeTable, dir: String, format: String,
       keyCols: Seq[String] = Nil): FeedStats = {
-    require(Set("debezium", "canal", "maxwell")(format),
-      s"feed format must be debezium|canal|maxwell (got '$format')")
+    require(CdcEnvelope.Formats(format),
+      s"feed format must be ${CdcEnvelope.Formats.mkString("|")} (got '$format')")
     require(format != "debezium" || keyCols.nonEmpty,
       "a debezium feed needs key columns — a delete event's `before` image " +
         "is the key (REPLICA IDENTITY DEFAULT); pass the table's primary key")
@@ -88,11 +87,7 @@ object CdcFeed {
       .withColumnRenamed(LakeTable.OpCol, "op")
       .withColumnRenamed(LakeTable.LsnCol, "lsn")
     val payloadCols = changes.columns.toSeq.filterNot(c => c == "op" || c == "lsn")
-    val encoded: DataFrame = format match {
-      case "debezium" => CdcEnvelope.encodeDebezium(changes, payloadCols, keyCols)
-      case "canal" => CdcEnvelope.encodeCanal(changes, payloadCols)
-      case _ => CdcEnvelope.encodeMaxwell(changes, payloadCols)
-    }
+    val encoded = CdcEnvelope.encode(format, changes, payloadCols, keyCols)
 
     // stage → sweep stale same-`from` files (a crashed attempt's partial
     // window, possibly with a smaller `to`) → move parts in → marker last

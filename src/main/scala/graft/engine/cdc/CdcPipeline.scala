@@ -1,12 +1,15 @@
 package graft.engine.cdc
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{col, sum, when}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, sum, when, xxhash64}
 import org.apache.spark.sql.graftbridge.SessionBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.core.{LocalFs, Model}
+import graft.engine.JdbcExec
 import graft.lake.LakeTable
+import graft.sources.CdcEnvelope
 
 /** The north-rule flagship: tail a binlog/WAL-shaped change-event log and
   * MERGE-apply it into the snapshot-committed transcript lake table.
@@ -139,14 +142,16 @@ object CdcPipeline {
       format: String = "parquet",
       /** dead-letter dir for envelope formats: malformed lines (null lsn
         * after decode) are kept here verbatim as `epoch=<n>/` text files
-        * (`epoch=<n>-<route>/` on a routed tail) — the reference's
+        * (on a routed tail: unroutable lines in `epoch=<n>/`, a route's
+        * dirty lines in `epoch=<n>-<route>/`) — the reference's
         * dirty-record collection (go-datax error limiter keeps dirty
-        * records + messages) — instead of being silently dropped. Delivery
-        * is AT-LEAST-ONCE: an epoch's dirty lines are written after its
-        * merge commits, and a replayed epoch whose merge the lineage skips
-        * probes and re-writes them (overwrite, so never duplicated) — a
-        * crash between the commit and the write loses nothing. None ⇒
-        * drop-only policy.
+        * records + messages) — instead of being silently dropped. Every
+        * tail (lake, routed, JDBC) keeps one AT-LEAST-ONCE rule: an
+        * epoch's dirty lines are written after its apply commits, only
+        * when there are any, and a replayed epoch whose apply the lineage
+        * or ledger skips probes and re-writes them (overwrite, so never
+        * duplicated) — a crash between the commit and the write loses
+        * nothing. None ⇒ drop-only policy.
         */
       dlqDir: Option[String] = None,
       /** TIME-based flush threshold for a continuous (availableNow=false)
@@ -166,7 +171,7 @@ object CdcPipeline {
         * shape — the `cdcreader` JSON surface exposes it as named, typed
         * `column` specs like the reference's readers.
         */
-      payloadSchema: Option[org.apache.spark.sql.types.StructType] = None,
+      payloadSchema: Option[StructType] = None,
       /** single-table consumption of a MULTI-TABLE envelope stream: a real
         * binlog/WAL tail interleaves every table's changes, and decoding a
         * foreign table's envelope against this table's payload schema
@@ -206,13 +211,10 @@ object CdcPipeline {
       tagKeep: Int = 8)
 
   /** The tailed log's full change-event schema: `op`/`lsn` + payload. */
-  private def eventSchema(cfg: CdcConfig): org.apache.spark.sql.types.StructType =
+  private def eventSchema(cfg: CdcConfig): StructType =
     cfg.payloadSchema match {
-      case Some(ps) => org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.types.StructField("op",
-          org.apache.spark.sql.types.StringType, nullable = false) +:
-        org.apache.spark.sql.types.StructField("lsn",
-          org.apache.spark.sql.types.LongType, nullable = false) +: ps.fields)
+      case Some(ps) => StructType(StructField("op", StringType, nullable = false) +:
+        StructField("lsn", LongType, nullable = false) +: ps.fields)
       case None =>
         if (cfg.toolColumn) Model.changeEventSchema else Model.changeEventSchemaV1
     }
@@ -277,18 +279,48 @@ object CdcPipeline {
           "writerId become part of tag ref file names")
     }
 
-  /** Dead-letter `lines` (one verbatim envelope per row) as text under
-    * `path`. Overwrite ⇒ a replayed epoch rewrites the same lines, never
-    * duplicates them.
+  /** `df` counting its `isDirty` rows into `obs`: the count rides the first
+    * job over the returned plan (or over a cache of it), never a job of its own.
     */
-  private def deadLetter(lines: DataFrame, path: String): Unit =
-    lines.write.mode("overwrite").text(path)
+  private def observeDirty(df: DataFrame, isDirty: Column, obs: Observation): DataFrame =
+    df.observe(obs, sum(when(isDirty, 1L).otherwise(0L)).as("dirty"))
 
-  /** The dirty lines of decoded `events`: the verbatim line of every row
-    * whose decode yielded no lsn.
+  /** THE dead-letter rule of every tail, run after the epoch's apply.
+    * `obs` holds the dirty count ([[observeDirty]]); `jobRan` says whether
+    * the apply ran a job over the observed plan (a lineage- or ledger-skipped
+    * replay runs none, and `obs.get` would block forever). A count above 0
+    * writes `lines` (one verbatim envelope per row) to `path`; 0 writes
+    * nothing. No count — nothing ran, or the job ran no task over the input
+    * — proves nothing, so the lines are probed and written if there are any:
+    * that restores what a crash between the commit and the write lost.
+    * Overwrite ⇒ a replayed epoch rewrites the same lines, never duplicates.
     */
-  private def dirtyLines(events: DataFrame): DataFrame =
-    events.filter(col("lsn").isNull).select(RawCol)
+  private def deadLetter(obs: Observation, jobRan: Boolean, lines: DataFrame,
+      path: String): Unit = {
+    // a null sum (tasks ran, no row observed) counts as 0
+    val observed = (if (jobRan) obs.get.get("dirty") else None).map {
+      case n: java.lang.Number => n.longValue
+      case _ => 0L
+    }
+    if (observed.fold(!lines.isEmpty)(_ > 0)) lines.write.mode("overwrite").text(path)
+  }
+
+  /** Run `apply` on an epoch's decoded `events` under [[deadLetter]]'s rule.
+    * With `dlq` (the epoch's dead-letter path) set the events still hold the
+    * dirty, null-lsn rows, whose verbatim line rides in [[RawCol]]: `apply`
+    * gets the clean rows with the dirty count riding its job, and `ran`
+    * says whether it ran one. Without `dlq` the events are clean already.
+    */
+  private def applyDeadLettered[T](events: DataFrame, dlq: Option[String])(
+      apply: DataFrame => T)(ran: T => Boolean): T = dlq match {
+    case None => apply(events)
+    case Some(path) =>
+      val obs = Observation()
+      val out = apply(observeDirty(events, col("lsn").isNull, obs)
+        .filter(col("lsn").isNotNull).drop(RawCol))
+      deadLetter(obs, ran(out), events.filter(col("lsn").isNull).select(RawCol), path)
+      out
+  }
 
   /** ONE destination's epoch, shared by [[start]] and every route of
     * [[startRouted]]: the MERGE, then the follower syncs, the auto-tag
@@ -298,39 +330,15 @@ object CdcPipeline {
     * being swept; tombstone GC before vacuum so the rewrite's orphaned
     * inputs go in the same sweep).
     *
-    * `events` are the epoch's change events. With `dlq` (this epoch's
-    * dead-letter path) set they still hold the dirty, null-lsn rows, whose
-    * verbatim line rides in [[RawCol]]; without it they are clean. The
-    * dead-letter rule — at-least-once, written after the commit: the dirty
-    * COUNT rides the merge's own write job via `observe`, and the write job
-    * runs only when it is above 0. A lineage-skipped merge (a replayed
-    * epoch) observes nothing, and an epoch without a valid row leaves the
-    * observation empty (its write runs no task over the input); either way
-    * the count proves nothing, so the dirty lines are probed and written if
-    * there are any. That probe is what restores the lines a crash between
-    * the commit and the write lost; it runs only on recovery or on an epoch
-    * with nothing to merge.
+    * `events` are the epoch's change events, dead-lettered to `dlq` by
+    * [[applyDeadLettered]] (the dirty count rides the merge's write job).
+    * Returns the merge's stats.
     */
   private def applyEpoch(cfg: CdcConfig, dest: LakeTable, writerId: String,
       followers: Seq[Follower], events: DataFrame, epoch: Long,
-      dlq: Option[String]): Unit = {
-    val merged = dlq match {
-      case None => dest.merge(events, epoch, writerId)
-      case Some(path) =>
-        val obs = Observation()
-        val st = dest.merge(
-          events.observe(obs, sum(when(col("lsn").isNull, 1L).otherwise(0L)).as("dirty"))
-            .filter(col("lsn").isNotNull).drop(RawCol),
-          epoch, writerId)
-        // a null sum (tasks ran, no row observed) counts as 0
-        val observed = if (st.skipped) None else obs.get.get("dirty").map {
-          case n: java.lang.Number => n.longValue
-          case _ => 0L
-        }
-        lazy val dirty = dirtyLines(events)
-        if (observed.fold(!dirty.isEmpty)(_ > 0)) deadLetter(dirty, path)
-        st
-    }
+      dlq: Option[String]): LakeTable.MergeStats = {
+    val merged =
+      applyDeadLettered(events, dlq)(dest.merge(_, epoch, writerId))(!_.skipped)
     syncFollowers(dest, followers)
     autoTag(dest, cfg, writerId, epoch, merged)
     // a tombstone-GC commit conflict (another writerId's stream won the
@@ -352,6 +360,7 @@ object CdcPipeline {
     }
     if (cfg.vacuumEvery > 0 && epoch > 0 && epoch % cfg.vacuumEvery == 0)
       dest.vacuum(cfg.vacuumRetainVersions)
+    merged
   }
 
   /** Start the streaming MERGE; caller awaits termination. */
@@ -372,22 +381,11 @@ object CdcPipeline {
     * dropped here.
     */
   private def decodeEnvelope(format: String, lines: DataFrame,
-      payloadSchema: org.apache.spark.sql.types.StructType,
+      payloadSchema: StructType,
       keyCols: Seq[String], keepDirty: Boolean): DataFrame = {
     val (df, passthrough) =
       if (keepDirty) (lines.withColumn(RawCol, col("value")), Seq(RawCol)) else (lines, Nil)
-    val decoded = format match {
-      case "debezium" =>
-        graft.sources.CdcEnvelope.debezium(df, "value", payloadSchema, passthrough)
-      case "canal" =>
-        graft.sources.CdcEnvelope.canal(df, "value", payloadSchema,
-          passthrough = passthrough, keyCols = keyCols)
-      case "maxwell" =>
-        graft.sources.CdcEnvelope.maxwell(df, "value", payloadSchema, passthrough,
-          keyCols = keyCols)
-      case other => throw new IllegalArgumentException(
-        s"not an envelope format: '$other' (debezium|canal|maxwell)")
-    }
+    val decoded = CdcEnvelope.decode(format, df, "value", payloadSchema, passthrough, keyCols)
     if (keepDirty) decoded else decoded.filter(col("lsn").isNotNull)
   }
 
@@ -435,8 +433,7 @@ object CdcPipeline {
     // null-filled by the parquet reader (additive evolution on the source
     // side; the lake handles it on the sink side too for batch callers)
     val schema = eventSchema(cfg)
-    val payloadSchema = org.apache.spark.sql.types.StructType(
-      schema.fields.filterNot(f => f.name == "op" || f.name == "lsn"))
+    val payloadSchema = StructType(schema.fields.filterNot(f => f.name == "op" || f.name == "lsn"))
     require(cfg.tableFilter.isEmpty || cfg.format != "parquet",
       "tableFilter reads envelope table metadata — parquet change logs " +
         "carry none (tail one log per table instead)")
@@ -446,7 +443,7 @@ object CdcPipeline {
           .schema(schema)
           .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
           .parquet(cfg.logDir)
-      case env @ ("debezium" | "canal" | "maxwell") =>
+      case env if CdcEnvelope.Formats(env) =>
         // envelope tail: each line is one JSON envelope; keep it an opaque
         // string at the source and decode with an explicit schema so a
         // malformed line nulls out (PERMISSIVE from_json → null lsn)
@@ -460,15 +457,13 @@ object CdcPipeline {
         // lines pass through so compat and the DLQ policy are unchanged
         val scoped = cfg.tableFilter match {
           case Some(ref) =>
-            val (_, tbl) = graft.sources.CdcEnvelope.tableRefs(env, col("value"))
-            raw.filter(
-              graft.sources.CdcEnvelope.tableMatches(env, col("value"), ref) ||
-                tbl.isNull)
+            val (_, tbl) = CdcEnvelope.tableRefs(env, col("value"))
+            raw.filter(CdcEnvelope.tableMatches(env, col("value"), ref) || tbl.isNull)
           case None => raw
         }
         decodeEnvelope(env, scoped, payloadSchema, keyCols, cfg.dlqDir.isDefined)
       case other => throw new IllegalArgumentException(
-        s"unsupported CDC log format '$other' (parquet|debezium|canal|maxwell)")
+        s"unsupported CDC log format '$other' (parquet|${CdcEnvelope.Formats.mkString("|")})")
     }
     val dlq = cfg.dlqDir.filter(_ => cfg.format != "parquet")
     runBatches(src, cfg) { (events, epoch) =>
@@ -491,7 +486,7 @@ object CdcPipeline {
     * `payloadSchema` and MERGE into `dest`.
     */
   final case class Route(table: String, dest: LakeTable,
-      payloadSchema: org.apache.spark.sql.types.StructType,
+      payloadSchema: StructType,
       writerId: String = LakeTable.DefaultWriter,
       /** downstream tables co-maintained per epoch for THIS destination —
         * replicas / rollups / mirrors / feeds / SCD2, the same machinery
@@ -509,7 +504,7 @@ object CdcPipeline {
     * other's epochs.
     */
   def validateRoutes(routes: Seq[(String, String, String)]): Unit = {
-    val overlap = routes.map(_._1).groupBy(graft.sources.CdcEnvelope.refTablePart).collect {
+    val overlap = routes.map(_._1).groupBy(CdcEnvelope.refTablePart).collect {
       case (t, ts) if ts.size > 1 && (ts.distinct.size < ts.size || ts.exists(!_.contains('.'))) => t
     }
     require(overlap.isEmpty,
@@ -538,14 +533,16 @@ object CdcPipeline {
     * this consumer doesn't maintain — the Debezium `table.include.list`
     * analog).
     *
-    * DEAD LETTERS, one at-least-once contract: lines with no parseable
-    * table metadata are unroutable (a routed stream REQUIRES table stamps —
-    * nothing else says which schema applies) and are written to
-    * `epoch=<n>/` before the routes run; a tabled line whose body fails to
-    * decode (missing lsn, truncate/DDL envelope) is dirty for ITS route and
-    * lands in `epoch=<n>-<route>/` after that route's merge commits — and is
-    * re-written when a replay finds the merge already committed (see
-    * [[CdcConfig.dlqDir]]).
+    * DEAD LETTERS, the one rule of every tail ([[CdcConfig.dlqDir]]): lines
+    * with no parseable table metadata are unroutable (a routed stream
+    * REQUIRES table stamps — nothing else says which schema applies). Their
+    * count rides the first route job, the one that builds the staged
+    * batch's cache, and they land in `epoch=<n>/` after the routes, only
+    * when there are any; when every route's merge was lineage-skipped they
+    * are probed instead. A tabled line whose body fails to decode (missing
+    * lsn, truncate/DDL envelope) is dirty for ITS route and lands in
+    * `epoch=<n>-<route>/` after that route's merge commits. Both are
+    * re-written when a replay finds the merges already committed.
     *
     * EXACTLY-ONCE per destination falls out of the same epoch-lineage
     * contract as everything else: each route's merge commits under its
@@ -588,14 +585,15 @@ object CdcPipeline {
         }
       })
     runBatches(raw, cfg) { (batch0, epoch) =>
-      val (db, tbl) = graft.sources.CdcEnvelope.tableRefs(cfg.format, col("value"))
-      val batch = batch0.select(col("value"), db.as("_db"), tbl.as("_tbl")).persist()
+      val (db, tbl) = CdcEnvelope.tableRefs(cfg.format, col("value"))
+      val tabled = batch0.select(col("value"), db.as("_db"), tbl.as("_tbl"))
+      val unroutable = Observation()
+      // observed BEFORE the persist: the job that builds the cache reports it
+      val batch = (if (cfg.dlqDir.isEmpty) tabled
+                   else observeDirty(tabled, col("_tbl").isNull, unroutable)).persist()
       try {
-        cfg.dlqDir.foreach { dlq =>
-          deadLetter(batch.filter(col("_tbl").isNull).select("value"), s"$dlq/epoch=$epoch")
-        }
-        def applyOne(r: Route): Unit = {
-          val lines = batch.filter(graft.sources.CdcEnvelope.refMatches(
+        def applyOne(r: Route): LakeTable.MergeStats = {
+          val lines = batch.filter(CdcEnvelope.refMatches(
             r.table, col("_db"), col("_tbl"))).select("value")
           applyEpoch(cfg, r.dest, r.writerId, r.followers,
             decodeEnvelope(cfg.format, lines, r.payloadSchema, r.dest.keyCols,
@@ -608,19 +606,24 @@ object CdcPipeline {
         // sum(route) — Spark schedules concurrent actions from multiple
         // threads. Any route's failure fails the epoch (it replays; the
         // committed routes skip by lineage), preserving exactly-once.
-        if (cfg.routeParallelism <= 1 || routes.size == 1) routes.foreach(applyOne)
-        else {
-          val ec = scala.concurrent.ExecutionContext.fromExecutor(routePool)
-          val fs = routes.map(r => scala.concurrent.Future(applyOne(r))(ec))
-          // await EVERY route before leaving the epoch — fail-fast
-          // (Future.sequence) would let in-flight stragglers outlive a
-          // failed epoch and race the restarted stream's replay of the
-          // same (table, writerId, epoch); only after all settle is the
-          // FIRST failure surfaced (it fails the epoch, which replays;
-          // committed routes skip by lineage)
-          fs.foreach(f => scala.concurrent.Await.ready(f,
-            scala.concurrent.duration.Duration.Inf))
-          fs.foreach(f => f.value.get.get)
+        val merged =
+          if (cfg.routeParallelism <= 1 || routes.size == 1) routes.map(applyOne)
+          else {
+            val ec = scala.concurrent.ExecutionContext.fromExecutor(routePool)
+            val fs = routes.map(r => scala.concurrent.Future(applyOne(r))(ec))
+            // await EVERY route before leaving the epoch — fail-fast
+            // (Future.sequence) would let in-flight stragglers outlive a
+            // failed epoch and race the restarted stream's replay of the
+            // same (table, writerId, epoch); only after all settle is the
+            // FIRST failure surfaced (it fails the epoch, which replays;
+            // committed routes skip by lineage)
+            fs.foreach(f => scala.concurrent.Await.ready(f,
+              scala.concurrent.duration.Duration.Inf))
+            fs.map(f => f.value.get.get)
+          }
+        cfg.dlqDir.foreach { dlq =>
+          deadLetter(unroutable, jobRan = merged.exists(!_.skipped),
+            batch.filter(col("_tbl").isNull).select("value"), s"$dlq/epoch=$epoch")
         }
       } finally { batch.unpersist(); () }
     }
@@ -746,8 +749,7 @@ object CdcPipeline {
     // dest.keyCols name TARGET columns; the stream's rows carry PAYLOAD
     // names — map through the positional column list (applyChanges binds the
     // same way) so dedupe and the decoders' key fan-out see payload names
-    val payloadNames = eventSchema(cfg).fieldNames
-      .filterNot(n => n == "op" || n == "lsn").toSeq
+    val payloadNames = eventSchema(cfg).fieldNames.filterNot(n => n == "op" || n == "lsn").toSeq
     val targetCols =
       if (dest.columns.isEmpty || dest.columns == Seq("*")) payloadNames
       else dest.columns
@@ -757,46 +759,33 @@ object CdcPipeline {
         s"key column '$k' is not among the target columns (${targetCols.mkString(", ")})")
       payloadNames(i)
     }
-    graft.engine.JdbcExec.ensureLedger(dest.url, dest.props, dest.ledgerTable)
-    def applyBatch(batch: DataFrame, epoch: Long): Unit =
-      if (graft.engine.JdbcExec.epochApplied(dest.url, dest.props,
-          dest.ledgerTable, dest.writerId, epoch)) {
+    JdbcExec.ensureLedger(dest.url, dest.props, dest.ledgerTable)
+    /** Apply one epoch unless the ledger already holds it; true if applied. */
+    def applyBatch(batch: DataFrame, epoch: Long): Boolean =
+      if (JdbcExec.epochApplied(dest.url, dest.props, dest.ledgerTable, dest.writerId, epoch)) {
         skipped.incrementAndGet()
+        false
       } else {
-        // per-epoch LWW dedupe on the key — one final image per key reaches
-        // the target, mirroring the lake merge's epoch dedupe (ties require
-        // unique lsns per key within an epoch, the log contract everywhere)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(payloadKeys.map(col): _*).orderBy(col("lsn").desc)
-        val winners = batch
-          .withColumn("_rn", org.apache.spark.sql.functions.row_number().over(w))
-          .filter(col("_rn") === 1).drop("_rn")
-        val (up, del) = graft.engine.JdbcExec.applyChanges(winners, dest.dialect,
+        // per-epoch LWW dedupe on the key with the lake's kernel — one final
+        // image per key reaches the target. The log contract gives unique
+        // lsns per key within an epoch; the row-hash tie-break still picks
+        // the same winner on every replay if a log breaks it
+        val winners = LakeTable.lwwWinners(batch, payloadKeys,
+          Seq(col("lsn").desc, xxhash64(batch.columns.toSeq.map(col): _*).desc))
+        val (up, del) = JdbcExec.applyChanges(winners, dest.dialect,
           dest.url, dest.table, dest.columns, dest.keyCols,
           batchSize = dest.batchSize, session = dest.session, props = dest.props)
         upserts.addAndGet(up)
         deletes.addAndGet(del)
         // recorded AFTER the apply: a crash in between replays the epoch,
         // which is idempotent (see the exactly-once contract above)
-        graft.engine.JdbcExec.recordEpoch(dest.url, dest.props,
-          dest.ledgerTable, dest.writerId, epoch)
+        JdbcExec.recordEpoch(dest.url, dest.props, dest.ledgerTable, dest.writerId, epoch)
+        true
       }
+    // the dirty count rides applyChanges' one write job; the lines are
+    // written after the apply and the ledger record
     val q = startWith(spark, cfg, payloadKeys) { (events, epoch, dlq) =>
-      dlq match {
-        case None => applyBatch(events, epoch)
-        case Some(path) =>
-          // no lake merge is here to carry the dirty count, so the batch is
-          // staged and its dirty lines probed and written BEFORE the apply
-          // (rewritten on every replay — at-least-once, as on the lake).
-          // Unpersist even when the apply throws (a failed epoch replays;
-          // the leaked cache would otherwise accumulate per retry)
-          val staged = events.persist()
-          try {
-            val dirty = dirtyLines(staged)
-            if (!dirty.isEmpty) deadLetter(dirty, path)
-            applyBatch(staged.filter(col("lsn").isNotNull).drop(RawCol), epoch)
-          } finally { staged.unpersist(); () }
-      }
+      applyDeadLettered(events, dlq)(applyBatch(_, epoch))(identity)
     }
     JdbcStream(q, upserts, deletes, skipped)
   }

@@ -158,8 +158,9 @@ final class LakeTable(
   // every local write, read and stream checkpoint of this session goes
   // through the spawn-free local filesystem from here on
   LocalFs.install(spark)
-  private val hconf = SessionBridge.hadoopConf(spark)
-  private def fs: FileSystem = new Path(root).getFileSystem(hconf)
+  // one instance per handle: with `fs.file.impl.disable.cache` (LocalFs)
+  // every getFileSystem call constructs and initializes a new one
+  private val fs: FileSystem = new Path(root).getFileSystem(SessionBridge.hadoopConf(spark))
 
   private val dataDir = s"$root/data"
   private val snapDir = s"$root/_snapshots"
@@ -1136,8 +1137,12 @@ final class LakeTable(
     */
   private def parquetFooterMeta(p: Path,
       allCols: Boolean = false): (Long, Map[String, (String, String)]) = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hconf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    // over the handle's filesystem: HadoopInputFile.fromPath opens one per file
+    val len = fs.getFileStatus(p).getLen
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(new org.apache.parquet.io.InputFile {
+      def getLength: Long = len
+      def newStream() = org.apache.parquet.hadoop.util.HadoopStreams.wrap(fs.open(p))
+    })
     try {
       val cols =
         if (allCols) FileStats.allStatCols(r.getFooter, Set(LsnCol, OpCol, BucketCol))

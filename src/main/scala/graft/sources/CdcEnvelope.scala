@@ -32,6 +32,30 @@ import graft.core.Model
   */
 object CdcEnvelope {
 
+  /** The envelope formats every tail, batch read, sink and feed accepts. */
+  val Formats: Set[String] = Set("debezium", "canal", "maxwell")
+
+  private def notEnvelope(format: String) = new IllegalArgumentException(
+    s"not an envelope format: '$format' (${Formats.mkString("|")})")
+
+  /** `format`'s decoder; `keyCols` feed canal's and maxwell's key-change fan-out. */
+  def decode(format: String, df: DataFrame, envelopeCol: String, payloadSchema: StructType,
+      passthrough: Seq[String] = Nil, keyCols: Seq[String] = Nil): DataFrame = format match {
+    case "debezium" => debezium(df, envelopeCol, payloadSchema, passthrough)
+    case "canal" => canal(df, envelopeCol, payloadSchema, passthrough = passthrough, keyCols = keyCols)
+    case "maxwell" => maxwell(df, envelopeCol, payloadSchema, passthrough, keyCols)
+    case other => throw notEnvelope(other)
+  }
+
+  /** `format`'s encoder; `keyCols` form debezium's delete `before` image. */
+  def encode(format: String, df: DataFrame, payloadCols: Seq[String],
+      keyCols: Seq[String] = Nil, tableRef: Option[String] = None): DataFrame = format match {
+    case "debezium" => encodeDebezium(df, payloadCols, keyCols, tableRef)
+    case "canal" => encodeCanal(df, payloadCols, tableRef)
+    case "maxwell" => encodeMaxwell(df, payloadCols, tableRef)
+    case other => throw notEnvelope(other)
+  }
+
   /** The (database, table) the envelope's change belongs to, as raw-string
     * columns pulled from `envelopeCol` WITHOUT a full decode — Debezium
     * stamps them in the `source` block (`source.db` / `source.table`, per
@@ -52,8 +76,7 @@ object CdcEnvelope {
       case "canal" | "maxwell" =>
         (get_json_object(envelopeCol, "$.database"),
           get_json_object(envelopeCol, "$.table"))
-      case other => throw new IllegalArgumentException(
-        s"no table metadata in CDC format '$other' (debezium|canal|maxwell)")
+      case other => throw notEnvelope(other)
     }
 
   /** True where (dbCol, tblCol) matches `ref` — `"db.table"` matches both

@@ -43,13 +43,8 @@ object CdcReplayMain {
         import graft.sources.CdcEnvelope
         val ev = Gen.changeEvents(spark, cfg).toDF()
         val payloadCols = Seq("ts", "conv_id", "turn_idx", "role", "text", "tool")
-        val enc = format match {
-          case "debezium" => CdcEnvelope.encodeDebezium(ev, payloadCols, Model.keyCols)
-          case "canal" => CdcEnvelope.encodeCanal(ev, payloadCols)
-          case "maxwell" => CdcEnvelope.encodeMaxwell(ev, payloadCols)
-          case other => throw new IllegalArgumentException(s"unknown format '$other'")
-        }
-        enc.repartition(20).write.text(logDir)
+        CdcEnvelope.encode(format, ev, payloadCols, Model.keyCols)
+          .repartition(20).write.text(logDir)
       }
     } else println(s"[gen] reusing existing log at $logDir")
 

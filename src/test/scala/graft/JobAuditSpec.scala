@@ -4,10 +4,26 @@ import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, RawLocalFileSystem}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
-import graft.core.{Gen, LocalFs, Model, NioLocalFs}
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+
+import graft.core.{Gen, LocalFs, Model, NioLocalFileSystem, NioLocalFs}
+import graft.engine.{Dialect, JdbcExec}
 import graft.engine.cdc.CdcPipeline
 import graft.lake.LakeTable
 import graft.sources.CdcEnvelope
+
+/** The spawn-free local filesystem, counting every instance built outside
+  * Spark's task threads (`fs.file.impl` of [[JobAuditSpec]]'s
+  * FileSystem-count test).
+  */
+class CountingLocalFileSystem extends NioLocalFileSystem {
+  if (!Thread.currentThread().getName.startsWith("Executor task launch worker"))
+    CountingLocalFileSystem.made.incrementAndGet()
+}
+
+object CountingLocalFileSystem {
+  val made = new java.util.concurrent.atomic.AtomicLong()
+}
 
 /** Job-count audits: the Spark jobs a CDC epoch submits are the tail's
   * per-epoch fixed cost (each one a scheduling round trip on the driver),
@@ -94,6 +110,84 @@ class JobAuditSpec extends SparkSpec {
     assert(spark.read.text(s"$work/dlq/epoch=2").count() === 2L)
   }
 
+  /** `gen`'s events as debezium lines stamped with `tableRef`. */
+  private def turnLines(gen: Gen.GenConfig, tableRef: Option[String] = None) =
+    CdcEnvelope.encodeDebezium(Gen.changeEvents(spark, gen).toDF(),
+      Seq("ts", "conv_id", "turn_idx", "role", "text", "tool"), Model.keyCols, tableRef)
+
+  /** `lines` in 4 files plus a newest file that re-delivers every 50th of
+    * them next to `dirty` ones, so the last epoch (epoch 2 at 2 files per
+    * trigger) is dirty and still applies rows to every table.
+    */
+  private def dirtyTailLog(dir: String, lines: org.apache.spark.sql.DataFrame,
+      dirty: Seq[String]): Unit = {
+    lines.repartition(4).write.text(dir)
+    val redelivered = lines.collect().map(_.getString(0)).grouped(50).map(_.head)
+    val newest = java.nio.file.Paths.get(s"$dir/part-dirty.txt")
+    java.nio.file.Files.write(newest, (redelivered ++ dirty).mkString("", "\n", "\n").getBytes)
+    newest.toFile.setLastModified(System.currentTimeMillis() + 60000L)
+  }
+
+  /** The `epoch=<n>` directories under a dead-letter dir. */
+  private def dlqDirs(dlq: String): Set[String] =
+    Option(new java.io.File(dlq).list()).fold(Set.empty[String])(_.toSet)
+
+  test("a routed tail's DLQ costs no job on a clean epoch and one write for unroutable lines") {
+    val work = tmpDir("jobs-routed")
+    val gen = Gen.GenConfig(nEvents = 6000L, nConvs = 100L, partitions = 4)
+    val orders = StructType(Seq(StructField("id", LongType), StructField("amt", DoubleType)))
+    // the transcript table is one route; a small orders table is the other
+    dirtyTailLog(s"$work/log", turnLines(gen, Some("shop.turns")).unionAll(
+      CdcEnvelope.encodeDebezium(spark.range(400).selectExpr("'I' AS op",
+        "id + 100000 AS lsn", "id % 40 AS id", "id * 1.5 AS amt"),
+        Seq("id", "amt"), Seq("id"), Some("shop.orders"))), Seq("not json"))
+    def tail(name: String, dlq: Option[String]): Map[Long, Int] = {
+      val routes = Seq(
+        CdcPipeline.Route("shop.turns",
+          LakeTable.create(spark, s"$work/$name-turns", Model.keyCols, 4),
+          StructType(Model.changeEventSchema.fields.drop(2))),
+        CdcPipeline.Route("shop.orders",
+          LakeTable.create(spark, s"$work/$name-orders", Seq("id"), 4), orders))
+      jobsPerEpoch(CdcPipeline.replayAllRouted(spark,
+        CdcPipeline.CdcConfig(s"$work/log", s"$work/$name-cp", maxFilesPerTrigger = 2,
+          format = "debezium", dlqDir = dlq, routeParallelism = 1), routes))
+    }
+    val plain = tail("plain", None)
+    val withDlq = tail("dlq", Some(s"$work/dlq"))
+    val last = plain.keySet.max
+    assert(plain.keySet === (0L to last).toSet && last >= 2L)
+    // the unroutable count rides the route job that builds the staged cache
+    assert(withDlq === plain + (last -> (plain(last) + 1)))
+    assert(dlqDirs(s"$work/dlq") === Set(s"epoch=$last"))
+    assert(spark.read.text(s"$work/dlq/epoch=$last").collect().map(_.getString(0)).toSeq ===
+      Seq("not json"))
+  }
+
+  test("a JDBC tail's DLQ costs no job on a clean epoch and one write on a dirty one") {
+    val url = "jdbc:derby:memory:jobsjdbc;create=true"
+    val work = tmpDir("jobs-jdbc")
+    dirtyTailLog(s"$work/log", turnLines(
+      Gen.GenConfig(nEvents = 3000L, nConvs = 50L, partitions = 4, dupEvery = 0L)),
+      Seq("not json", "{}"))
+    def tail(name: String, dlq: Option[String]): Map[Long, Int] = {
+      JdbcExec.execStatements(url, Map.empty, Seq(
+        s"""CREATE TABLE "$name" ("ts" TIMESTAMP, "conv_id" VARCHAR(64) NOT NULL, """ +
+          """"turn_idx" INT NOT NULL, "role" VARCHAR(32), "text" VARCHAR(512), """ +
+          """"tool" VARCHAR(64), PRIMARY KEY ("conv_id", "turn_idx"))"""))
+      jobsPerEpoch(CdcPipeline.startJdbc(spark,
+        CdcPipeline.CdcConfig(s"$work/log", s"$work/$name-cp", maxFilesPerTrigger = 2,
+          format = "debezium", dlqDir = dlq),
+        CdcPipeline.JdbcDest(Dialect.Sqlite, url, name, keyCols = Model.keyCols,
+          writerId = name)).query.awaitTermination())
+    }
+    val plain = tail("plain", None)
+    val withDlq = tail("dlq", Some(s"$work/dlq"))
+    assert(plain.keySet === Set(0L, 1L, 2L))
+    // the dirty count rides applyChanges' write job: no staging, no probe
+    assert(withDlq === plain + (2L -> (plain(2L) + 1)))
+    assert(dlqDirs(s"$work/dlq") === Set("epoch=2"))
+  }
+
   test("a merge, a checkpointed tail and a dead-letter write leave Hadoop's raw local filesystem unused") {
     // without libhadoop the stock raw filesystem forks chmod for every file
     // it creates and FileContext forks readlink for every rename; its write
@@ -130,6 +224,30 @@ class JobAuditSpec extends SparkSpec {
       Gen.GenConfig(nEvents = 3000L, nConvs = 50L, partitions = 2),
       s"${tmpDir("jobs-gen")}/log", nChunks = 2, filesPerChunk = 2)
     assert(stock.getBytesWritten === before)
+  }
+
+  test("a merge opens as many local filesystems at 16 buckets as at 4") {
+    // LocalFs disables Hadoop's FileSystem cache, so every getFileSystem
+    // call builds an instance; Spark's own task-side opens are not counted
+    import spark.implicits._
+    val s = spark.newSession()
+    s.conf.set("fs.file.impl", classOf[CountingLocalFileSystem].getName)
+    s.conf.set("fs.file.impl.disable.cache", "true")
+    val events = Gen.changeEvents(s, Gen.GenConfig(nEvents = 4000L, nConvs = 80L,
+      partitions = 4)).toDF().cache()
+    def made(buckets: Int): Long = {
+      val t = LakeTable.create(s, tmpDir(s"jobs-fs-$buckets"), Model.keyCols, buckets)
+      val before = CountingLocalFileSystem.made.get
+      // a base publish, then a delta publish too small to compact, so no
+      // merge reads table files back (Spark's file index opens one
+      // filesystem per path it lists)
+      t.merge(events.filter($"lsn" < 3900L), 0L)
+      assert(t.merge(events.filter($"lsn" >= 3900L), 1L).compactedBuckets === 0)
+      CountingLocalFileSystem.made.get - before
+    }
+    val (at4, at16) = (made(4), made(16))
+    events.unpersist()
+    assert(at4 === at16)
   }
 
   test("LocalFs.install keeps a caller's filesystem and a second call changes nothing") {

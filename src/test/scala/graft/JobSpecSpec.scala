@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{Gen, Model}
 import graft.engine.{Dialect, JdbcExec, JobConfig, SyncJob}
+import graft.engine.cdc.CdcPipeline
 import graft.lake.LakeTable
 import graft.sources.CdcEnvelope
 import graft.tools.RunJob
@@ -1149,6 +1150,54 @@ class JobSpecSpec extends SparkSpec {
           "connection": [{"jdbcUrl": "$url", "table": ["turns"]}]}}}]}}"""))
     }
     assert(bad.getMessage.contains("per-key MERGE"))
+  }
+
+  test("a JDBC tail dead-letters malformed lines per epoch and a ledger-skipped re-tail writes them back") {
+    val url = "jdbc:derby:memory:cdcdlq;create=true"
+    val work = tmpDir("cdcdlq")
+    val cfg = Gen.GenConfig(nEvents = 2000L, nConvs = 40L, partitions = 4, dupEvery = 0L)
+    val lines = CdcEnvelope.encodeDebezium(Gen.changeEvents(spark, cfg).toDF(),
+      Seq("ts", "conv_id", "turn_idx", "role", "text", "tool"), Model.keyCols)
+    lines.repartition(4).write.text(s"$work/log")
+    // two malformed files, newest last: each is its own epoch at one file
+    // per trigger after the 4 clean ones
+    val dirty = Seq(Seq("not json"), Seq("{}", """{"op":"c","after":null}"""))
+    dirty.zipWithIndex.foreach { case (ls, i) =>
+      val f = java.nio.file.Paths.get(s"$work/log/part-dirty-$i.txt")
+      java.nio.file.Files.write(f, ls.mkString("", "\n", "\n").getBytes)
+      f.toFile.setLastModified(System.currentTimeMillis() + 60000L * (i + 1))
+    }
+    JdbcExec.execStatements(url, Map.empty, Seq(
+      """CREATE TABLE "turns" ("ts" TIMESTAMP, "conv_id" VARCHAR(64) NOT NULL, """ +
+        """"turn_idx" INT NOT NULL, "role" VARCHAR(32), "text" VARCHAR(512), """ +
+        """"tool" VARCHAR(64), PRIMARY KEY ("conv_id", "turn_idx"))"""))
+    val dlq = s"$work/dlq"
+    def tail(): CdcPipeline.JdbcStream = {
+      val s = CdcPipeline.startJdbc(spark,
+        CdcPipeline.CdcConfig(s"$work/log", s"$work/cp", maxFilesPerTrigger = 1,
+          format = "debezium", dlqDir = Some(dlq)),
+        CdcPipeline.JdbcDest(Dialect.Sqlite, url, "turns", keyCols = Model.keyCols))
+      s.query.awaitTermination()
+      s
+    }
+    def dead(): Map[String, Seq[String]] =
+      new File(dlq).list().map(d => d -> spark.read.text(s"$dlq/$d").as[String]
+        .collect().toSeq.sorted).toMap
+    val want = Map("epoch=4" -> dirty(0), "epoch=5" -> dirty(1).sorted)
+    def target() = spark.read.jdbc(url, "\"turns\"", new java.util.Properties())
+      .select($"ts", $"conv_id", $"turn_idx", $"role", $"text", $"tool")
+    val first = tail()
+    assert(first.skippedEpochs.get() === 0L)
+    assert(dead() === want)
+    val state = target().collect().toSet
+    // DLQ and checkpoint lost: the re-tail replays epochs 0..5, the ledger
+    // skips every one, and the probe restores exactly the dirty epochs
+    Seq(dlq, s"$work/cp").foreach(deleteTree)
+    val again = tail()
+    assert(again.skippedEpochs.get() === 6L)
+    assert(again.upserts.get() + again.deletes.get() === 0L)
+    assert(dead() === want)
+    assert(target().collect().toSet === state)
   }
 
   test("jdbc mirror follower: a duplicated+reordered log mirrors into Derby via the lake") {
