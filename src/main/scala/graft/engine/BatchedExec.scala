@@ -13,6 +13,10 @@ import org.apache.spark.sql.{DataFrame, Row}
   * analog of one driver session per task), batches never leave their
   * executor, no driver collect. Any bring-your-own sink (graph DB, HTTP
   * bulk API, KV store) plugs in as the `exec` closure.
+  *
+  * [[retrying]] is the engine's one batch retry loop: [[foreachBatch]] and
+  * [[JdbcExec]]'s per-partition runner (the RDBMS writer and the CDC apply)
+  * both run every batch through it.
   */
 object BatchedExec {
 
@@ -24,6 +28,24 @@ object BatchedExec {
   final class BatchFailed(attempts: Int, cause: Throwable)
     extends RuntimeException(s"batch failed after $attempts attempts", cause)
 
+  /** Run `batch` until it succeeds, at most `retryTimes + 1` times with
+    * `retrySleepMillis` between attempts; [[BatchFailed]] carries the last
+    * error. A retried batch is re-executed whole, so `batch` must undo a
+    * failed attempt itself (the JDBC runner rolls its transaction back).
+    */
+  def retrying(policy: RetryPolicy)(batch: => Unit): Unit = {
+    val retries = policy.retryTimes
+    var attempt = 0
+    var done = false
+    var last: Throwable = null
+    while (!done && attempt <= retries) {
+      if (attempt > 0 && policy.retrySleepMillis > 0) Thread.sleep(policy.retrySleepMillis)
+      try { batch; done = true }
+      catch { case e: Throwable => last = e; attempt += 1 }
+    }
+    if (!done) throw new BatchFailed(retries + 1, last)
+  }
+
   /** Execute `exec` once per `batchSize`-row batch of every partition.
     * `exec` must be serializable (it runs on executors) and should be
     * idempotent per batch — a retried batch is re-executed whole, exactly
@@ -32,20 +54,8 @@ object BatchedExec {
   def foreachBatch(df: DataFrame, batchSize: Int,
       policy: RetryPolicy = RetryPolicy())(exec: Seq[Row] => Unit): Unit = {
     require(batchSize > 0, "batchSize must be positive")
-    val retries = policy.retryTimes
-    val sleep = policy.retrySleepMillis
     df.foreachPartition { it: Iterator[Row] =>
-      it.grouped(batchSize).foreach { batch =>
-        var attempt = 0
-        var done = false
-        var last: Throwable = null
-        while (!done && attempt <= retries) {
-          if (attempt > 0 && sleep > 0) Thread.sleep(sleep)
-          try { exec(batch); done = true }
-          catch { case e: Throwable => last = e; attempt += 1 }
-        }
-        if (!done) throw new BatchFailed(retries + 1, last)
-      }
+      it.grouped(batchSize).foreach(batch => retrying(policy)(exec(batch)))
     }
   }
 }

@@ -19,8 +19,9 @@ package graft.engine
   *    plain INSERT. MySQL `replace` writeMode ⇒ `REPLACE INTO`
   *    (`mysql_writer.go:470`).
   *
-  * These builders feed either Spark's JDBC writer options or the
-  * [[BatchedExec]] statement executor (the reference's batched flush).
+  * The reader options feed Spark's JDBC source; the statement builders
+  * feed [[JdbcExec]]'s one per-partition runner, the engine's only JDBC
+  * write path (the reference's batched flush).
   */
 sealed abstract class Dialect(
     val name: String,
@@ -84,11 +85,12 @@ sealed abstract class Dialect(
       s"dialect $name does not support writeMode '$mode' " +
         s"(supported: ${supportedWriteModes.toSeq.sorted.mkString(", ")})")
 
-  /** Per-connection session statements executed after each connection opens
-    * and before any read/write on it — the reference's mysqlwriter/reader
-    * `session` conf (`mysql_writer.go` session list, e.g.
+  /** Per-connection session statements executed after each reader
+    * connection opens and before any read on it — the reference's
+    * mysqlreader/writer `session` conf (`mysql_writer.go` session list, e.g.
     * `SET SESSION sql_mode='ANSI'`). Spark's JDBC source has the exact
-    * analog: `sessionInitStatement`, applied per executor connection.
+    * analog: `sessionInitStatement`, applied per executor connection. (The
+    * writer runs its list one statement per execute, [[JdbcExec]].)
     *
     * Spark executes the init string as ONE `Statement.execute`, while the
     * reference loops statements one by one — so joining with `;` only
@@ -125,12 +127,6 @@ sealed abstract class Dialect(
       session: Seq[String] = Nil): Map[String, String] = Map(
     "url" -> sessionUrl(url, session), "dbtable" -> table,
     "fetchsize" -> defaultFetchSize.toString) ++ sessionOption(session)
-
-  /** Spark JDBC writer options with the dialect's defaults applied. */
-  def writerOptions(url: String, table: String,
-      session: Seq[String] = Nil): Map[String, String] = Map(
-    "url" -> sessionUrl(url, session), "dbtable" -> table,
-    "batchsize" -> defaultBatchSize.toString) ++ sessionOption(session)
 }
 
 object Dialect {

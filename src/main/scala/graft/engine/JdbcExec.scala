@@ -3,36 +3,73 @@ package graft.engine
 import java.sql.{Connection, DriverManager, PreparedStatement}
 import java.util.Properties
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
-/** The reference's RDBMS writer task loop, Spark-shaped: one connection per
-  * PARTITION (the analog of one task connection, `oracle_writer.go:344-420`),
-  * session statements executed one-by-one on open (`executeSessionSql`),
-  * the dialect's writeMode statement prepared ONCE, rows bound and executed
-  * inside a per-batch transaction with commit at batch end and bounded
-  * retry after rollback (`writeBatch` tx begin/exec/commit,
+/** The reference's RDBMS writer, Spark-shaped. One live-database target
+  * ([[Target]]) serves the batch writer ([[write]]: one writeMode
+  * statement) and the CDC apply ([[applyChanges]]: a delete + upsert
+  * pair), and both run through ONE per-partition runner
+  * ([[runPartitions]]): one connection per partition, session statements
+  * one by one, statements prepared once, per-batch transactions committed
+  * at batch end, and failed batches rolled back and retried by
+  * [[BatchedExec.retrying]] (`writeBatch` tx begin/exec/commit,
   * `mysql_writer.go:382-390` writeMode routing).
   *
-  * Scale shape: no driver collects — every partition streams straight into
-  * its own connection; `batchSize` bounds both memory and transaction size.
-  * Primary keys for the upsert forms come from the conflict-column config
-  * when given, else from `DatabaseMetaData.getPrimaryKeys` (the reference
-  * reads PK info from the target's metadata, `common.go:556-616`).
+  * Conflict keys resolve once, on the driver ([[resolveKeys]]): the
+  * configured `onConflictColumn`, else `DatabaseMetaData.getPrimaryKeys`
+  * (the reference reads PK info from the target's metadata at init,
+  * `common.go:556-616`).
   */
 object JdbcExec {
+
+  /** A live-database table to write into. `columns` names the target's
+    * columns, bound positionally against the input (empty or `["*"]` ⇒ the
+    * input's own names); `keys` are the conflict columns (`onConflictColumn`;
+    * empty ⇒ [[resolveKeys]] reads the target's PK); `batchSize` rows per
+    * transaction (0 ⇒ the dialect default); `session` statements run one by
+    * one on every connection; `props` carry `user`/`password`.
+    */
+  final case class Target(
+      dialect: Dialect,
+      url: String,
+      table: String,
+      columns: Seq[String] = Nil,
+      keys: Seq[String] = Nil,
+      batchSize: Int = 0,
+      session: Seq[String] = Nil,
+      props: Map[String, String] = Map.empty) {
+    /** The target columns for an input whose columns are `input`. */
+    def columnsOr(input: Seq[String]): Seq[String] =
+      if (columns.isEmpty || columns == Seq("*")) input else columns
+  }
+
+  /** `t` with its conflict keys resolved: the configured ones, else the
+    * target's PK metadata read over one driver connection (after the
+    * session statements, as the writer's own connections see the table).
+    * Empty when neither names a key.
+    */
+  def resolveKeys(t: Target): Target =
+    if (t.keys.nonEmpty) t
+    else {
+      val conn = open(t.url, t.props, t.session)
+      try t.copy(keys = primaryKeys(conn, t.table)) finally conn.close()
+    }
+
+  /** [[resolveKeys]] for a per-key apply (the CDC tail, the mirror): fails
+    * fast when the target names no key.
+    */
+  def requireKeys(what: String, t: Target): Target = {
+    val k = resolveKeys(t)
+    require(k.keys.nonEmpty, s"$what: no conflict columns - configure them " +
+      "(onConflictColumn, or mirror's k1,k2) or declare a primary key on the target")
+    k
+  }
 
   /** Driver-side statement runner for preSql/postSql phases
     * (`common.go:51-76,206-231`): one connection, statements in order.
     */
-  def execStatements(url: String, props: Map[String, String], sqls: Seq[String]): Unit = {
-    if (sqls.isEmpty) return
-    val conn = connect(url, props)
-    try {
-      val st = conn.createStatement()
-      try sqls.foreach(st.execute)
-      finally st.close()
-    } finally conn.close()
-  }
+  def execStatements(url: String, props: Map[String, String], sqls: Seq[String]): Unit =
+    if (sqls.nonEmpty) open(url, props, sqls).close()
 
   /** PK columns from target metadata. A `schema.table` qualifier splits
     * into getPrimaryKeys' schema argument (the pattern argument matches the
@@ -245,240 +282,184 @@ object JdbcExec {
     * native conflict form when it has one ([[Dialect.nativeUpsert]]) or a
     * DELETE + INSERT pair inside the same transaction otherwise (the
     * portable upsert — Derby, SQLite, SQL Server et al.). Both statements
-    * ride the JDBC batch protocol per [[Dialect.defaultBatchSize]]-row
-    * transaction, deletes flushed before inserts, with the same bounded
-    * rollback-retry as [[write]]. Returns (upserted rows, deleted keys).
+    * run through [[runPartitions]], deletes flushed before inserts. Returns
+    * (upserted rows, deleted keys).
     *
-    * `columns` names the TARGET columns positionally against the payload
-    * columns (reference bind-by-position semantics); `keyCols` are target
-    * names and must appear in `columns`.
+    * `t.columns` names the TARGET columns positionally against the payload
+    * columns (reference bind-by-position semantics); `t.keys` are target
+    * names, resolved by the caller ([[resolveKeys]]), and must appear in
+    * the columns.
     */
-  def applyChanges(
-      df: DataFrame,
-      dialect: Dialect,
-      url: String,
-      table: String,
-      columns: Seq[String],
-      keyCols: Seq[String],
-      batchSize: Int = 0,
-      session: Seq[String] = Nil,
-      props: Map[String, String] = Map.empty,
+  def applyChanges(df: DataFrame, t: Target,
       retry: BatchedExec.RetryPolicy = BatchedExec.RetryPolicy()): (Long, Long) = {
     val payloadCols = df.columns.filterNot(c => c == "op" || c == "lsn").toSeq
-    val cols =
-      if (columns.isEmpty || columns == Seq("*")) payloadCols
-      else columns
+    val cols = t.columnsOr(payloadCols)
     require(payloadCols.length >= cols.length,
       s"change events carry ${payloadCols.length} payload columns for " +
         s"${cols.length} target columns")
-    val keyIdx = keyCols.map { k =>
+    val keyIdx = t.keys.map { k =>
       val i = cols.indexOf(k)
       require(i >= 0, s"key column '$k' is not among the target columns " +
         s"(${cols.mkString(", ")})")
-      i
-    }
+      i + 1 // op leads the row
+    }.toArray
+    val d = t.dialect
+    val deleteSql = s"DELETE FROM ${d.quote(t.table)} WHERE " +
+      t.keys.map(k => s"${d.quote(k)} = ?").mkString(" AND ")
+    val native = d.nativeUpsert
+    // a non-native upsert is a plain INSERT after the delete
+    val upsertSql = d.upsertSql(t.table, cols, if (native) t.keys else Nil)
     val projected = df.selectExpr("`op`" +: payloadCols.take(cols.length).map(c => s"`$c`"): _*)
-    val upserts = projected.sparkSession.sparkContext.longAccumulator("cdcJdbcUpserts")
-    val deletes = projected.sparkSession.sparkContext.longAccumulator("cdcJdbcDeletes")
-    val bs = if (batchSize > 0) batchSize else dialect.defaultBatchSize
-    val retries = retry.retryTimes
-    val sleep = retry.retrySleepMillis
-    val dialectName = dialect.name
-    projected.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-      if (it.hasNext) {
-        val d = Dialect.byName(dialectName)
-        val conn = connect(url, props)
-        try {
-          if (session.nonEmpty) {
-            val st = conn.createStatement()
-            try session.foreach(st.execute)
-            finally st.close()
-          }
-          val deleteSql = s"DELETE FROM ${d.quote(table)} WHERE " +
-            keyCols.map(k => s"${d.quote(k)} = ?").mkString(" AND ")
-          val upsertSql =
-            if (d.nativeUpsert) d.upsertSql(table, cols, keyCols)
-            else d.upsertSql(table, cols, Nil) // plain INSERT after the delete
-          val delStmt = conn.prepareStatement(deleteSql)
-          val upStmt = conn.prepareStatement(upsertSql)
-          try {
-            val paramTypes: Array[Int] =
-              try {
-                val md = upStmt.getParameterMetaData
-                Array.tabulate(cols.length)(i => md.getParameterType(i + 1))
-              } catch {
-                case _: Exception => Array.fill(cols.length)(java.sql.Types.NULL)
-              }
-            conn.setAutoCommit(false)
-            it.grouped(bs).foreach { batch =>
-              var attempt = 0
-              var done = false
-              var last: Throwable = null
-              while (!done && attempt <= retries) {
-                if (attempt > 0 && sleep > 0) Thread.sleep(sleep)
-                try {
-                  delStmt.clearBatch()
-                  upStmt.clearBatch()
-                  var nDel = 0
-                  var nUp = 0
-                  batch.foreach { row =>
-                    val isDelete = row.getString(0) == "D"
-                    // keys deduped upstream: a tombstone clears the key; a
-                    // non-native upsert clears then re-inserts it
-                    if (isDelete || !d.nativeUpsert) {
-                      var j = 0
-                      while (j < keyIdx.length) {
-                        val v = row.get(keyIdx(j) + 1) // +1: op leads the row
-                        if (v == null) delStmt.setNull(j + 1, java.sql.Types.NULL)
-                        else delStmt.setObject(j + 1, v)
-                        j += 1
-                      }
-                      delStmt.addBatch()
-                      if (isDelete) nDel += 1
-                    }
-                    if (!isDelete) {
-                      var i = 0
-                      while (i < cols.length) {
-                        val v = row.get(i + 1)
-                        if (v == null) upStmt.setNull(i + 1, paramTypes(i))
-                        else upStmt.setObject(i + 1, v)
-                        i += 1
-                      }
-                      upStmt.addBatch()
-                      nUp += 1
-                    }
-                  }
-                  delStmt.executeBatch() // clear keys before re-insert
-                  upStmt.executeBatch()
-                  conn.commit()
-                  deletes.add(nDel)
-                  upserts.add(nUp)
-                  done = true
-                } catch {
-                  case e: Throwable =>
-                    try conn.rollback() catch { case _: Throwable => () }
-                    last = e; attempt += 1
-                }
-              }
-              if (!done) throw new BatchedExec.BatchFailed(retries + 1, last)
-            }
-          } finally { delStmt.close(); upStmt.close() }
-        } finally conn.close()
+    val Seq(up, del) = runPartitions(projected, t,
+      Seq(deleteSql -> keyIdx, upsertSql -> Array.range(1, cols.length + 1)),
+      Seq("cdcJdbcUpserts", "cdcJdbcDeletes"), retry) { (stmts, batch) =>
+      var nUp = 0L
+      var nDel = 0L
+      batch.foreach { row =>
+        val isDelete = row.getString(0) == "D"
+        // keys deduped upstream: a tombstone clears the key; a non-native
+        // upsert clears then re-inserts it
+        if (isDelete || !native) stmts(0).add(row)
+        if (isDelete) nDel += 1
+        else { stmts(1).add(row); nUp += 1 }
       }
+      Seq(nUp, nDel)
     }
-    (upserts.value, deletes.value)
+    (up, del)
   }
 
   /** A connection with the `user`/`password` of `props` (others ignored). */
-  def connect(url: String, props: Map[String, String]): Connection = {
+  private def connect(url: String, props: Map[String, String]): Connection = {
     val p = new Properties()
     props.filter { case (k, v) => (k == "user" || k == "password") && v.nonEmpty }
       .foreach { case (k, v) => p.setProperty(k, v) }
     DriverManager.getConnection(url, p)
   }
 
-  /** Write `df` through the dialect's writeMode statement. Returns rows
-    * written. `columns` empty or `["*"]` ⇒ all DataFrame columns in order.
+  /** A connection with the `session` statements executed on it one by
+    * one, like the reference's loop (`executeSessionSql`).
     */
-  def write(
-      df: DataFrame,
-      dialect: Dialect,
-      url: String,
-      table: String,
-      columns: Seq[String] = Nil,
-      writeMode: String = "insert",
-      batchSize: Int = 0,
-      session: Seq[String] = Nil,
-      props: Map[String, String] = Map.empty,
-      conflictColumns: Seq[String] = Nil,
+  private def open(url: String, props: Map[String, String], session: Seq[String]): Connection = {
+    val conn = connect(url, props)
+    try {
+      if (session.nonEmpty) {
+        val st = conn.createStatement()
+        try session.foreach(st.execute)
+        finally st.close()
+      }
+      conn
+    } catch { case e: Throwable => conn.close(); throw e }
+  }
+
+  /** Write `df` through the dialect's writeMode statement. Returns rows
+    * written. `t.columns` empty or `["*"]` ⇒ all DataFrame columns in
+    * order. update/replace resolve their conflict keys once, here on the
+    * driver ([[resolveKeys]]); a target with none gets the plain INSERT
+    * (the reference's scenario 4).
+    */
+  def write(df: DataFrame, t: Target, writeMode: String = "insert",
       retry: BatchedExec.RetryPolicy = BatchedExec.RetryPolicy()): Long = {
-    dialect.validateWriteMode(writeMode)
+    val d = t.dialect
+    d.validateWriteMode(writeMode)
     // `columns` names the TARGET's columns; record columns bind by POSITION
     // (the reference's `values[i] = record.GetColumn(i)`,
     // `oracle_writer.go:400-408`)
-    val cols =
-      if (columns.isEmpty || columns == Seq("*")) df.columns.toSeq
-      else columns
+    val cols = t.columnsOr(df.columns.toSeq)
     require(df.columns.length >= cols.length,
       s"input has ${df.columns.length} columns for ${cols.length} target columns")
-    val bs = if (batchSize > 0) batchSize else dialect.defaultBatchSize
+    val sql = writeMode match {
+      case "replace" => d.replaceSql(t.table, cols, resolveKeys(t).keys)
+      case "update" => d.upsertSql(t.table, cols, resolveKeys(t).keys)
+      case _ => d.upsertSql(t.table, cols, Nil) // plain INSERT
+    }
     val projected =
       if (df.columns.length == cols.length) df
       else df.selectExpr(df.columns.take(cols.length).map(c => s"`$c`").toSeq: _*)
-    val written = projected.sparkSession.sparkContext.longAccumulator("jdbcRowsWritten")
-    val retries = retry.retryTimes
-    val sleep = retry.retrySleepMillis
-    val dialectName = dialect.name
-    projected.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
+    runPartitions(projected, t, Seq(sql -> Array.range(0, cols.length)),
+      Seq("jdbcRowsWritten"), retry) { (stmts, batch) =>
+      batch.foreach(stmts(0).add)
+      Seq(batch.length.toLong)
+    }.head
+  }
+
+  /** One prepared statement of [[runPartitions]]: `add` binds the row
+    * fields at `fields` to the parameters in order and adds the batch.
+    * NULLs bind through setNull: setObject(i, null) is rejected by some
+    * drivers (older Oracle thin needs a type code), so parameter types are
+    * probed once per statement, Types.NULL when the driver can't describe
+    * its parameters.
+    */
+  private final class Stmt(val ps: PreparedStatement, fields: Array[Int]) {
+    private val types: Array[Int] =
+      try {
+        val md = ps.getParameterMetaData
+        Array.tabulate(fields.length)(i => md.getParameterType(i + 1))
+      } catch {
+        case _: Exception => Array.fill(fields.length)(java.sql.Types.NULL)
+      }
+
+    def add(row: Row): Unit = {
+      var i = 0
+      while (i < fields.length) {
+        val v = row.get(fields(i))
+        if (v == null) ps.setNull(i + 1, types(i))
+        else ps.setObject(i + 1, v)
+        i += 1
+      }
+      ps.addBatch()
+    }
+  }
+
+  /** The one per-partition runner of the batch writer and the CDC apply —
+    * the reference's RDBMS writer task loop (`oracle_writer.go:344-420`):
+    * one connection per PARTITION, the session statements executed one by
+    * one on open (`executeSessionSql`), every statement of `sqls` prepared
+    * ONCE, autocommit off, and each `batchSize`-row batch bound by `bind`,
+    * flushed statement by statement in order (the JDBC batch protocol: one
+    * round trip per statement per batch) and committed — or rolled back and
+    * retried whole through [[BatchedExec.retrying]]. `sqls` pairs each
+    * statement with the row fields its parameters bind. `bind` returns one
+    * count per name in `counters`; the counts of a committed batch add up
+    * into the returned totals.
+    *
+    * Scale shape: no driver collect — every partition streams straight
+    * into its own connection, one `foreachPartition` job per call;
+    * `batchSize` bounds both memory and transaction size.
+    */
+  private def runPartitions(df: DataFrame, t: Target, sqls: Seq[(String, Array[Int])],
+      counters: Seq[String], retry: BatchedExec.RetryPolicy)(
+      bind: (IndexedSeq[Stmt], Seq[Row]) => Seq[Long]): Seq[Long] = {
+    val accs = counters.map(n => df.sparkSession.sparkContext.longAccumulator(n))
+    val (url, props, session) = (t.url, t.props, t.session)
+    val batchSize = if (t.batchSize > 0) t.batchSize else t.dialect.defaultBatchSize
+    df.foreachPartition { (it: Iterator[Row]) =>
       if (it.hasNext) {
-        val d = Dialect.byName(dialectName)
-        val conn = connect(url, props)
+        val conn = open(url, props, session)
         try {
-          // session conf, one statement per execute like the reference loop
-          if (session.nonEmpty) {
-            val st = conn.createStatement()
-            try session.foreach(st.execute)
-            finally st.close()
-          }
-          val pks =
-            if (writeMode == "insert") Nil
-            else if (conflictColumns.nonEmpty) conflictColumns
-            else primaryKeys(conn, table)
-          val sql = writeMode match {
-            case "replace" => d.replaceSql(table, cols, pks)
-            case "update" => d.upsertSql(table, cols, pks)
-            case _ => d.upsertSql(table, cols, Nil) // plain INSERT
-          }
-          val stmt = conn.prepareStatement(sql)
+          val stmts = sqls.map { case (sql, fields) =>
+            new Stmt(conn.prepareStatement(sql), fields)
+          }.toIndexedSeq
           try {
-            // null binding: setObject(i, null) is rejected by some drivers
-            // (older Oracle thin needs setNull with a type code) — resolve
-            // parameter types once per statement, degrade to Types.NULL when
-            // the driver can't describe its parameters
-            val paramTypes: Array[Int] =
-              try {
-                val md = stmt.getParameterMetaData
-                Array.tabulate(cols.length)(i => md.getParameterType(i + 1))
-              } catch {
-                case _: Exception => Array.fill(cols.length)(java.sql.Types.NULL)
-              }
             conn.setAutoCommit(false)
-            it.grouped(bs).foreach { batch =>
-              var attempt = 0
-              var done = false
-              var last: Throwable = null
-              while (!done && attempt <= retries) {
-                if (attempt > 0 && sleep > 0) Thread.sleep(sleep)
+            it.grouped(batchSize).foreach { batch =>
+              BatchedExec.retrying(retry) {
                 try {
-                  // JDBC batch protocol: one driver round trip per batch,
-                  // not per row (the reference's batched StartWrite shape)
-                  stmt.clearBatch()
-                  batch.foreach { row =>
-                    var i = 0
-                    while (i < cols.length) {
-                      val v = row.get(i)
-                      if (v == null) stmt.setNull(i + 1, paramTypes(i))
-                      else stmt.setObject(i + 1, v)
-                      i += 1
-                    }
-                    stmt.addBatch()
-                  }
-                  stmt.executeBatch()
+                  stmts.foreach(_.ps.clearBatch())
+                  val counts = bind(stmts, batch)
+                  stmts.foreach(_.ps.executeBatch())
                   conn.commit()
-                  written.add(batch.length)
-                  done = true
+                  accs.zip(counts).foreach { case (a, n) => a.add(n) }
                 } catch {
                   case e: Throwable =>
                     try conn.rollback() catch { case _: Throwable => () }
-                    last = e; attempt += 1
+                    throw e
                 }
               }
-              if (!done) throw new BatchedExec.BatchFailed(retries + 1, last)
             }
-          } finally stmt.close()
+          } finally stmts.foreach(_.ps.close())
         } finally conn.close()
       }
     }
-    written.value
+    accs.map(_.sum)
   }
 }

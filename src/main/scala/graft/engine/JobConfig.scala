@@ -242,10 +242,15 @@ object JobConfig {
     * bounded console echo), so `path` is filled by the runner.
     */
   final case class StreamWrite(fieldDelimiter: String, print: Boolean) extends WriterPlan
-  final case class JdbcWrite(dialect: Dialect, url: String, table: String,
-      columns: Seq[String], writeMode: String, batchSize: Int,
-      session: Seq[String], preSql: Seq[String], postSql: Seq[String],
-      props: Map[String, String]) extends WriterPlan
+  /** RDBMS writer: the target, the batch writer's `writeMode` and the
+    * target-side `preSql`/`postSql` run around the job. Paired with a
+    * cdcreader it is the streaming apply's destination, whose epoch ledger
+    * is `ledgerTable` scoped by `writerId`
+    * ([[graft.engine.cdc.CdcPipeline.JdbcDest]]).
+    */
+  final case class JdbcWrite(target: JdbcExec.Target, writeMode: String,
+      preSql: Seq[String], postSql: Seq[String],
+      writerId: String, ledgerTable: String) extends WriterPlan
   /** lakewriter (graft-native extension): MERGE-apply the paired
     * [[CdcRead]]'s change events into one lake table (`target` Left) or,
     * with `routes` set, fan the stream out into one lake table per route
@@ -312,9 +317,10 @@ object JobConfig {
   /** one `followers` entry on a lakewriter (the streaming analog of a
     * standalone lakereader→lakewriter job, sharing its config shape).
     * An entry with `jdbcUrl` set is instead a LIVE-DATABASE mirror
-    * ([[graft.engine.cdc.CdcPipeline.JdbcFollower]]): `table` + `dialect`
-    * name the target, `onConflictColumn` (or the target's PK metadata)
-    * the keys — sound under log reorder because the lake arbitrates first.
+    * ([[graft.engine.cdc.CdcPipeline.JdbcFollower]]) into `jdbc`:
+    * `table` + `dialect` name the target, `onConflictColumn` (or the
+    * target's PK metadata) the keys — sound under log reorder because the
+    * lake arbitrates first.
     * An entry with `format` set is an outbound ENVELOPE FEED
     * ([[graft.engine.cdc.CdcPipeline.FeedFollower]]): `path` is the feed
     * directory, `format` debezium|canal|maxwell, `onConflictColumn` the
@@ -324,8 +330,7 @@ object JobConfig {
       keyCols: Seq[String], buckets: Int, distCols: Seq[String],
       targetFileRows: Option[Long], writerId: String,
       aggregations: Seq[(String, String)],
-      jdbcUrl: String = "", jdbcTable: String = "", jdbcDialect: String = "",
-      jdbcProps: Map[String, String] = Map.empty,
+      jdbc: Option[JdbcExec.Target] = None,
       feedFormat: String = "",
       /** `history: true` — SCD Type-2 validity-interval table
         * ([[graft.engine.cdc.CdcPipeline.Scd2Follower]]); layout derived
@@ -403,7 +408,7 @@ object JobConfig {
         require(jw.writeMode != "insert",
           "cdc apply into a live database is a per-key MERGE — set " +
             "writeMode update (or replace); plain insert would duplicate on replay")
-        require(jw.dialect.name != "clickhouse",
+        require(jw.target.dialect.name != "clickhouse",
           "clickhouse has no conflict clause and no standard DELETE (dedup " +
             "is engine-side ReplacingMergeTree) — land the stream in a lake " +
             "table and export, instead of the per-key CDC apply")
@@ -709,14 +714,12 @@ object JobConfig {
         // live-database mirror follower
         require(f.str("table").nonEmpty && f.str("dialect").nonEmpty,
           "a jdbc follower needs table and dialect alongside jdbcUrl")
-        Dialect.byName(f.str("dialect")) // validate at plan time
-        FollowerSpec("", keyCols = f.strList("onConflictColumn"),
+        FollowerSpec("", keyCols = Nil,
           buckets = 0, distCols = Nil, targetFileRows = None,
           writerId = f.str("writerId"), aggregations = Nil,
-          jdbcUrl = f.str("jdbcUrl"), jdbcTable = f.str("table"),
-          jdbcDialect = f.str("dialect"),
-          jdbcProps = Map("user" -> f.str("username"),
-            "password" -> f.str("password")))
+          jdbc = Some(JdbcExec.Target(Dialect.byName(f.str("dialect")),
+            f.str("jdbcUrl"), f.str("table"), keys = f.strList("onConflictColumn"),
+            props = Map("user" -> f.str("username"), "password" -> f.str("password")))))
       } else if (f.str("format").nonEmpty) {
         // outbound envelope feed follower (broker-less outbox)
         val fdir = f.str("path")
@@ -941,31 +944,27 @@ object JobConfig {
       if (dialect == Dialect.Databend && writeMode == "replace")
         require(p.strList("onConflictColumn").nonEmpty,
           "replace mode must has onConflictColumn config")
-      JdbcWrite(dialect, url, table,
-        columns = p.strList("column"),
+      JdbcWrite(
+        JdbcExec.Target(dialect, url, table,
+          columns = p.strList("column"),
+          keys = p.strList("onConflictColumn"),
+          // doris/starrocks denominate `batchSize` in BYTES and `maxBatchRows`
+          // in rows (`mysql2doris.json`: batchSize=52428800) — there a missing
+          // maxBatchRows must fall back to the dialect default, NOT read the
+          // byte count as a row count (a 52M-row batch buffers the partition)
+          batchSize =
+            if (Set("doris", "starrocks").contains(dialect.name))
+              p.int("maxBatchRows", dialect.defaultBatchSize)
+            else p.int("maxBatchRows", p.int("batchSize", dialect.defaultBatchSize)),
+          session = p.strList("session"),
+          props = Map("user" -> p.str("username"), "password" -> p.str("password"))),
         writeMode = writeMode,
-        // doris/starrocks denominate `batchSize` in BYTES and `maxBatchRows`
-        // in rows (`mysql2doris.json`: batchSize=52428800) — there a missing
-        // maxBatchRows must fall back to the dialect default, NOT read the
-        // byte count as a row count (a 52M-row batch buffers the partition)
-        batchSize =
-          if (Set("doris", "starrocks").contains(dialect.name))
-            p.int("maxBatchRows", dialect.defaultBatchSize)
-          else p.int("maxBatchRows", p.int("batchSize", dialect.defaultBatchSize)),
-        session = p.strList("session"),
         preSql = SyncJob.renderSqls(p.strList("preSql"), table),
         postSql = SyncJob.renderSqls(p.strList("postSql"), table),
-        props = Map("user" -> p.str("username"), "password" -> p.str("password")) ++
-          (if (p.strList("onConflictColumn").nonEmpty)
-             Map("onConflictColumn" -> p.strList("onConflictColumn").mkString(","))
-           else Map.empty) ++
-          // graft-native params for the cdcreader→jdbc streaming pair: the
-          // epoch-ledger scope and table name on the TARGET database
-          (if (p.str("writerId").nonEmpty) Map("writerId" -> p.str("writerId"))
-           else Map.empty) ++
-          (if (p.str("ledgerTable").nonEmpty)
-             Map("ledgerTable" -> p.str("ledgerTable"))
-           else Map.empty))
+        // graft-native params for the cdcreader→jdbc streaming pair: the
+        // epoch-ledger scope and table name on the TARGET database
+        writerId = p.str("writerId", "cdc"),
+        ledgerTable = p.str("ledgerTable", "graft_cdc_epochs"))
 
     case other => throw new UnsupportedPlugin(other, "unknown writer plugin")
   }

@@ -67,7 +67,7 @@ object SyncJob {
       stringifyNested: Boolean = false)
 
   final case class Sink(
-      format: String, // csv | json | parquet | orc | text | lake
+      format: String, // csv | json | parquet | orc | text | lake | jdbc
       //              // | debezium | canal | maxwell (canonical
       //              // (op, lsn, payload...) rows encoded as JSONL binlog
       //              // envelopes — the export/produce direction; debezium
@@ -103,7 +103,11 @@ object SyncJob {
         * (`maxRecordsPerFile`).
         */
       flushRows: Long = 0L,
-      flushBytes: Long = 0L)
+      flushBytes: Long = 0L,
+      /** jdbc sink only: the RDBMS writer — its target (`path` names the
+        * same table) and writeMode ([[JdbcExec.write]])
+        */
+      jdbc: Option[JobConfig.JdbcWrite] = None)
 
   /** Error limit, as `job.setting.errorLimit` (`error_limiter.go:24-113`):
     * fail when bad records exceed `record` or bad fraction exceeds
@@ -551,16 +555,9 @@ object SyncJob {
       table.merge(withMeta, epoch)
       ()
     case "jdbc" =>
-      // RDBMS sink via [[JdbcExec]]: `path` is the TABLE name; connection
-      // and writeMode ride options (see graft.tools.RunJob's JdbcWrite)
-      val o = sink.options
-      JdbcExec.write(df, Dialect.byName(o("dialect")), o("url"), sink.path,
-        columns = o.get("columns").map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil),
-        writeMode = o.getOrElse("writeMode", "insert"),
-        batchSize = o.get("batchSize").map(_.toInt).getOrElse(0),
-        session = o.get("session").map(_.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Nil),
-        props = o.filter(kv => kv._1 == "user" || kv._1 == "password"),
-        conflictColumns = sink.keyCols)
+      val jw = sink.jdbc.getOrElse(
+        throw new IllegalArgumentException("jdbc sink needs its writer (Sink.jdbc)"))
+      JdbcExec.write(df, jw.target, jw.writeMode)
       ()
     case fmt0 =>
       // envelope sinks: canonical change events -> JSONL binlog envelopes

@@ -693,7 +693,7 @@ object CdcPipeline {
   /** A LIVE DATABASE as the streaming destination — the reference's flagship
     * `mysql2mysql` incremental-sync shape (it approximates it by re-running a
     * batch job with a `where` watermark; graft tails the change log and
-    * MERGE-applies). `keyCols` are the target's conflict columns: each
+    * MERGE-applies). `target.keys` are the conflict columns: each
     * micro-batch is LWW-deduped on them (`lsn` desc) and applied as
     * key-ranged DELETEs (tombstones) plus upserts — the dialect's native
     * conflict form where one exists ([[graft.engine.Dialect.nativeUpsert]]),
@@ -712,20 +712,10 @@ object CdcPipeline {
     * land in a lake table (lsn-arbitrated) and fan out via followers.
     */
   final case class JdbcDest(
-      dialect: graft.engine.Dialect,
-      url: String,
-      table: String,
-      /** target column list (positional against the payload columns);
-        * empty ⇒ the payload column names in payload order
+      /** the live table; its `keys` are the conflict/key columns (target
+        * names), resolved by the caller ([[JdbcExec.requireKeys]])
         */
-      columns: Seq[String] = Nil,
-      /** conflict/key columns (target names). Resolved by the caller —
-        * config `onConflictColumn` or [[graft.engine.JdbcExec.primaryKeys]].
-        */
-      keyCols: Seq[String] = Nil,
-      batchSize: Int = 0,
-      session: Seq[String] = Nil,
-      props: Map[String, String] = Map.empty,
+      target: JdbcExec.Target,
       writerId: String = "cdc",
       ledgerTable: String = "graft_cdc_epochs")
 
@@ -740,29 +730,28 @@ object CdcPipeline {
 
   /** Start the streaming apply into a live JDBC target; see [[JdbcDest]]. */
   def startJdbc(spark: SparkSession, cfg: CdcConfig, dest: JdbcDest): JdbcStream = {
-    require(dest.keyCols.nonEmpty,
-      "JdbcDest.keyCols must be resolved (onConflictColumn or target PK metadata) " +
+    val t = dest.target
+    require(t.keys.nonEmpty,
+      "JdbcDest.target.keys must be resolved (onConflictColumn or target PK metadata) " +
         "— the CDC apply dedupes and deletes by key")
     val upserts = new java.util.concurrent.atomic.AtomicLong()
     val deletes = new java.util.concurrent.atomic.AtomicLong()
     val skipped = new java.util.concurrent.atomic.AtomicLong()
-    // dest.keyCols name TARGET columns; the stream's rows carry PAYLOAD
+    // the target's keys name TARGET columns; the stream's rows carry PAYLOAD
     // names — map through the positional column list (applyChanges binds the
     // same way) so dedupe and the decoders' key fan-out see payload names
     val payloadNames = eventSchema(cfg).fieldNames.filterNot(n => n == "op" || n == "lsn").toSeq
-    val targetCols =
-      if (dest.columns.isEmpty || dest.columns == Seq("*")) payloadNames
-      else dest.columns
-    val payloadKeys = dest.keyCols.map { k =>
+    val targetCols = t.columnsOr(payloadNames)
+    val payloadKeys = t.keys.map { k =>
       val i = targetCols.indexOf(k)
       require(i >= 0 && i < payloadNames.length,
         s"key column '$k' is not among the target columns (${targetCols.mkString(", ")})")
       payloadNames(i)
     }
-    JdbcExec.ensureLedger(dest.url, dest.props, dest.ledgerTable)
+    JdbcExec.ensureLedger(t.url, t.props, dest.ledgerTable)
     /** Apply one epoch unless the ledger already holds it; true if applied. */
     def applyBatch(batch: DataFrame, epoch: Long): Boolean =
-      if (JdbcExec.epochApplied(dest.url, dest.props, dest.ledgerTable, dest.writerId, epoch)) {
+      if (JdbcExec.epochApplied(t.url, t.props, dest.ledgerTable, dest.writerId, epoch)) {
         skipped.incrementAndGet()
         false
       } else {
@@ -772,14 +761,12 @@ object CdcPipeline {
         // the same winner on every replay if a log breaks it
         val winners = LakeTable.lwwWinners(batch, payloadKeys,
           Seq(col("lsn").desc, xxhash64(batch.columns.toSeq.map(col): _*).desc))
-        val (up, del) = JdbcExec.applyChanges(winners, dest.dialect,
-          dest.url, dest.table, dest.columns, dest.keyCols,
-          batchSize = dest.batchSize, session = dest.session, props = dest.props)
+        val (up, del) = JdbcExec.applyChanges(winners, t)
         upserts.addAndGet(up)
         deletes.addAndGet(del)
         // recorded AFTER the apply: a crash in between replays the epoch,
         // which is idempotent (see the exactly-once contract above)
-        JdbcExec.recordEpoch(dest.url, dest.props, dest.ledgerTable, dest.writerId, epoch)
+        JdbcExec.recordEpoch(t.url, t.props, dest.ledgerTable, dest.writerId, epoch)
         true
       }
     // the dirty count rides applyChanges' one write job; the lines are

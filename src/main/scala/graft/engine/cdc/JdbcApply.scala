@@ -30,9 +30,9 @@ import graft.lake.LakeTable
   * ledger table (a [[CdcPipeline.startJdbc]] stream records micro-batch
   * epochs, this sync records source VERSIONS — crossing them would skip
   * work). Additive schema evolution on the SOURCE surfaces here as a new
-  * payload column: with `dest.columns` unset the next sync fails sharp at
+  * payload column: with `dest.target.columns` unset the next sync fails sharp at
   * the target's INSERT (unknown column) — ALTER the target, or pin
-  * `dest.columns` to the pre-evolution list to keep mirroring the old shape.
+  * `dest.target.columns` to the pre-evolution list to keep mirroring the old shape.
   */
 object JdbcApply {
 
@@ -43,14 +43,15 @@ object JdbcApply {
     * target bootstraps from the full resolved state (tombstones included).
     */
   def sync(src: LakeTable, dest: CdcPipeline.JdbcDest): Stats = {
-    require(dest.keyCols.nonEmpty,
-      "JdbcDest.keyCols must be resolved — the mirror dedupes and deletes by key")
+    val t = dest.target
+    require(t.keys.nonEmpty,
+      "JdbcDest.target.keys must be resolved — the mirror dedupes and deletes by key")
     val cur = src.currentSnapshot().version
     val last =
-      try JdbcExec.maxEpoch(dest.url, dest.props, dest.ledgerTable, dest.writerId)
+      try JdbcExec.maxEpoch(t.url, t.props, dest.ledgerTable, dest.writerId)
       catch {
         case _: java.sql.SQLException => // first sync: no ledger table yet
-          JdbcExec.ensureLedger(dest.url, dest.props, dest.ledgerTable)
+          JdbcExec.ensureLedger(t.url, t.props, dest.ledgerTable)
           -1L
       }
     if (cur <= last) return Stats(cur, skipped = true, 0L, 0L)
@@ -60,11 +61,8 @@ object JdbcApply {
          src.readChangesBetween(last, cur).select(src.keyCols.map(col): _*)))
         .withColumnRenamed(LakeTable.OpCol, "op")
         .withColumnRenamed(LakeTable.LsnCol, "lsn")
-    val (up, del) = JdbcExec.applyChanges(changes, dest.dialect, dest.url,
-      dest.table, dest.columns, dest.keyCols,
-      batchSize = dest.batchSize, session = dest.session, props = dest.props)
-    JdbcExec.recordEpoch(dest.url, dest.props, dest.ledgerTable,
-      dest.writerId, cur)
+    val (up, del) = JdbcExec.applyChanges(changes, t)
+    JdbcExec.recordEpoch(t.url, t.props, dest.ledgerTable, dest.writerId, cur)
     Stats(cur, skipped = false, up, del)
   }
 }

@@ -368,18 +368,12 @@ object LakeMaint {
           else s"scd2 -> $dstRoot @epoch ${st.epoch} rowsApplied=${st.rowsApplied} " +
             s"historyRows=${dst.currentSnapshot().rows}")
       case "mirror" =>
-        val (url, tbl, dialect) = (args(2), args(3), graft.engine.Dialect.byName(args(4)))
-        val keys: Seq[String] =
-          if (args.length >= 6) args(5).split(",").toSeq.filter(_.nonEmpty)
-          else {
-            val conn = java.sql.DriverManager.getConnection(url)
-            try graft.engine.JdbcExec.primaryKeys(conn, tbl) finally conn.close()
-          }
-        require(keys.nonEmpty,
-          s"mirror $tbl: no conflict columns - pass k1,k2 or declare a PK on the target")
+        val tbl = args(3)
+        val target = graft.engine.JdbcExec.requireKeys(s"mirror $tbl",
+          graft.engine.JdbcExec.Target(graft.engine.Dialect.byName(args(4)), args(2), tbl,
+            keys = if (args.length >= 6) args(5).split(",").toSeq.filter(_.nonEmpty) else Nil))
         val st = graft.engine.cdc.JdbcApply.sync(table,
-          graft.engine.cdc.CdcPipeline.JdbcDest(dialect, url, tbl,
-            keyCols = keys, writerId = "lake-mirror"))
+          graft.engine.cdc.CdcPipeline.JdbcDest(target, writerId = "lake-mirror"))
         println(if (st.skipped) s"mirror $tbl already at source version ${st.sourceVersion}"
           else s"mirrored -> $tbl @v${st.sourceVersion} upserts=${st.upserts} deletes=${st.deletes}")
       case "parity" =>

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.SessionBridge
 
-import graft.engine.{Dialect, JdbcExec, JobConfig, SyncJob, Transformers}
+import graft.engine.{JdbcExec, JobConfig, SyncJob, Transformers}
 import graft.engine.cdc.CdcPipeline
 import graft.sources.SyntheticSource
 
@@ -145,41 +145,17 @@ object RunJob {
     */
   private def runCdcJdbcContent(spark: SparkSession, cdc: JobConfig.CdcRead,
       jw: JobConfig.JdbcWrite, ov: Overrides): SyncJob.JobResult = {
-    JdbcExec.execStatements(jw.url, jw.props, jw.preSql)
+    val t = jw.target
+    JdbcExec.execStatements(t.url, t.props, jw.preSql)
     val dest = CdcPipeline.JdbcDest(
-      dialect = jw.dialect, url = jw.url, table = jw.table,
-      columns = jw.columns.filterNot(_ == "*"),
-      keyCols = conflictKeys(s"cdc apply into ${jw.table}", jw.url, jw.table, jw.props,
-        jw.props.get("onConflictColumn").filter(_.nonEmpty).toSeq.flatMap(_.split(","))),
-      batchSize = jw.batchSize,
-      session = jw.session,
-      props = jw.props,
-      writerId = jw.props.getOrElse("writerId", "cdc"),
-      ledgerTable = jw.props.getOrElse("ledgerTable", "graft_cdc_epochs"))
+      JdbcExec.requireKeys(s"cdc apply into ${t.table}", t), jw.writerId, jw.ledgerTable)
     val t0 = System.nanoTime()
     val stream = CdcPipeline.startJdbc(spark, tailConfig(cdc, ov), dest)
     stream.query.awaitTermination()
-    JdbcExec.execStatements(jw.url, jw.props, jw.postSql)
+    JdbcExec.execStatements(t.url, t.props, jw.postSql)
     SyncJob.JobResult(
       rowsWritten = stream.upserts.get() + stream.deletes.get(),
       rowsBad = 0L, seconds = (System.nanoTime() - t0) / 1e9)
-  }
-
-  /** Conflict columns of a live-database destination: the configured
-    * `onConflictColumn`, else, like the reference's writers, the target's
-    * PK metadata ([[JdbcExec.primaryKeys]]).
-    */
-  private def conflictKeys(what: String, url: String, table: String,
-      props: Map[String, String], configured: Seq[String]): Seq[String] = {
-    val keys =
-      if (configured.nonEmpty) configured
-      else {
-        val conn = JdbcExec.connect(url, props)
-        try JdbcExec.primaryKeys(conn, table) finally conn.close()
-      }
-    require(keys.nonEmpty, s"$what: no conflict columns - set onConflictColumn " +
-      "or declare a primary key on the target table")
-    keys
   }
 
   /** The one tail config: the cdcreader's log, checkpoint and decode
@@ -308,8 +284,7 @@ object RunJob {
           spark.read.text(path).take(20).foreach(r => println(r.getString(0)))
         res
 
-      case JobConfig.JdbcWrite(dialect, url, table, columns, writeMode, batchSize,
-          session, preSql, postSql, props) =>
+      case jw: JobConfig.JdbcWrite =>
         ov.sink match {
           case Some(sink) =>
             // substituted target (e.g. lake upsert in the sandbox): writeMode
@@ -317,17 +292,12 @@ object RunJob {
             // lake MERGE; preSql/postSql are target-side and dropped
             SyncJob.runFrom(spark, transformed, Nil, sink, errorLimit = t.errorLimit)
           case None =>
-            JdbcExec.execStatements(url, props, preSql)
-            val sink = SyncJob.Sink(format = "jdbc", path = table,
-              options = Map(
-                "dialect" -> dialect.name, "url" -> url, "writeMode" -> writeMode,
-                "batchSize" -> batchSize.toString,
-                "columns" -> columns.filterNot(_ == "*").mkString(","),
-                "session" -> session.mkString("\n")) ++
-                props.filter(kv => kv._1 == "user" || kv._1 == "password"),
-              keyCols = props.get("onConflictColumn").toSeq.flatMap(_.split(",").toSeq))
-            val res = SyncJob.runFrom(spark, transformed, Nil, sink, errorLimit = t.errorLimit)
-            JdbcExec.execStatements(url, props, postSql)
+            val target = jw.target
+            JdbcExec.execStatements(target.url, target.props, jw.preSql)
+            val res = SyncJob.runFrom(spark, transformed, Nil,
+              SyncJob.Sink(format = "jdbc", path = target.table, jdbc = Some(jw)),
+              errorLimit = t.errorLimit)
+            JdbcExec.execStatements(target.url, target.props, jw.postSql)
             res
         }
 
@@ -411,13 +381,10 @@ object RunJob {
       followers: Seq[JobConfig.FollowerSpec],
       ov: Overrides): Seq[CdcPipeline.Follower] =
     followers.map { f =>
-      if (f.jdbcUrl.nonEmpty)
+      if (f.jdbc.nonEmpty)
         // live-database mirror
         CdcPipeline.JdbcFollower(CdcPipeline.JdbcDest(
-          dialect = Dialect.byName(f.jdbcDialect), url = f.jdbcUrl, table = f.jdbcTable,
-          keyCols = conflictKeys(s"jdbc follower on ${f.jdbcTable}", f.jdbcUrl,
-            f.jdbcTable, f.jdbcProps, f.keyCols),
-          props = f.jdbcProps,
+          JdbcExec.requireKeys(s"jdbc follower on ${f.jdbc.get.table}", f.jdbc.get),
           writerId = if (f.writerId.nonEmpty) f.writerId else "cdc-mirror"))
       else if (f.feedFormat.nonEmpty) {
         // outbound envelope feed: debezium delete images need the keys —
@@ -519,13 +486,15 @@ object RunJob {
           c.payload.map(ps => s" payload=(${ps.fieldNames.mkString(",")})")
             .getOrElse(if (!c.toolColumn) " schema=v1(no tool col)" else "")
     }
-    def follower(f: JobConfig.FollowerSpec): String =
-      if (f.jdbcUrl.nonEmpty) s"jdbc-mirror[${f.jdbcDialect}] ${f.jdbcUrl} ${f.jdbcTable}"
-      else if (f.feedFormat.nonEmpty) s"feed[${f.feedFormat}] ${f.root}"
-      else if (f.history) s"scd2 ${f.root}"
-      else if (f.aggregations.isEmpty) s"replica ${f.root}"
-      else s"rollup ${f.root} group=(${f.keyCols.mkString(",")}) " +
-        f.aggregations.map { case (n, e) => s"$n=$e" }.mkString(",")
+    def follower(f: JobConfig.FollowerSpec): String = f.jdbc match {
+      case Some(j) => s"jdbc-mirror[${j.dialect.name}] ${j.url} ${j.table}"
+      case None =>
+        if (f.feedFormat.nonEmpty) s"feed[${f.feedFormat}] ${f.root}"
+        else if (f.history) s"scd2 ${f.root}"
+        else if (f.aggregations.isEmpty) s"replica ${f.root}"
+        else s"rollup ${f.root} group=(${f.keyCols.mkString(",")}) " +
+          f.aggregations.map { case (n, e) => s"$n=$e" }.mkString(",")
+    }
     // a lake destination: its layout (then `more`) on one line, one line
     // below it per onboarding source and follower
     def dest(d: JobConfig.LakeDest, more: String, indent: String): String =
@@ -541,16 +510,18 @@ object RunJob {
         s"file[${sink.format}] ${sink.path} mode=${sink.writeMode}" +
           (if (header.nonEmpty) s" header=${header.mkString(",")}" else "")
       case JobConfig.StreamWrite(d, p) => s"stream delim='$d' print=$p"
-      case JobConfig.JdbcWrite(d, url, table, cols, mode, bs, _, preSql, _, props) =>
-        val c = if (cols.isEmpty || cols == Seq("*")) Seq("c1", "c2") else cols
-        val keys = props.get("onConflictColumn").toSeq.flatMap(_.split(","))
-        val sql = mode match {
-          case "replace" => d.replaceSql(table, c, keys)
-          case "update" => d.upsertSql(table, c, if (keys.nonEmpty) keys else Seq(c.head))
-          case _ => d.upsertSql(table, c, Nil)
+      case jw: JobConfig.JdbcWrite =>
+        val jt = jw.target
+        val c = jt.columnsOr(Seq("c1", "c2"))
+        val sql = jw.writeMode match {
+          case "replace" => jt.dialect.replaceSql(jt.table, c, jt.keys)
+          case "update" => jt.dialect.upsertSql(jt.table, c,
+            if (jt.keys.nonEmpty) jt.keys else Seq(c.head))
+          case _ => jt.dialect.upsertSql(jt.table, c, Nil)
         }
-        s"jdbc[${d.name}] $url $table mode=$mode batch=$bs\n    sql: $sql" +
-          (if (preSql.nonEmpty) s"\n    preSql: ${preSql.mkString("; ")}" else "")
+        s"jdbc[${jt.dialect.name}] ${jt.url} ${jt.table} mode=${jw.writeMode} batch=${jt.batchSize}" +
+          s"\n    sql: $sql" +
+          (if (jw.preSql.nonEmpty) s"\n    preSql: ${jw.preSql.mkString("; ")}" else "")
       case lw: JobConfig.LakeWrite =>
         val cadence =
           (if (lw.vacuumEvery > 0)

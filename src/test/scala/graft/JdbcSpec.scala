@@ -46,7 +46,7 @@ class JdbcSpec extends AnyFunSuite {
     assert(Dialect.byName("STARROCKS").quote("x") === "`x`")
     // reference defaults: fetchSize/batchSize 1024
     assert(Dialect.Mysql.readerOptions("u", "t")("fetchsize") === "1024")
-    assert(Dialect.Postgres.writerOptions("u", "t")("batchsize") === "1024")
+    assert(Dialect.Postgres.defaultBatchSize === 1024)
     // hash fallback routes to the dialect's function; ANSI dialects have none
     assert(Dialect.Doris.hashSplitPredicates("id", 4).get(1).startsWith("CRC32"))
     assert(Dialect.GaussDb.hashSplitPredicates("id", 4).get(0).contains("HASHTEXT"))
@@ -54,10 +54,10 @@ class JdbcSpec extends AnyFunSuite {
   }
 
   test("per-connection session statements map to sessionInitStatement") {
-    // mysqlwriter `session` conf: statements run on each connection before
-    // the write — Spark JDBC's sessionInitStatement is the exact analog
+    // mysqlreader `session` conf: statements run on each connection before
+    // the read — Spark JDBC's sessionInitStatement is the exact analog
     val sess = Seq("SET SESSION sql_mode='ANSI'", "SET NAMES utf8mb4")
-    val w = Dialect.Mysql.writerOptions("jdbc:mysql://h/db", "t", session = sess)
+    val w = Dialect.Mysql.readerOptions("jdbc:mysql://h/db", "t", session = sess)
     assert(w("sessionInitStatement") === "SET SESSION sql_mode='ANSI'; SET NAMES utf8mb4")
     // Connector/J executes the init as ONE statement: a multi-statement
     // session list needs allowMultiQueries on the URL (the reference loops
@@ -65,20 +65,20 @@ class JdbcSpec extends AnyFunSuite {
     assert(w("url") === "jdbc:mysql://h/db?allowMultiQueries=true")
     // existing query params are appended to, not clobbered; single
     // statements leave the URL alone; postgres never needs the flag
-    assert(Dialect.Mysql.writerOptions("jdbc:mysql://h/db?useSSL=false", "t",
+    assert(Dialect.Mysql.readerOptions("jdbc:mysql://h/db?useSSL=false", "t",
       session = sess)("url").endsWith("useSSL=false&allowMultiQueries=true"))
-    assert(Dialect.Mysql.writerOptions("jdbc:mysql://h/db", "t",
+    assert(Dialect.Mysql.readerOptions("jdbc:mysql://h/db", "t",
       session = sess.take(1))("url") === "jdbc:mysql://h/db")
     val r = Dialect.Postgres.readerOptions("jdbc:postgresql://h/db", "t",
       session = Seq("SET search_path TO s", "SET statement_timeout=0"))
     assert(r("sessionInitStatement") === "SET search_path TO s; SET statement_timeout=0")
     assert(r("url") === "jdbc:postgresql://h/db")
     // absent by default — an empty option would still run a round trip
-    assert(!Dialect.Mysql.writerOptions("u", "t").contains("sessionInitStatement"))
+    assert(!Dialect.Mysql.readerOptions("u", "t").contains("sessionInitStatement"))
     // an explicit allowMultiQueries=false conflicts with a multi-statement
     // session list: fail fast, don't let every connection die at runtime
     intercept[IllegalArgumentException] {
-      Dialect.Mysql.writerOptions("jdbc:mysql://h/db?allowMultiQueries=false", "t",
+      Dialect.Mysql.readerOptions("jdbc:mysql://h/db?allowMultiQueries=false", "t",
         session = sess)
     }
   }
@@ -165,13 +165,13 @@ class JdbcSpec extends AnyFunSuite {
     // oracle / sybase / sqlserver drivers reject multi-statement strings —
     // plan-time failure instead of per-connection runtime death
     for (d <- Seq(Dialect.Oracle, Dialect.Sybase, Dialect.SqlServer, Dialect.ClickHouse)) {
-      intercept[IllegalArgumentException] { d.writerOptions("u", "t", session = sess) }
+      intercept[IllegalArgumentException] { d.readerOptions("u", "t", session = sess) }
       // single statements stay fine everywhere
-      assert(d.writerOptions("u", "t", session = sess.take(1))
+      assert(d.readerOptions("u", "t", session = sess.take(1))
         .contains("sessionInitStatement"))
     }
     // clickhouse never gets the mysql allowMultiQueries URL rewrite
-    assert(Dialect.ClickHouse.writerOptions("jdbc:clickhouse://h/db", "t",
+    assert(Dialect.ClickHouse.readerOptions("jdbc:clickhouse://h/db", "t",
       session = sess.take(1))("url") === "jdbc:clickhouse://h/db")
   }
 

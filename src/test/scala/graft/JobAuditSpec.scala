@@ -177,7 +177,7 @@ class JobAuditSpec extends SparkSpec {
       jobsPerEpoch(CdcPipeline.startJdbc(spark,
         CdcPipeline.CdcConfig(s"$work/log", s"$work/$name-cp", maxFilesPerTrigger = 2,
           format = "debezium", dlqDir = dlq),
-        CdcPipeline.JdbcDest(Dialect.Sqlite, url, name, keyCols = Model.keyCols,
+        CdcPipeline.JdbcDest(JdbcExec.Target(Dialect.Sqlite, url, name, keys = Model.keyCols),
           writerId = name)).query.awaitTermination())
     }
     val plain = tail("plain", None)

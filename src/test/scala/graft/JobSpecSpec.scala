@@ -162,7 +162,7 @@ class JobSpecSpec extends SparkSpec {
     assert(r.predicates.length === 4)
     assert(r.predicates.head === "CRC32(`id`) % 4 = 0")
     val w = t.writer.asInstanceOf[JobConfig.JdbcWrite]
-    assert(w.dialect === Dialect.Doris)
+    assert(w.target.dialect === Dialect.Doris)
     assert(w.preSql === Seq("TRUNCATE TABLE users")) // @table rendered
   }
 
@@ -179,7 +179,7 @@ class JobSpecSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("onConflictColumn"))
     val ok = JobConfig.translate(JobConfig.parse(cfg(""", "onConflictColumn": ["a"]""")))
-    assert(ok.head.writer.asInstanceOf[JobConfig.JdbcWrite].dialect === Dialect.Databend)
+    assert(ok.head.writer.asInstanceOf[JobConfig.JdbcWrite].target.dialect === Dialect.Databend)
   }
 
   // ------------------------------------------------------------- E2E
@@ -327,8 +327,8 @@ class JobSpecSpec extends SparkSpec {
     val df = (1L to 100L).map(i => (i, s"u$i", i * 1.5)).toDF("id", "name", "score")
     // Sqlite dialect: ANSI double-quoting, scenario-4 plain INSERT — the
     // exact statement shape Derby accepts
-    val written = JdbcExec.write(df, Dialect.Sqlite, url, "users",
-      batchSize = 16, props = Map.empty)
+    val written = JdbcExec.write(df,
+      JdbcExec.Target(Dialect.Sqlite, url, "users", batchSize = 16, props = Map.empty))
     assert(written === 100L)
     val back = spark.read.jdbc(url, "\"users\"", new java.util.Properties())
     assert(back.count() === 100L)
@@ -349,11 +349,11 @@ class JobSpecSpec extends SparkSpec {
       (3L, Some("c"), None, Some(java.sql.Timestamp.valueOf("2024-01-03 00:00:00"))))
     val df = rows.toDF("ID", "S", "D", "TS")
     // Sqlite dialect against Derby: insert (scenario-4) — the shared bind loop
-    assert(JdbcExec.write(df, Dialect.Sqlite, url, "T", writeMode = "insert") === 3L)
+    assert(JdbcExec.write(df, JdbcExec.Target(Dialect.Sqlite, url, "T"), writeMode = "insert") === 3L)
     // update/replace route through the same bind loop with PK discovery
     val df2 = Seq((4L, Some("filled"), Option.empty[Double],
       Option.empty[java.sql.Timestamp])).toDF("ID", "S", "D", "TS")
-    assert(JdbcExec.write(df2, Dialect.Sqlite, url, "T", writeMode = "update") === 1L)
+    assert(JdbcExec.write(df2, JdbcExec.Target(Dialect.Sqlite, url, "T"), writeMode = "update") === 1L)
     val back = spark.read.jdbc(url, "T", new java.util.Properties())
     assert(back.count() === 4L) // sqlite 'update' is scenario-4 plain INSERT
     assert(back.filter($"S".isNull).count() === 1L)
@@ -376,6 +376,74 @@ class JobSpecSpec extends SparkSpec {
     val back = spark.read.jdbc(url, "\"events\"", new java.util.Properties())
     assert(back.count() === 100L)
     assert(back.filter($"name" === "fixed").count() === 100L)
+  }
+
+  test("jdbc sink through the job runner runs a multi-line session statement whole") {
+    // the writer's session list reaches every connection as typed
+    // statements: one statement that spans two lines is one execute, and
+    // sets the schema the unqualified table resolves in
+    val url = "jdbc:derby:memory:graftsession;create=true"
+    val spec = JobConfig.parse(s"""{
+      "job": {"setting": {"speed": {"channel": 2}}, "content": [{
+        "reader": {"name": "streamreader", "parameter": {"sliceRecordCount": 5,
+          "column": [{"type": "long"}, {"type": "string", "value": "fixed"}]}},
+        "writer": {"name": "sqlitewriter", "parameter": {
+          "column": ["ID", "NAME"], "writeMode": "insert",
+          "session": ["SET SCHEMA\\n  SESS"],
+          "preSql": ["CREATE SCHEMA SESS", "CREATE TABLE SESS.EVENTS (ID BIGINT, NAME VARCHAR(32))"],
+          "connection": [{"jdbcUrl": "$url", "table": ["EVENTS"]}]}}}]}}""")
+    assert(RunJob.run(spark, spec).head.rowsWritten === 10L)
+    val back = spark.read.jdbc(url, "SESS.EVENTS", new java.util.Properties())
+    assert(back.count() === 10L)
+    assert(back.filter($"NAME" === "fixed").count() === 10L)
+  }
+
+  /** The BatchFailed in `e`'s cause chain. */
+  private def batchFailure(e: Throwable): Option[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .find(_.isInstanceOf[graft.engine.BatchedExec.BatchFailed])
+
+  test("jdbc write rolls a failing batch back whole and fails after retryTimes + 1 attempts") {
+    val url = "jdbc:derby:memory:graftrollback;create=true"
+    JdbcExec.execStatements(url, Map.empty, Seq(
+      "CREATE TABLE T (ID BIGINT PRIMARY KEY, S VARCHAR(16))",
+      "INSERT INTO T VALUES (15, 'pre')"))
+    // one partition, two 10-row batches: the second collides with ID 15
+    val df = (1L to 20L).map(i => (i, "new")).toDF("ID", "S").coalesce(1)
+    val e = intercept[Exception] {
+      JdbcExec.write(df, JdbcExec.Target(Dialect.Sqlite, url, "T", batchSize = 10),
+        retry = graft.engine.BatchedExec.RetryPolicy(retryTimes = 2, retrySleepMillis = 0))
+    }
+    assert(batchFailure(e).map(_.getMessage) === Some("batch failed after 3 attempts"), e)
+    val back = spark.read.jdbc(url, "T", new java.util.Properties())
+      .as[(Long, String)].collect().toMap
+    // the first batch stays committed; no row of the second lands
+    assert(back === (1L to 10L).map(_ -> "new").toMap + (15L -> "pre"))
+  }
+
+  test("jdbc CDC apply rolls a failing batch's deletes and inserts back whole") {
+    val url = "jdbc:derby:memory:graftapplyrollback;create=true"
+    JdbcExec.execStatements(url, Map.empty, Seq(
+      "CREATE TABLE T (ID BIGINT PRIMARY KEY, S VARCHAR(16))",
+      "INSERT INTO T VALUES (12, 'pre'), (13, 'pre')"))
+    // one partition, two 10-row batches; the second holds an update of 12,
+    // a tombstone of 13 and two inserts of 15 (the portable apply deletes
+    // both keys first, then the second insert of 15 violates the PK)
+    val second = Seq(("U", 12L), ("D", 13L)) ++
+      Seq(11L, 14L, 15L, 15L, 16L, 17L, 18L, 19L).map(("I", _))
+    val rows = (1L to 10L).map(("I", _)) ++ second
+    val df = rows.zipWithIndex.map { case ((op, id), lsn) => (op, lsn.toLong, id, "new") }
+      .toDF("op", "lsn", "ID", "S").coalesce(1)
+    val e = intercept[Exception] {
+      JdbcExec.applyChanges(df,
+        JdbcExec.Target(Dialect.Sqlite, url, "T", keys = Seq("ID"), batchSize = 10),
+        retry = graft.engine.BatchedExec.RetryPolicy(retryTimes = 1, retrySleepMillis = 0))
+    }
+    assert(batchFailure(e).map(_.getMessage) === Some("batch failed after 2 attempts"), e)
+    val back = spark.read.jdbc(url, "T", new java.util.Properties())
+      .as[(Long, String)].collect().toMap
+    // the first batch stays committed; the second's deletes are undone too
+    assert(back === (1L to 10L).map(_ -> "new").toMap + (12L -> "pre") + (13L -> "pre"))
   }
 
   test("jdbc reader through the job runner: querySql pushdown against Derby") {
@@ -1176,7 +1244,7 @@ class JobSpecSpec extends SparkSpec {
       val s = CdcPipeline.startJdbc(spark,
         CdcPipeline.CdcConfig(s"$work/log", s"$work/cp", maxFilesPerTrigger = 1,
           format = "debezium", dlqDir = Some(dlq)),
-        CdcPipeline.JdbcDest(Dialect.Sqlite, url, "turns", keyCols = Model.keyCols))
+        CdcPipeline.JdbcDest(JdbcExec.Target(Dialect.Sqlite, url, "turns", keys = Model.keyCols)))
       s.query.awaitTermination()
       s
     }

@@ -132,24 +132,30 @@ class ToolsSpec extends AnyFunSuite {
       "lake/LakeTable.scala:def fsck"))
   }
 
-  test("writeStream and foreachBatch appear only in CdcPipeline.runBatches") {
-    // the one stream sink rebinds each micro-batch to the caller's session;
-    // a second sink would run its batches in the stream's own session and
-    // re-compile its generated classes at every stream start
-    val root = Paths.get("src/main/scala/graft")
-    val hits = Files.walk(root).iterator().asScala
+  /** `file:enclosing def` for every line under `src/main/scala` that `hit`
+    * accepts; the enclosing def is the nearest preceding `def` line.
+    */
+  private def sitesOf(hit: String => Boolean): Set[String] = {
+    val root = Paths.get("src/main/scala")
+    Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
       .flatMap { p =>
         val lines = Files.readAllLines(p).asScala.toIndexedSeq
         lines.indices.collect {
-          case i if lines(i).contains("writeStream") || lines(i).contains(".foreachBatch {") =>
-            // the enclosing def: the nearest preceding `def` line
+          case i if hit(lines(i)) =>
             val owner = lines.take(i + 1).reverseIterator
               .map(_.trim).find(_.matches("""(private |override )*def .*""")).getOrElse("")
             s"${root.relativize(p)}:${owner.takeWhile(c => c != '(' && c != '[')}"
         }
       }.toSet
-    assert(hits === Set("engine/cdc/CdcPipeline.scala:private def runBatches"))
+  }
+
+  test("writeStream and foreachBatch appear only in CdcPipeline.runBatches") {
+    // the one stream sink rebinds each micro-batch to the caller's session;
+    // a second sink would run its batches in the stream's own session and
+    // re-compile its generated classes at every stream start
+    assert(sitesOf(l => l.contains("writeStream") || l.contains(".foreachBatch {")) ===
+      Set("graft/engine/cdc/CdcPipeline.scala:private def runBatches"))
   }
 
   test("engine FileSystem handles take the session's Hadoop conf from one helper") {
@@ -169,11 +175,21 @@ class ToolsSpec extends AnyFunSuite {
 
   test("RunJob builds its tail config and looks up conflict keys in one place each") {
     // the single-table and the routed lakewriter and the jdbc tail share one
-    // tail-config builder, and every jdbc destination one key lookup; a
-    // second copy is how the two lakewriter shapes drifted apart
+    // tail-config builder, and every jdbc destination in src/main (RunJob's
+    // batch writer, tail and followers, LakeMaint's mirror) one key lookup
+    // on the driver; a second copy is how the two lakewriter shapes drifted
+    // apart
     val src = new String(Files.readAllBytes(
       Paths.get("src/main/scala/graft/tools/RunJob.scala")), "UTF-8")
-    for (site <- Seq("CdcConfig(", "primaryKeys("))
-      assert(java.util.regex.Pattern.quote(site).r.findAllIn(src).size === 1, site)
+    assert("CdcConfig\\(".r.findAllIn(src).size === 1)
+    assert(sitesOf(l => l.contains("primaryKeys(") && !l.contains("def primaryKeys(")) ===
+      Set("graft/engine/JdbcExec.scala:def resolveKeys"))
+  }
+
+  test("executeBatch and rollback appear only in JdbcExec's one per-partition runner") {
+    // the batch writer and the CDC apply share one runner and one retry
+    // loop; a second copy is where commit-per-batch and rollback drift
+    assert(sitesOf(l => l.contains("executeBatch") || l.contains(".rollback()")) ===
+      Set("graft/engine/JdbcExec.scala:private def runPartitions"))
   }
 }
