@@ -1,5 +1,7 @@
 package graft.engine
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Row}
 
 /** The generic "non-SQL sink" template the reference's neo4jwriter models:
@@ -32,6 +34,8 @@ object BatchedExec {
     * `retrySleepMillis` between attempts; [[BatchFailed]] carries the last
     * error. A retried batch is re-executed whole, so `batch` must undo a
     * failed attempt itself (the JDBC runner rolls its transaction back).
+    * Only non-fatal errors are retried: an `InterruptedException` from the
+    * batch or the sleep (a killed task) ends the loop at once.
     */
   def retrying(policy: RetryPolicy)(batch: => Unit): Unit = {
     val retries = policy.retryTimes
@@ -41,7 +45,7 @@ object BatchedExec {
     while (!done && attempt <= retries) {
       if (attempt > 0 && policy.retrySleepMillis > 0) Thread.sleep(policy.retrySleepMillis)
       try { batch; done = true }
-      catch { case e: Throwable => last = e; attempt += 1 }
+      catch { case NonFatal(e) => last = e; attempt += 1 }
     }
     if (!done) throw new BatchFailed(retries + 1, last)
   }

@@ -50,10 +50,8 @@ object JdbcExec {
     */
   def resolveKeys(t: Target): Target =
     if (t.keys.nonEmpty) t
-    else {
-      val conn = open(t.url, t.props, t.session)
-      try t.copy(keys = primaryKeys(conn, t.table)) finally conn.close()
-    }
+    else withConnection(t.url, t.props, t.session)(conn =>
+      t.copy(keys = primaryKeys(conn, t.table)))
 
   /** [[resolveKeys]] for a per-key apply (the CDC tail, the mirror): fails
     * fast when the target names no key.
@@ -147,15 +145,14 @@ object JdbcExec {
     import java.sql.Types._
     require(n > 1, s"probeSplit needs n > 1 (got $n)")
     val qpk = dialect.quote(splitPk)
-    val conn = connect(url, props)
-    try {
+    withConnection(url, props) { conn =>
       val st = conn.createStatement()
       try {
         val rs = st.executeQuery(s"SELECT MIN($qpk), MAX($qpk) FROM $tableExpr")
         try {
           val sqlType = rs.getMetaData.getColumnType(1)
-          if (!rs.next()) return SplitPlan.SingleTask
-          sqlType match {
+          if (!rs.next()) SplitPlan.SingleTask
+          else sqlType match {
             case TINYINT | SMALLINT | INTEGER | BIGINT | NUMERIC | DECIMAL |
                 FLOAT | REAL | DOUBLE =>
               val mn = rs.getBigDecimal(1)
@@ -176,7 +173,7 @@ object JdbcExec {
           }
         } finally rs.close()
       } finally st.close()
-    } finally conn.close()
+    }
   }
 
   /** Sorted-distinct boundary sample for the text dictionary split: the
@@ -210,22 +207,19 @@ object JdbcExec {
     * Connection failures propagate; only the CREATE's already-exists error
     * is swallowed.
     */
-  def ensureLedger(url: String, props: Map[String, String], ledger: String): Unit = {
-    val conn = connect(url, props)
-    try {
+  def ensureLedger(url: String, props: Map[String, String], ledger: String): Unit =
+    withConnection(url, props) { conn =>
       val st = conn.createStatement()
       try st.execute(s"CREATE TABLE $ledger (WRITER_ID VARCHAR(128) NOT NULL, " +
         "EPOCH BIGINT NOT NULL, PRIMARY KEY (WRITER_ID, EPOCH))")
       catch { case _: java.sql.SQLException => () } // exists already
       finally st.close()
-    } finally conn.close()
-  }
+    }
 
   /** Whether `(writerId, epoch)` is already recorded in the ledger. */
   def epochApplied(url: String, props: Map[String, String], ledger: String,
-      writerId: String, epoch: Long): Boolean = {
-    val conn = connect(url, props)
-    try {
+      writerId: String, epoch: Long): Boolean =
+    withConnection(url, props) { conn =>
       val st = conn.prepareStatement(
         s"SELECT COUNT(*) FROM $ledger WHERE WRITER_ID = ? AND EPOCH = ?")
       try {
@@ -234,8 +228,7 @@ object JdbcExec {
         val rs = st.executeQuery()
         try { rs.next(); rs.getLong(1) > 0 } finally rs.close()
       } finally st.close()
-    } finally conn.close()
-  }
+    }
 
   /** Highest recorded epoch for `writerId` (-1 when none) — the catch-up
     * watermark for [[graft.engine.cdc.JdbcApply.sync]]. Propagates
@@ -243,9 +236,8 @@ object JdbcExec {
     * can create it and start from -1.
     */
   def maxEpoch(url: String, props: Map[String, String], ledger: String,
-      writerId: String): Long = {
-    val conn = connect(url, props)
-    try {
+      writerId: String): Long =
+    withConnection(url, props) { conn =>
       val st = conn.prepareStatement(
         s"SELECT MAX(EPOCH) FROM $ledger WHERE WRITER_ID = ?")
       try {
@@ -255,17 +247,15 @@ object JdbcExec {
           if (rs.next() && rs.getObject(1) != null) rs.getLong(1) else -1L
         } finally rs.close()
       } finally st.close()
-    } finally conn.close()
-  }
+    }
 
   /** Record `(writerId, epoch)` as applied. A duplicate (two racing replays
     * past the [[epochApplied]] check) hits the ledger PK — harmless, both
     * applied the same idempotent batch.
     */
   def recordEpoch(url: String, props: Map[String, String], ledger: String,
-      writerId: String, epoch: Long): Unit = {
-    val conn = connect(url, props)
-    try {
+      writerId: String, epoch: Long): Unit =
+    withConnection(url, props) { conn =>
       val st = conn.prepareStatement(s"INSERT INTO $ledger VALUES (?, ?)")
       try {
         st.setString(1, writerId)
@@ -273,8 +263,7 @@ object JdbcExec {
         try st.executeUpdate()
         catch { case _: java.sql.SQLIntegrityConstraintViolationException => () }
       } finally st.close()
-    } finally conn.close()
-  }
+    }
 
   /** Apply a LWW-deduped change batch — rows shaped `(op, lsn, payload...)`,
     * at most one row per key — to a live table: tombstones (`op = D`) become
@@ -328,19 +317,22 @@ object JdbcExec {
     (up, del)
   }
 
-  /** A connection with the `user`/`password` of `props` (others ignored). */
-  private def connect(url: String, props: Map[String, String]): Connection = {
+  /** `f` over one driver connection ([[open]]), closed afterwards. */
+  private def withConnection[A](url: String, props: Map[String, String],
+      session: Seq[String] = Nil)(f: Connection => A): A = {
+    val conn = open(url, props, session)
+    try f(conn) finally conn.close()
+  }
+
+  /** A connection with the `user`/`password` of `props` (others ignored)
+    * and the `session` statements executed on it one by one, like the
+    * reference's loop (`executeSessionSql`).
+    */
+  private def open(url: String, props: Map[String, String], session: Seq[String]): Connection = {
     val p = new Properties()
     props.filter { case (k, v) => (k == "user" || k == "password") && v.nonEmpty }
       .foreach { case (k, v) => p.setProperty(k, v) }
-    DriverManager.getConnection(url, p)
-  }
-
-  /** A connection with the `session` statements executed on it one by
-    * one, like the reference's loop (`executeSessionSql`).
-    */
-  private def open(url: String, props: Map[String, String], session: Seq[String]): Connection = {
-    val conn = connect(url, props)
+    val conn = DriverManager.getConnection(url, p)
     try {
       if (session.nonEmpty) {
         val st = conn.createStatement()

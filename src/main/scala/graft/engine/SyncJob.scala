@@ -374,8 +374,10 @@ object SyncJob {
     // lake: epoch-idempotent merge needs no staging; jdbc: rows stream into
     // the target's transactions (the reference's mid-transfer abort shape)
     val staged = binding && sink.format != "lake" && sink.format != "jdbc"
-    val fs = new Path(sink.path).getFileSystem(SessionBridge.hadoopConf(spark))
-    val stagingPath = s"${sink.path}.staging-${System.nanoTime()}"
+    // only a staged publish opens the sink's filesystem and names a staging
+    // dir (a jdbc sink's `path` is a table name)
+    lazy val fs = new Path(sink.path).getFileSystem(SessionBridge.hadoopConf(spark))
+    lazy val stagingPath = s"${sink.path}.staging-${System.nanoTime()}"
 
     // nonConflict holds its exclusive sentinel from the pre-check through
     // the publish — no check-then-act window for a concurrent job

@@ -5,7 +5,8 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.SessionBridge
+import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash, Pmod}
+import org.apache.spark.sql.graftbridge.{FileListBridge, SessionBridge}
 import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 
 import graft.core.LocalFs
@@ -170,14 +171,14 @@ final class LakeTable(
   /** bucket of a row = pmod(hash(distribution key...), numBuckets) */
   private def bucketExpr = pmod(hash(distributionCols.map(col): _*), lit(numBuckets))
 
-  /** Driver-side bucket of one distribution-key value, computed with the
-    * SAME codegen'd `hash` expression the writer uses (over literals of the
-    * stored column types — see pruneFiles' exact-type guard) so pruning can
-    * never disagree with the layout.
+  /** Driver-side bucket of one distribution-key value: the writer's own
+    * expression (`hash` is `Murmur3Hash` with seed 42) evaluated in-process
+    * over literals of the stored column types — see pruneFiles' exact-type
+    * guard — so pruning can never disagree with the layout and submits no
+    * job.
     */
-  private def bucketOfCols(distLits: Seq[Column]): Int = spark.range(1)
-    .select(pmod(hash(distLits: _*), lit(numBuckets)).as("b"))
-    .head().getInt(0)
+  private[graft] def bucketOfCols(distLits: Seq[Literal]): Int =
+    Pmod(Murmur3Hash(distLits, 42), Literal(numBuckets)).eval().asInstanceOf[Int]
 
   /** Read-path LWW ordering: `_lsn` desc with a stable full-row hash as the
     * final tie-break, so a GENUINE lsn collision (e.g. a synthetic
@@ -577,7 +578,6 @@ final class LakeTable(
   }
 
   private def pruneFiles(s: Snapshot, cond: Column): Seq[FileEntry] = {
-    import org.apache.spark.sql.catalyst.expressions.{Literal => CLit}
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val schema = s.schema.getOrElse(return s.files)
     val keyTypes: Map[String, org.apache.spark.sql.types.DataType] =
@@ -614,13 +614,12 @@ final class LakeTable(
     // routes differently) pins the one bucket that can hold matching keys.
     // Only constraints REQUIRED by every matching row count (top-level AND
     // path — a disjunction's equality pins nothing).
-    val eqLits: Map[String, CLit] = FileStats.topConjuncts(tree).collect {
-      case FileStats.Range(c, "=", v, lt) if lt == keyTypes(c) => c -> CLit(v, lt)
+    val eqLits: Map[String, Literal] = FileStats.topConjuncts(tree).collect {
+      case FileStats.Range(c, "=", v, lt) if lt == keyTypes(c) => c -> Literal(v, lt)
     }.toMap
     val bucketed =
       if (distributionCols.forall(eqLits.contains)) {
-        val b = bucketOfCols(distributionCols.map(c =>
-          ColumnBridge.column(eqLits(c))))
+        val b = bucketOfCols(distributionCols.map(eqLits))
         s.files.filter(_.bucket == b)
       } else s.files
     // clean-bucket payload pruning (FileStats clean-bucket lemma): files of
@@ -771,15 +770,18 @@ final class LakeTable(
   }
 
   /** Physical file scan with the unified snapshot schema (+`_op`, null in
-    * base files — additive evolution also null-fills old files).
+    * base files — additive evolution also null-fills old files). Planned
+    * from the manifest's file list: one `getFileStatus` per file on the
+    * handle's `fs` (a file gone from disk fails here, with
+    * `FileNotFoundException`), and no listing by Spark's file index.
     */
   private def dfFor(s: Snapshot, files: Seq[FileEntry]): DataFrame = {
     val stored = s.schema.getOrElse(StructType(Nil))
     val schema = StructType(stored.fields :+ StructField(OpCol, StringType, nullable = true))
     if (files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else
-      spark.read.schema(schema).parquet(files.map(f => s"$dataDir/${f.path}"): _*)
+    else FileListBridge.parquet(spark,
+      files.map(f => fs.getFileStatus(new Path(s"$dataDir/${f.path}"))), schema)
   }
 
   // ---------------------------------------------------------------- merge

@@ -157,6 +157,22 @@ class CdcReplaySpec extends SparkSpec {
     assert(!sick.clean && sick.missing === Seq(victim))
   }
 
+  test("a data file deleted behind the manifest fails the read with FileNotFoundException") {
+    import spark.implicits._
+    val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
+    val lakeDir = tmpDir("lake-gone")
+    val table = LakeTable.create(spark, lakeDir, Model.keyCols, numBuckets = 4)
+    table.merge((0 until 8).map(i => ("I", i + 1L, ts, s"c$i", 0, "user", s"t$i",
+      None: Option[String])).toDF("op", "lsn", "ts", "conv_id", "turn_idx", "role", "text",
+      "tool"), 0L)
+    val victim = table.currentSnapshot().files.head.path
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$lakeDir/data/$victim"))
+    // the read is planned from the manifest, so the missing file fails it
+    // while it is built, before any scan
+    val e = intercept[java.io.FileNotFoundException](table.read())
+    assert(e.getMessage.contains(victim), e.getMessage)
+  }
+
   test("readAsOf: wall-clock time travel pins the commit-time version") {
     import spark.implicits._
     val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")

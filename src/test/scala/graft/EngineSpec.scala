@@ -352,6 +352,29 @@ class EngineSpec extends SparkSpec {
     }
   }
 
+  test("batch retry ends at once on an interrupt, in the batch or in the sleep") {
+    import graft.engine.BatchedExec
+    val policy = BatchedExec.RetryPolicy(retryTimes = 3, retrySleepMillis = 60000L)
+    var runs = 0
+    intercept[InterruptedException] {
+      BatchedExec.retrying(policy) { runs += 1; throw new InterruptedException("killed") }
+    }
+    assert(runs === 1)
+    // a failing batch, then an interrupt while the loop sleeps before the retry
+    runs = 0
+    val outcome = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val worker = new Thread(() =>
+      try BatchedExec.retrying(policy) { runs += 1; throw new RuntimeException("transient") }
+      catch { case e: Throwable => outcome.set(e) })
+    worker.start()
+    while (worker.isAlive && worker.getState != Thread.State.TIMED_WAITING) Thread.sleep(5)
+    worker.interrupt()
+    worker.join(10000L)
+    assert(!worker.isAlive)
+    assert(outcome.get.isInstanceOf[InterruptedException], outcome.get)
+    assert(runs === 1)
+  }
+
   test("job result reports logical bytes written (GetByteSize analog)") {
     val dir = tmpDir("bytes")
     users.write.parquet(s"$dir/src")

@@ -3,6 +3,8 @@ package graft
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, RawLocalFileSystem}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
@@ -261,6 +263,36 @@ class JobAuditSpec extends SparkSpec {
     assert(conf.get("fs.file.impl") === Some(own))
     assert(conf.get("fs.file.impl.disable.cache") === None)
     assert(conf.get("fs.AbstractFileSystem.file.impl") === Some(classOf[NioLocalFs].getName))
+  }
+
+  test("a LakeTable read is planned from its manifest: no job before the scan's own") {
+    // above spark.sql.sources.parallelPartitionDiscovery.threshold (32
+    // paths) a file index lists with a Spark job, and a point read's bucket
+    // once cost a one-row job; both ran while the DataFrame was built
+    import spark.implicits._
+    val events = Gen.changeEvents(spark,
+      Gen.GenConfig(nEvents = 6000L, nConvs = 100L, partitions = 4)).toDF().cache()
+    val t = LakeTable.create(spark, tmpDir("jobs-read"), Model.keyCols, 4,
+      targetFileRows = Some(100L))
+    t.merge(events.filter($"lsn" < 5400L), 0L)
+    t.merge(events.filter($"lsn" >= 5400L), 1L)
+    events.unpersist()
+    val live = t.currentSnapshot().files
+    assert(live.size > 32 && live.exists(_.kind == "d"))
+    val key = t.read().select(Model.keyCols.map(col): _*).head()
+    val window = col("turn_idx") >= 0
+    assert(t.pruneCounts(window)._1 > 32)
+    /** (jobs while the DataFrame is built, jobs of its collect) */
+    def jobs(build: => DataFrame): (Int, Int) = {
+      var df: DataFrame = null
+      val (e0, planned) = auditJobs { df = build }
+      val (e1, scanned) = auditJobs(df.collect())
+      assert(e0.isEmpty && e1.isEmpty)
+      (planned.size, scanned.size)
+    }
+    assert(Seq(jobs(t.read()), jobs(t.scanWhere(window).df),
+      jobs(t.readKey(Seq(key.getString(0), key.getInt(1))))) ===
+      Seq((0, 2), (0, 2), (0, 2)))
   }
 
   test("each maintenance op submits a pinned number of jobs") {

@@ -143,6 +143,29 @@ class StatsPruneSpec extends SparkSpec {
     assert(t.readWhere(condWide).count() == 1)
   }
 
+  test("the pinned bucket is evaluated in-process and equals the writer's bucketsFor") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types._
+    val cases: Seq[(DataType, Seq[Any])] = Seq(
+      IntegerType -> Seq(0, -1, 42, Int.MaxValue, Int.MinValue),
+      LongType -> Seq(0L, -7L, 1L << 40, Long.MaxValue),
+      StringType -> Seq("", "c15", "ünïcödé", "x" * 300),
+      DateType -> Seq(java.sql.Date.valueOf("1970-01-01"), java.sql.Date.valueOf("2026-02-28")),
+      TimestampType -> Seq(new Timestamp(0L), Timestamp.valueOf("2026-01-01 12:34:56.789")),
+      DecimalType(12, 2) -> Seq(BigDecimal("0.00"), BigDecimal("-12345.67"),
+        BigDecimal("9999999999.99")).map(_.bigDecimal))
+    cases.foreach { case (dt, values) =>
+      val t = LakeTable.create(spark, tmpDir("sp-bucket") + "/t", Seq("k"), numBuckets = 13)
+      val schema = StructType(Seq(StructField("k", dt)))
+      values.foreach { v =>
+        val writer = t.bucketsFor(spark.createDataFrame(
+          java.util.List.of(Row(v)), schema))
+        assert(Set(t.bucketOfCols(Seq(Literal.create(v, dt)))) === writer, s"$dt $v")
+      }
+    }
+  }
+
   test("LWW winners survive pruning; predicates on mutable columns never prune") {
     val root = tmpDir("sp") + "/t"
     val t = threeEpochTable(root)

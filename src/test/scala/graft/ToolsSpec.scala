@@ -186,6 +186,16 @@ class ToolsSpec extends AnyFunSuite {
       Set("graft/engine/JdbcExec.scala:def resolveKeys"))
   }
 
+  test("LakeTable reads plan from the manifest: no spark.read in LakeTable, readStream stays") {
+    // spark.read.parquet re-lists and re-stats every file the manifest
+    // already names (a distributed listing job above 32 paths); dfFor
+    // builds its relation from the manifest's file list instead
+    val src = new String(Files.readAllBytes(
+      Paths.get("src/main/scala/graft/lake/LakeTable.scala")), "UTF-8")
+    assert("""\bspark\s*\.\s*read\b""".r.findAllIn(src).isEmpty)
+    assert(src.contains("spark.readStream"))
+  }
+
   test("executeBatch and rollback appear only in JdbcExec's one per-partition runner") {
     // the batch writer and the CDC apply share one runner and one retry
     // loop; a second copy is where commit-per-batch and rollback drift
